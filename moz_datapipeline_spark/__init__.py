@@ -17,8 +17,8 @@ Layout
                    reference's scripts (indicators, traffic, bridges,
                    areas, enrichment, vulnerability) and the LLM-pipeline
                    extensions (dedup, similarity, text, multimodal).
-- ``graph``      : the routing kernel (numpy Dijkstra inside
-                   applyInPandas) powering criticality and EAUL.
+- ``graph``      : the routing kernel (numpy Dijkstra, one mapInPandas
+                   pass per task slot) powering criticality and EAUL.
 - ``streaming``  : event-stream operators (windowed aggregation,
                    sessionization) usable in batch and Structured
                    Streaming.

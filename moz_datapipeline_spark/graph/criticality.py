@@ -5,19 +5,24 @@ from the network, recompute the OD cost table, diff against the
 benchmark, and fold per-way stats (criticality.js:232-303); score =
 (0.4·timeScore + 0.6·unroutableScore)·100 (criticality.js:96-110).
 
-Spark shape: a scenarios DataFrame (one row per way) fanned out through
-``applyInPandas``; the graph + benchmark are computed once and shipped
-via closure (broadcast) — the reference's per-way osrm-contract
-(criticality.js:197-225) becomes a boolean edge mask. The final scoring
-is relational (single agg for the two maxima, cf. A2
-criticality.js:96-99).
+Spark shape: a local scenarios DataFrame (one row per active way) fanned
+out by one ``mapInPandas`` pass per partition. The local relation scans
+as one partition per task slot, so the kernel runs as one Python task
+per slot with no shuffle in front of it. The graph +
+benchmark are computed once and broadcast — the reference's per-way
+osrm-contract (criticality.js:197-225) becomes a boolean edge mask. The
+final scoring is relational: the two maxima come from one unpartitioned
+window over the stats (cf. A2 criticality.js:96-99), so the kernel's
+output is read once.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moz_datapipeline_spark.graph.kernel import (
@@ -35,6 +40,7 @@ _STATS_SCHEMA = (
     "way_id string, max_time double, avg_time double, avg_time_nonzero double, "
     "unroutable_pairs long, impacted_pairs long"
 )
+_STATS_COLUMNS = [c.split()[0] for c in _STATS_SCHEMA.split(", ")]
 
 
 def _way_stats(
@@ -107,14 +113,23 @@ def _way_stats(
                 "impacted_pairs": impacted,
             }
         )
-    return pd.DataFrame(rows)
+    return pd.DataFrame(rows, columns=_STATS_COLUMNS)
+
+
+def _stats_batches(
+    batches: Iterator[pd.DataFrame], ctx: tuple
+) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` kernel: one stats frame per non-empty scenario
+    batch; ``ctx`` is ``_way_stats``' routing context after ``way_ids``."""
+    for pdf in batches:
+        if len(pdf):
+            yield _way_stats(list(pdf["way_id"]), *ctx)
 
 
 def criticality_scores(
     spark: SparkSession,
     edges: pd.DataFrame,
     od_nodes_by_id: list[str] | None = None,
-    n_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     od_points_lonlat=None,
     node_coords: dict[str, tuple[float, float]] | None = None,
@@ -175,14 +190,12 @@ def criticality_scores(
     pruned = [w for w in all_ways if w not in used]
     base_unroutable = int(np.sum(np.isinf(benchmark[iu, ju])))
 
+    # a pandas frame becomes a JVM local relation scanned as
+    # min(rows, defaultParallelism) slices: one kernel task per slot,
+    # nothing shuffled before the kernel and no Python worker in the scan
     scenarios = spark.createDataFrame(
-        [(w,) for w in active], schema="way_id string"
+        pd.DataFrame({"way_id": active}, dtype=object), schema="way_id string"
     )
-    if n_partitions is None:
-        n_partitions = max(
-            1, min(len(active), spark.sparkContext.defaultParallelism * 2)
-        )
-    scenarios = scenarios.repartition(n_partitions, "way_id")
 
     # explicit broadcast: the graph + benchmark context ships ONCE per
     # executor (torrent broadcast), not inside every task's pickled
@@ -192,11 +205,8 @@ def criticality_scores(
         (g, od_nodes, benchmark, iu, ju, tree_ways)
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        bg, bod, bbench, biu, bju, btrees = ctx_bv.value
-        return _way_stats(
-            list(pdf["way_id"]), bg, bod, bbench, biu, bju, btrees
-        )
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return _stats_batches(batches, ctx_bv.value)
 
     from moz_datapipeline_spark.graph.resume import resumable_apply
 
@@ -204,25 +214,30 @@ def criticality_scores(
         spark,
         scenarios,
         ("way_id",),
-        lambda sc: sc.groupBy("way_id").applyInPandas(kernel, _STATS_SCHEMA),
+        lambda sc: sc.mapInPandas(kernel, _STATS_SCHEMA),
         checkpoint_dir,
     )
     if pruned:
         zero_rows = spark.createDataFrame(
-            [(w, 0.0, 0.0, 0.0, base_unroutable, 0) for w in pruned],
+            pd.DataFrame(
+                [(w, 0.0, 0.0, 0.0, base_unroutable, 0) for w in pruned],
+                columns=_STATS_COLUMNS,
+            ),
             schema=_STATS_SCHEMA,
         )
         stats = stats.unionByName(zero_rows)
 
-    # scoring: one agg for the two maxima (A2), broadcast back over ways
-    maxima = stats.agg(
+    # scoring: the two maxima (A2) over one unpartitioned window — an
+    # agg cross-joined back onto ``stats`` would plan the kernel twice
+    everything = Window.partitionBy()
+    scored = stats.select(
+        "*",
         F.max(
             (F.col("unroutable_pairs") + F.col("impacted_pairs"))
             * F.col("avg_time_nonzero")
-        ).alias("_avg_max_time"),
-        F.max("unroutable_pairs").alias("_max_unroutable"),
+        ).over(everything).alias("_avg_max_time"),
+        F.max("unroutable_pairs").over(everything).alias("_max_unroutable"),
     )
-    scored = stats.crossJoin(F.broadcast(maxima))
     time_score = F.when(
         F.col("_avg_max_time") > 0,
         (F.col("unroutable_pairs") + F.col("impacted_pairs"))

@@ -18,13 +18,18 @@ runs and applied to every scenario (eaul.js:204-330) — modeled here as
 an explicit two-phase plan: baseline kernel run → frozen set → scenario
 fan-out. Pairs with zero traffic are excluded too (eaul.js:228-236).
 
-Spark shape: scenarios = ways × upgrades DataFrame; `applyInPandas`
-kernel with the immutable graph in closure; per-scenario work is pure
-numpy masking (the reference rebuilds OSRM 11× per scenario —
-eaul.js:506-549 — which is exactly what we avoid).
+Spark shape: scenarios = a local ways × upgrades DataFrame, fanned out
+by one ``mapInPandas`` pass per partition — the local relation scans as
+one partition per task slot, so there is one Python task per slot and no
+shuffle before the kernel. The immutable graph and the
+baseline phase's caches are broadcast; per-scenario work is pure numpy
+masking (the reference rebuilds OSRM 11× per scenario — eaul.js:506-549
+— which is exactly what we avoid).
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -337,6 +342,25 @@ class EaulContext:
 _EAUL_SCHEMA = "way_id string, upgrade_id string, eaul double"
 
 
+def _eaul_batches(
+    batches: Iterator[pd.DataFrame], ctx: EaulContext, excluded: np.ndarray
+) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` kernel: one (way_id, upgrade_id, eaul) frame per
+    non-empty scenario batch, each row from ``ctx.eaul``."""
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        vals = [
+            ctx.eaul(w, ruc, dc, surface, excluded)[0]
+            for w, ruc, dc, surface in zip(
+                pdf["way_id"], pdf["ruc"], pdf["dc"], pdf["surface"]
+            )
+        ]
+        yield pd.DataFrame(
+            {"way_id": pdf["way_id"], "upgrade_id": pdf["upgrade_id"], "eaul": vals}
+        )
+
+
 def eaul_scores(
     spark: SparkSession,
     edges: pd.DataFrame,
@@ -353,8 +377,8 @@ def eaul_scores(
 
     Phase 1 (driver, one kernel call): baseline EAUL + frozen exclusion
     set. Phase 2 (cluster): ways × upgrades scenario DataFrame through
-    ``applyInPandas``. Output rows: (way_id, upgrade_id, eaul) with a
-    ('__baseline__', 'baseline') row first.
+    one ``mapInPandas`` pass per partition. Output rows: (way_id,
+    upgrade_id, eaul) with a ('__baseline__', 'baseline') row first.
 
     Off-network OD points: pass ``od_points_lonlat`` (+ ``node_coords``)
     instead of ``od_node_ids``; ``snap="edge"`` (default) inserts OSRM
@@ -394,11 +418,17 @@ def eaul_scores(
     baseline_eaul, excluded = ctx.eaul(None, None, 0.7, None, None)
 
     way_ids = sorted(way_props["way_id"])
+    # a pandas frame becomes a JVM local relation scanned as
+    # min(rows, defaultParallelism) slices: one kernel task per slot,
+    # nothing shuffled before the kernel and no Python worker in the scan
     scenarios = spark.createDataFrame(
-        [(w, u["id"], u["ruc"], u["drainage_capacity"], u["surface"])
-         for w in way_ids for u in ups],
+        pd.DataFrame(
+            [(w, u["id"], u["ruc"], u["drainage_capacity"], u["surface"])
+             for w in way_ids for u in ups],
+            columns=["way_id", "upgrade_id", "ruc", "dc", "surface"],
+        ),
         schema="way_id string, upgrade_id string, ruc double, dc double, surface string",
-    ).repartition(min(len(way_ids) * len(ups), spark.sparkContext.defaultParallelism * 2))
+    )
 
     # explicit broadcast: the routing context (graph + the baseline
     # phase's populated SSSP caches) ships ONCE per executor instead of
@@ -407,17 +437,8 @@ def eaul_scores(
     # matters at national graph size
     ctx_bv = spark.sparkContext.broadcast((ctx, excluded))
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        bctx, bexcluded = ctx_bv.value
-        rows = []
-        for _, row in pdf.iterrows():
-            val, _ = bctx.eaul(
-                row["way_id"], row["ruc"], row["dc"], row["surface"], bexcluded
-            )
-            rows.append(
-                {"way_id": row["way_id"], "upgrade_id": row["upgrade_id"], "eaul": val}
-            )
-        return pd.DataFrame(rows)
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return _eaul_batches(batches, *ctx_bv.value)
 
     from moz_datapipeline_spark.graph.resume import resumable_apply
 
@@ -425,12 +446,14 @@ def eaul_scores(
         spark,
         scenarios,
         ("way_id", "upgrade_id"),
-        lambda sc: sc.groupBy("way_id", "upgrade_id").applyInPandas(
-            kernel, _EAUL_SCHEMA
-        ),
+        lambda sc: sc.mapInPandas(kernel, _EAUL_SCHEMA),
         checkpoint_dir,
     )
     baseline_df = spark.createDataFrame(
-        [("__baseline__", "baseline", float(baseline_eaul))], schema=_EAUL_SCHEMA
+        pd.DataFrame(
+            {"way_id": ["__baseline__"], "upgrade_id": ["baseline"],
+             "eaul": [float(baseline_eaul)]}
+        ),
+        schema=_EAUL_SCHEMA,
     )
     return baseline_df.unionByName(result)

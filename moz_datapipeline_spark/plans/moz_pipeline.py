@@ -134,27 +134,24 @@ def merge_eaul(network: DataFrame, eaul_results: DataFrame) -> DataFrame:
     ``eaul-*`` column — including ``eaul-baseline``, because a way
     without a result file gets no properties at all in the reference.
     """
-    upgrade_ids = [
-        r["upgrade_id"]
-        for r in eaul_results.select("upgrade_id").distinct().collect()
-        if r["upgrade_id"] != "baseline"
-    ]
-    base_row = (
-        eaul_results.filter(F.col("upgrade_id") == "baseline")
-        .select("eaul")
-        .limit(1)
+    # one eager job: the upgrade ids and the baseline value together
+    firsts = {
+        r["upgrade_id"]: r["eaul"]
+        for r in eaul_results.groupBy("upgrade_id")
+        .agg(F.first("eaul").alias("eaul"))
         .collect()
-    )
-    baseline_val = base_row[0]["eaul"] if base_row else None
+    }
+    baseline_val = firsts.pop("baseline", None)
+    upgrade_ids = sorted(firsts)
     wide = (
         eaul_results.filter(F.col("upgrade_id") != "baseline")
         .groupBy("way_id")
-        .pivot("upgrade_id", sorted(upgrade_ids))
+        .pivot("upgrade_id", upgrade_ids)
         .agg(F.first("eaul"))
     )
     renamed = wide.select(
         F.col("way_id").alias("_w"),
-        *[F.col(u).alias(f"eaul-{u}") for u in sorted(upgrade_ids)],
+        *[F.col(u).alias(f"eaul-{u}") for u in upgrade_ids],
     )
     joined = network.join(
         renamed, network["NAME"] == renamed["_w"], "left"

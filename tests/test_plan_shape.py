@@ -887,3 +887,57 @@ def test_cumulative_incidence_windows_rollup_sized(spark, sf_dir):
     # but effective — the aggregate count must be >= 2 (partial+final
     # pairs for the rollups)
     assert plan.count("HashAggregate") >= 2
+
+
+def _executed_nodes(df) -> list[tuple[int, str]]:
+    """Run ``df`` and return (depth, node name) for every node of its
+    executed physical plan — the final plan when AQE re-planned it."""
+    df.collect()
+    text = df._jdf.queryExecution().executedPlan().toString()
+    if "== Final Plan ==" in text:
+        text = text.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    nodes = []
+    for line in text.splitlines():
+        body = line.lstrip(" :+-")
+        if not body:
+            continue
+        depth = len(line) - len(body)
+        if body.startswith("*("):  # whole-stage codegen marker
+            body = body.split(") ", 1)[1]
+        nodes.append((depth, body.split()[0]))
+    return nodes
+
+
+def _engine_frames(spark):
+    from test_routing_fixture import OD_NODES, TRAFFIC, edges_pdf, way_props_pdf
+
+    from moz_datapipeline_spark.graph.criticality import criticality_scores
+    from moz_datapipeline_spark.graph.eaul import eaul_scores
+
+    return {
+        "criticality": criticality_scores(spark, edges_pdf(), OD_NODES),
+        "eaul": eaul_scores(
+            spark, edges_pdf(), way_props_pdf(), OD_NODES, TRAFFIC
+        ),
+    }
+
+
+def test_scenario_fanouts_run_the_kernel_once_without_shuffle(spark):
+    """Criticality and EAUL fan out as ONE mapInPandas pass over the
+    local scenario frame: no grouped-map kernel (per-group sort and
+    Arrow framing), no exchange in front of the kernel, and the kernel
+    planned once — an aggregate cross-joined back onto the kernel's
+    output would plan it twice."""
+    for name, df in _engine_frames(spark).items():
+        nodes = _executed_nodes(df)
+        names = [n for _, n in nodes]
+        assert names.count("MapInPandas") == 1, (name, names)
+        assert "FlatMapGroupsInPandas" not in names, (name, names)
+        at = names.index("MapInPandas")
+        depth = nodes[at][0]
+        below = []
+        for d, n in nodes[at + 1:]:
+            if d <= depth:
+                break
+            below.append(n)
+        assert not any("Exchange" in n for n in below), (name, below)

@@ -98,6 +98,24 @@ def test_merge_eaul_flatten(spark):
     assert out.loc["3", "eaul-baseline"] != out.loc["3", "eaul-baseline"]
 
 
+def test_merge_eaul_without_baseline_row(spark):
+    from moz_datapipeline_spark.plans.moz_pipeline import merge_eaul
+
+    network = spark.createDataFrame([("1",), ("2",)], "NAME string")
+    results = spark.createDataFrame(
+        [("1", "upgrade-rehab-asphalt", 50.0)],
+        "way_id string, upgrade_id string, eaul double",
+    )
+    out = merge_eaul(network, results).toPandas().set_index("NAME")
+    assert sorted(c for c in out.columns if c.startswith("eaul-")) == [
+        "eaul-baseline", "eaul-upgrade-rehab-asphalt",
+    ]
+    assert out.loc["1", "eaul-upgrade-rehab-asphalt"] == 50.0
+    # no baseline row: the baseline is null, also on ways with results
+    assert out["eaul-baseline"].isna().all()
+    assert out["eaul-upgrade-rehab-asphalt"].isna().tolist() == [False, True]
+
+
 # shapefile scan coverage lives in tests/test_shapefile.py — the pure
 # stdlib+numpy parser needs no geopandas gate
 

@@ -17,8 +17,8 @@ Layout
                    reference's scripts (indicators, traffic, bridges,
                    areas, enrichment, vulnerability) and the LLM-pipeline
                    extensions (dedup, similarity, text, multimodal).
-- ``graph``      : the routing kernel (numpy Dijkstra, one mapInPandas
-                   pass per task slot) powering criticality and EAUL.
+- ``graph``      : the routing kernel (numpy Dijkstra) powering
+                   criticality and EAUL, fanned out by ``graph.resume.fan_out``.
 - ``streaming``  : event-stream operators (windowed aggregation,
                    sessionization) usable in batch and Structured
                    Streaming.

@@ -60,6 +60,7 @@ def harmonic_centrality(
     from moz_datapipeline_spark.iterate import (
         checkpoint_sever,
         sever_release,
+        sever_result,
     )
 
     # sever, don't persist: every hop references the edge set, and the
@@ -133,8 +134,9 @@ def harmonic_centrality(
         )
     )
     # materialize via sever (NOT persist: the caller never unpersists a
-    # returned frame in the bench), then release the loop inputs
-    result = checkpoint_sever(result)
+    # returned frame in the bench; one that does releases the blocks),
+    # then release the loop inputs
+    result = sever_result(result)
     sever_release(visited)
     sever_release(e)
     return result

@@ -5,15 +5,12 @@ from the network, recompute the OD cost table, diff against the
 benchmark, and fold per-way stats (criticality.js:232-303); score =
 (0.4·timeScore + 0.6·unroutableScore)·100 (criticality.js:96-110).
 
-Spark shape: a local scenarios DataFrame (one row per active way) fanned
-out by one ``mapInPandas`` pass per partition. The local relation scans
-as one partition per task slot, so the kernel runs as one Python task
-per slot with no shuffle in front of it. The graph +
-benchmark are computed once and broadcast — the reference's per-way
-osrm-contract (criticality.js:197-225) becomes a boolean edge mask. The
-final scoring is relational: the two maxima come from one unpartitioned
-window over the stats (cf. A2 criticality.js:96-99), so the kernel's
-output is read once.
+Spark shape: one row per active way through ``graph.resume.fan_out``.
+The graph + benchmark are computed once and broadcast — the reference's
+per-way osrm-contract (criticality.js:197-225) becomes a boolean edge
+mask. The final scoring is relational: the two maxima come from one
+unpartitioned window over the stats (cf. A2 criticality.js:96-99), so
+the kernel's output is read once.
 """
 
 from __future__ import annotations
@@ -27,14 +24,13 @@ from pyspark.sql import functions as F
 
 from moz_datapipeline_spark.graph.kernel import (
     Graph,
-    _csr,
     build_graph,
-    dijkstra,
+    multi_source_dists,
     od_tree_ways,
     pair_costs,
-    snap_to_nodes,
-    split_edges_at_points,
+    resolve_od,
 )
+from moz_datapipeline_spark.graph.resume import fan_out
 
 _STATS_SCHEMA = (
     "way_id string, max_time double, avg_time double, avg_time_nonzero double, "
@@ -50,7 +46,7 @@ def _way_stats(
     benchmark: np.ndarray,
     iu: np.ndarray,
     ju: np.ndarray,
-    tree_ways: list[set] | None = None,
+    tree_ways: list[set],
 ) -> pd.DataFrame:
     """Per-way scenario fold, replicating criticality.js:232-303 exactly:
 
@@ -60,38 +56,22 @@ def _way_stats(
       (reclassification, criticality.js:252-258).
     - avgTimeNonZero = sum(timeDeltas)/count(nonzero) (|| 0 guard).
 
-    With ``tree_ways`` (per-source shortest-path way sets), each scenario
-    reruns Dijkstra ONLY for sources whose tree contains the removed way;
-    all other sources' rows are provably identical to the benchmark
-    (see ``od_tree_ways``) and are copied. In practice a way sits on few
-    sources' trees, cutting Dijkstra count ~|OD|-fold.
+    ``tree_ways`` (per-source shortest-path way sets): each scenario
+    reruns shortest paths ONLY for sources whose tree contains the
+    removed way; all other sources' rows are provably identical to the
+    benchmark (see ``od_tree_ways``) and are copied. In practice a way
+    sits on few sources' trees, cutting Dijkstra count ~|OD|-fold.
     """
     rows = []
     for w in way_ids:
-        mask = g.way_id != w
-        if tree_ways is None:
-            mat = pair_costs(g, od_nodes, edge_mask=mask)
-        else:
-            affected = [i for i, tw in enumerate(tree_ways) if w in tw]
-            mat = benchmark.copy()
-            if len(affected) >= 4:
-                from moz_datapipeline_spark.graph.kernel import multi_source_dists
-
-                dists = multi_source_dists(
-                    g, od_nodes[affected], edge_mask=mask, targets=od_nodes
-                )
-                mat[affected, :] = dists[:, od_nodes]
-                mat = np.maximum(mat, mat.T)
-            elif affected:
-                indptr, indices, weights = _csr(g, mask, None)
-                for i in affected:
-                    # only OD columns read → early-exit at last target
-                    dist = dijkstra(
-                        indptr, indices, weights, int(od_nodes[i]),
-                        g.n_nodes, targets=od_nodes,
-                    )
-                    mat[i, :] = dist[od_nodes]
-                mat = np.maximum(mat, mat.T)
+        affected = [i for i, tw in enumerate(tree_ways) if w in tw]
+        mat = benchmark.copy()
+        if affected:
+            dists = multi_source_dists(
+                g, od_nodes[affected], edge_mask=g.way_id != w, targets=od_nodes
+            )
+            mat[affected, :] = dists[:, od_nodes]
+            mat = np.maximum(mat, mat.T)
         sc = mat[iu, ju]
         bm = benchmark[iu, ju]
         unroutable = int(np.sum(np.isinf(sc)))
@@ -151,26 +131,13 @@ def criticality_scores(
 
     ``checkpoint_dir`` enables cross-run resume of the per-way Dijkstra
     stats (the expensive fan-out): finished ways are skipped on rerun
-    via ``graph.resume.resumable_apply``.  Pruned zero-rows and the
-    scoring pass (cheap, need ALL stats) recompute every run.
+    via ``graph.resume.fan_out``.  Pruned zero-rows and the scoring pass
+    (cheap, need ALL stats) recompute every run.
     """
-    if od_points_lonlat is not None:
-        if node_coords is None:
-            raise ValueError("od_points_lonlat requires node_coords")
-        if snap == "edge":
-            edges, od_nodes_by_id, node_coords = split_edges_at_points(
-                edges, np.asarray(od_points_lonlat), node_coords
-            )
-        elif snap == "node":
-            g0 = build_graph(edges)
-            idxs = snap_to_nodes(
-                g0, np.asarray(od_points_lonlat), node_coords
-            )
-            od_nodes_by_id = [g0.node_ids[int(i)] for i in idxs]
-        else:
-            raise ValueError(f"snap must be 'edge' or 'node', got {snap!r}")
-    if od_nodes_by_id is None:
-        raise ValueError("need od_nodes_by_id or od_points_lonlat")
+    edges, od_nodes_by_id = resolve_od(
+        edges, od_nodes_by_id, od_points_lonlat, node_coords, snap,
+        ids_name="od_nodes_by_id",
+    )
     g = build_graph(edges)
     node_index = {n: i for i, n in enumerate(g.node_ids)}
     od_nodes = np.array([node_index[n] for n in od_nodes_by_id], dtype=np.int64)
@@ -190,31 +157,15 @@ def criticality_scores(
     pruned = [w for w in all_ways if w not in used]
     base_unroutable = int(np.sum(np.isinf(benchmark[iu, ju])))
 
-    # a pandas frame becomes a JVM local relation scanned as
-    # min(rows, defaultParallelism) slices: one kernel task per slot,
-    # nothing shuffled before the kernel and no Python worker in the scan
-    scenarios = spark.createDataFrame(
-        pd.DataFrame({"way_id": active}, dtype=object), schema="way_id string"
-    )
-
-    # explicit broadcast: the graph + benchmark context ships ONCE per
-    # executor (torrent broadcast), not inside every task's pickled
-    # closure — at national graph sizes closure shipping re-serializes
-    # megabytes per task
-    ctx_bv = spark.sparkContext.broadcast(
-        (g, od_nodes, benchmark, iu, ju, tree_ways)
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _stats_batches(batches, ctx_bv.value)
-
-    from moz_datapipeline_spark.graph.resume import resumable_apply
-
-    stats = resumable_apply(
+    routing = (g, od_nodes, benchmark, iu, ju, tree_ways)
+    stats = fan_out(
         spark,
-        scenarios,
+        pd.DataFrame({"way_id": active}, dtype=object),
+        "way_id string",
         ("way_id",),
-        lambda sc: sc.mapInPandas(kernel, _STATS_SCHEMA),
+        _stats_batches,
+        (routing,),
+        _STATS_SCHEMA,
         checkpoint_dir,
     )
     if pruned:

@@ -18,13 +18,10 @@ runs and applied to every scenario (eaul.js:204-330) — modeled here as
 an explicit two-phase plan: baseline kernel run → frozen set → scenario
 fan-out. Pairs with zero traffic are excluded too (eaul.js:228-236).
 
-Spark shape: scenarios = a local ways × upgrades DataFrame, fanned out
-by one ``mapInPandas`` pass per partition — the local relation scans as
-one partition per task slot, so there is one Python task per slot and no
-shuffle before the kernel. The immutable graph and the
-baseline phase's caches are broadcast; per-scenario work is pure numpy
-masking (the reference rebuilds OSRM 11× per scenario — eaul.js:506-549
-— which is exactly what we avoid).
+Spark shape: one row per way × upgrade through ``graph.resume.fan_out``.
+The immutable graph and the baseline phase's caches are broadcast;
+per-scenario work is pure numpy masking (the reference rebuilds OSRM
+11× per scenario — eaul.js:506-549 — which is exactly what we avoid).
 """
 
 from __future__ import annotations
@@ -41,10 +38,11 @@ from moz_datapipeline_spark.graph.kernel import (
     _csr,
     build_graph,
     dijkstra,
+    multi_source_dists,
     pair_costs,
-    snap_to_nodes,
-    split_edges_at_points,
+    resolve_od,
 )
+from moz_datapipeline_spark.graph.resume import fan_out
 
 #: road upgrades evaluated per way (script-eaul/eaul.js:164-202)
 ROAD_UPGRADES: list[dict] = [
@@ -76,7 +74,7 @@ def _severity(wlcc: float) -> str:
 
 
 class EaulContext:
-    """Immutable per-job data shipped (via closure broadcast) to tasks."""
+    """Immutable per-job data shipped to tasks in one explicit broadcast."""
 
     def __init__(
         self,
@@ -121,8 +119,6 @@ class EaulContext:
         so total Dijkstra count is 11 × n_od regardless of scenario count.
         """
         if removed not in self._dist_cache:
-            from moz_datapipeline_spark.graph.kernel import multi_source_dists
-
             mask = (
                 ~np.isin(self.g.way_id, list(removed)) if removed else None
             )
@@ -304,11 +300,12 @@ class EaulContext:
         upgrade_surface: str | None,
         excluded: np.ndarray | None,
     ) -> tuple[float, np.ndarray]:
-        """EAUL for one scenario. Returns (eaul, unroutable_any_period mask).
+        """EAUL for one scenario. Returns (eaul, excluded-pair mask).
 
-        When ``excluded`` is None this IS the baseline phase: the mask of
-        pairs unroutable in any flood period is returned to be frozen and
-        broadcast to every upgrade scenario (eaul.js:204-330).
+        When ``excluded`` is None this IS the baseline phase: the pairs
+        unroutable in any flood period or without traffic form the mask,
+        returned to be frozen and broadcast to every upgrade scenario
+        (eaul.js:204-330).
         """
         base = self.scenario_pair_costs(upgrade_way, new_ruc, set())
         flood_costs = []
@@ -336,7 +333,7 @@ class EaulContext:
         eaul = 0.5 * flood_sum
         if abs(eaul) < 1.0:
             eaul = 0.0
-        return eaul, (excluded if excluded is not None else unroutable_any)
+        return eaul, excluded
 
 
 _EAUL_SCHEMA = "way_id string, upgrade_id string, eaul double"
@@ -376,9 +373,9 @@ def eaul_scores(
     """Two-phase distributed EAUL.
 
     Phase 1 (driver, one kernel call): baseline EAUL + frozen exclusion
-    set. Phase 2 (cluster): ways × upgrades scenario DataFrame through
-    one ``mapInPandas`` pass per partition. Output rows: (way_id,
-    upgrade_id, eaul) with a ('__baseline__', 'baseline') row first.
+    set. Phase 2 (cluster): the ways × upgrades scenarios through
+    ``graph.resume.fan_out``. Output rows: (way_id, upgrade_id, eaul)
+    with a ('__baseline__', 'baseline') row first.
 
     Off-network OD points: pass ``od_points_lonlat`` (+ ``node_coords``)
     instead of ``od_node_ids``; ``snap="edge"`` (default) inserts OSRM
@@ -391,26 +388,12 @@ def eaul_scores(
     ``checkpoint_dir`` enables cross-run resume (G8 parity with the
     reference's per-way S3 restart, script-eaul/README.md:63-97):
     scenario results append there and finished (way, upgrade) pairs are
-    skipped on rerun — see ``graph.resume.resumable_apply``.  The
-    baseline phase (benchmark-once) reruns; only the fan-out resumes.
+    skipped on rerun — see ``graph.resume.fan_out``.  The baseline
+    phase (benchmark-once) reruns; only the fan-out resumes.
     """
-    if od_points_lonlat is not None:
-        if node_coords is None:
-            raise ValueError("od_points_lonlat requires node_coords")
-        if snap == "edge":
-            edges, od_node_ids, node_coords = split_edges_at_points(
-                edges, np.asarray(od_points_lonlat), node_coords
-            )
-        elif snap == "node":
-            g0 = build_graph(edges)
-            idxs = snap_to_nodes(
-                g0, np.asarray(od_points_lonlat), node_coords
-            )
-            od_node_ids = [g0.node_ids[int(i)] for i in idxs]
-        else:
-            raise ValueError(f"snap must be 'edge' or 'node', got {snap!r}")
-    if od_node_ids is None:
-        raise ValueError("need od_node_ids or od_points_lonlat")
+    edges, od_node_ids = resolve_od(
+        edges, od_node_ids, od_points_lonlat, node_coords, snap
+    )
     if traffic_yearly is None:
         raise ValueError("traffic_yearly is required")
     ups = upgrades or ROAD_UPGRADES
@@ -418,35 +401,21 @@ def eaul_scores(
     baseline_eaul, excluded = ctx.eaul(None, None, 0.7, None, None)
 
     way_ids = sorted(way_props["way_id"])
-    # a pandas frame becomes a JVM local relation scanned as
-    # min(rows, defaultParallelism) slices: one kernel task per slot,
-    # nothing shuffled before the kernel and no Python worker in the scan
-    scenarios = spark.createDataFrame(
-        pd.DataFrame(
-            [(w, u["id"], u["ruc"], u["drainage_capacity"], u["surface"])
-             for w in way_ids for u in ups],
-            columns=["way_id", "upgrade_id", "ruc", "dc", "surface"],
-        ),
-        schema="way_id string, upgrade_id string, ruc double, dc double, surface string",
+    scenarios = pd.DataFrame(
+        [(w, u["id"], u["ruc"], u["drainage_capacity"], u["surface"])
+         for w in way_ids for u in ups],
+        columns=["way_id", "upgrade_id", "ruc", "dc", "surface"],
     )
-
-    # explicit broadcast: the routing context (graph + the baseline
-    # phase's populated SSSP caches) ships ONCE per executor instead of
-    # being re-pickled into every task closure — the caches are exactly
-    # what makes scenario tasks cheap, so shipping them efficiently
-    # matters at national graph size
-    ctx_bv = spark.sparkContext.broadcast((ctx, excluded))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _eaul_batches(batches, *ctx_bv.value)
-
-    from moz_datapipeline_spark.graph.resume import resumable_apply
-
-    result = resumable_apply(
+    # the broadcast context carries the baseline phase's populated SSSP
+    # caches — exactly what makes scenario tasks cheap
+    result = fan_out(
         spark,
         scenarios,
+        "way_id string, upgrade_id string, ruc double, dc double, surface string",
         ("way_id", "upgrade_id"),
-        lambda sc: sc.mapInPandas(kernel, _EAUL_SCHEMA),
+        _eaul_batches,
+        (ctx, excluded),
+        _EAUL_SCHEMA,
         checkpoint_dir,
     )
     baseline_df = spark.createDataFrame(

@@ -184,14 +184,6 @@ def od_tree_ways(g: Graph, od_nodes: np.ndarray) -> list[set]:
     return out
 
 
-def used_way_ids(g: Graph, od_nodes: np.ndarray) -> set:
-    """Union of ``od_tree_ways`` — ways whose removal can change anything."""
-    used: set = set()
-    for s in od_tree_ways(g, od_nodes):
-        used |= s
-    return used
-
-
 def multi_source_dists(
     g: Graph,
     sources: np.ndarray,
@@ -207,10 +199,29 @@ def multi_source_dists(
     edges sorted by destination. Rounds = shortest-path hop diameter;
     each round is O(n_sources × E) in pure numpy — beats n_sources
     Python-heapq Dijkstras once sources > a handful AND the hop diameter
-    is modest. Long-diameter graphs (relaxation crawls) hit the round
-    cap and fall back to per-source Dijkstra, so the worst case is
-    bounded. Returns (n_sources, n_nodes); inf = unreachable.
+    is modest. Fewer than 4 sources run per-source Dijkstra outright;
+    long-diameter graphs (relaxation crawls) hit the round cap and fall
+    back to it too, so the worst case is bounded.
+
+    With ``targets``, callers promise to read only those columns, so
+    the per-source searches may stop at their last target; ``None``
+    gives full rows. Returns (n_sources, n_nodes); inf = unreachable.
     """
+    n = g.n_nodes
+    indptr, indices, weights = _csr(g, edge_mask, weight_override)
+    out = np.empty((len(sources), n))
+
+    def dijkstra_rows(first: int) -> np.ndarray:
+        for i in range(first, len(sources)):
+            out[i] = dijkstra(
+                indptr, indices, weights, int(sources[i]), n, targets=targets
+            )
+        return out
+
+    if len(sources) < 4:
+        # too few sources to amortize the edge sort and relaxation rounds
+        return dijkstra_rows(0)
+
     w = g.weight if weight_override is None else weight_override
     if edge_mask is not None:
         s, d, w = g.src[edge_mask], g.dst[edge_mask], w[edge_mask]
@@ -225,10 +236,8 @@ def multi_source_dists(
     # reduceat segment starts: first edge index per present destination
     dst_unique, seg_starts = np.unique(e_dst, return_index=True)
 
-    n = g.n_nodes
     # probe: one Dijkstra with hop tracking estimates how many relaxation
     # rounds BF needs; its row is reused either way, so the probe is free
-    indptr, indices, weights = _csr(g, edge_mask, weight_override)
     d0 = np.full(n, INF)
     hops0 = np.zeros(n, dtype=np.int32)
     s0 = int(sources[0])
@@ -248,18 +257,10 @@ def multi_source_dists(
     reachable = ~np.isinf(d0)
     hop_est = int(hops0[reachable].max()) if reachable.any() else 0
     max_rounds = min(150, 2 * hop_est + 8)
+    out[0] = d0  # row 0 is full: it came from the probe
 
-    if hop_est > 60 or len(sources) < 4:
-        # with `targets`, callers promise to read only those columns, so
-        # the per-source searches may early-terminate (row 0 is full —
-        # it came from the probe)
-        out = np.empty((len(sources), n))
-        out[0] = d0
-        for i in range(1, len(sources)):
-            out[i] = dijkstra(
-                indptr, indices, weights, int(sources[i]), n, targets=targets
-            )
-        return out
+    if hop_est > 60:
+        return dijkstra_rows(1)
 
     dist = np.full((len(sources), n), INF)
     dist[np.arange(len(sources)), sources] = 0.0
@@ -273,13 +274,7 @@ def multi_source_dists(
             return dist
         dist = new
     # estimate was off: finish exactly with per-source Dijkstra
-    out = np.empty((len(sources), n))
-    out[0] = d0
-    for i in range(1, len(sources)):
-        out[i] = dijkstra(
-            indptr, indices, weights, int(sources[i]), n, targets=targets
-        )
-    return out
+    return dijkstra_rows(1)
 
 
 def pair_costs(
@@ -294,25 +289,50 @@ def pair_costs(
     unroutable. Pair cost = max(ab, ba) per the reference
     (criticality.js:144-171) — symmetric here because the graph is
     undirected, kept for parity of semantics.
-
-    Multi-source vectorized relaxation when several sources amortize it;
-    single-source falls back to Dijkstra.
     """
-    n_od = len(od_nodes)
-    if n_od >= 4:
-        dist = multi_source_dists(g, od_nodes, edge_mask, weight_override)
-        mat = dist[:, od_nodes]
-        return np.maximum(mat, mat.T)
-    indptr, indices, weights = _csr(g, edge_mask, weight_override)
-    mat = np.full((n_od, n_od), INF)
-    for i, s in enumerate(od_nodes):
-        # only OD columns are read → early-terminate at the last target
-        dist = dijkstra(
-            indptr, indices, weights, int(s), g.n_nodes, targets=od_nodes
-        )
-        mat[i, :] = dist[od_nodes]
-    # symmetrize with max (OSRM asymmetry semantics)
+    dist = multi_source_dists(
+        g, od_nodes, edge_mask, weight_override, targets=od_nodes
+    )
+    mat = dist[:, od_nodes]
     return np.maximum(mat, mat.T)
+
+
+def resolve_od(
+    edges: pd.DataFrame,
+    od_node_ids: list[str] | None,
+    od_points_lonlat,
+    node_coords: dict[str, tuple[float, float]] | None,
+    snap: str,
+    *,
+    ids_name: str = "od_node_ids",
+) -> tuple[pd.DataFrame, list[str]]:
+    """The scenario engines' OD inputs → ``(edges, od_node_ids)``.
+
+    Pre-snapped ``od_node_ids`` pass through.  Off-network
+    ``od_points_lonlat`` (+ ``node_coords``) snap instead:
+    ``snap="edge"`` projects each point onto its nearest edge and
+    routes from the foot point — OSRM's osrm.table snap
+    (criticality.js:132-177), see ``split_edges_at_points`` — and
+    ``snap="node"`` is the cheap nearest-junction approximation.
+    ``ids_name`` names the caller's id parameter in the error raised
+    when neither input is given.
+    """
+    if od_points_lonlat is not None:
+        if node_coords is None:
+            raise ValueError("od_points_lonlat requires node_coords")
+        if snap == "edge":
+            edges, od_node_ids, _ = split_edges_at_points(
+                edges, np.asarray(od_points_lonlat), node_coords
+            )
+        elif snap == "node":
+            g0 = build_graph(edges)
+            idxs = snap_to_nodes(g0, np.asarray(od_points_lonlat), node_coords)
+            od_node_ids = [g0.node_ids[int(i)] for i in idxs]
+        else:
+            raise ValueError(f"snap must be 'edge' or 'node', got {snap!r}")
+    if od_node_ids is None:
+        raise ValueError(f"need {ids_name} or od_points_lonlat")
+    return edges, od_node_ids
 
 
 def snap_to_nodes(

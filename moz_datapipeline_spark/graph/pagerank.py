@@ -12,14 +12,17 @@ prioritisation indicator set).
 Design (Spark-first, fixed DAG):
 
 - The iteration count is a PARAMETER, not a convergence loop: ``iters``
-  join+aggregate rounds unrolled into one lazy plan.  No driver action
-  anywhere — node count and dangling mass ride along as 1-row frames
-  cross-joined in (broadcast nested loop of a single row).
-- Loop invariants (deduped edges, the node list with out-degree and
-  teleport term pre-attached) persist once; each iteration's ranks
-  persist too, because the next iteration reads them more than once —
-  without the cache the lineage re-evaluates multiplicatively with the
-  iteration count.
+  join+aggregate rounds.  Node count and dangling mass are never
+  collected to the driver: they ride along as 1-row frames cross-joined
+  in (broadcast nested loop of a single row).
+- The call is eager: the loop invariants (deduped edges, the node list
+  with out-degree and teleport term pre-attached) and each iteration's
+  ranks are materialized at call time through ``checkpoint_sever``,
+  because the next iteration reads them more than once — without that
+  the lineage re-evaluates multiplicatively with the iteration count.
+  Each superseded iteration and, at the end, the invariants are
+  released, so at most one severed frame (the result) outlives the
+  call.
 - An iteration is exactly: edges ⨝ ranks (equi join on ``src``),
   contribution sum on ``dst`` (hash aggregate with map-side partials),
   and a left join back to the node list so zero-in-degree nodes keep
@@ -32,12 +35,8 @@ Design (Spark-first, fixed DAG):
 - ``seeds`` switches to personalized PageRank: the teleport vector
   concentrates on the seed nodes (uniform over the seeds present in
   the graph) instead of 1/N, so rank measures proximity to the seeds.
-- ``eager=False`` (the default) keeps the whole computation one lazy
-  plan; the persisted invariants and per-iteration caches then live
-  until the session evicts them — callers running PageRank repeatedly
-  in one session should pass ``eager=True``, which materializes each
-  iteration and unpersists its predecessor (plus the invariants at the
-  end), bounding the cache footprint to one iteration.
+- ``eager=True`` adds one check that needs its own job: personalized
+  runs raise when none of the seeds is in the graph.
 
 Scale: |E| dominates; the only shuffles are the per-iteration join on
 ``src`` and aggregation on ``dst``.  Pre-partitioning ``edges`` by
@@ -61,7 +60,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     handle_dangling: bool = True,
-    checkpoint_every: int | None = None,
     seeds: Sequence | None = None,
     eager: bool = False,
 ) -> DataFrame:
@@ -76,10 +74,9 @@ def pagerank(
     goes uniformly to the listed nodes instead of all nodes; seeds not
     present in the graph are ignored (the vector renormalizes over the
     ones that are).  If NO seed is present, the teleport vector is
-    undefined: ``eager=True`` (a job runs at call time anyway) checks
-    the materialized seed count and raises; on the default lazy path
-    detection would cost a dedicated job, so callers own seed validity
-    — the one-row check is
+    undefined: ``eager=True`` checks the seed count and raises; without
+    it, detection would cost a dedicated job, so callers own seed
+    validity — the one-row check is
     ``nodes.filter(node.isin(seeds)).limit(1).count()``.
     """
     if iters < 0:
@@ -121,9 +118,8 @@ def pagerank(
             ).otherwise(F.lit(0.0)),
         )
         if eager:
-            # a job runs at call time anyway in eager mode, so the
-            # no-seed-in-graph failure (all-zero / NaN ranks) is cheap
-            # to catch loudly here instead of silently downstream
+            # the no-seed-in-graph failure (all-zero / NaN ranks) is
+            # caught loudly here instead of silently downstream
             if ns_df.head()["_ns"] == 0.0:
                 raise ValueError(
                     "pagerank: none of the given seeds exist in the "

@@ -1,4 +1,5 @@
-"""Cross-run resume for the scenario fan-out engines (G8 parity).
+"""The scenario fan-out shared by the graph engines, with cross-run
+resume (G8 parity).
 
 The reference's EAUL runner restarts from per-way results already in
 S3 (script-eaul/README.md:63-97 — results upload per way; a rerun
@@ -22,36 +23,63 @@ inputs change.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 
-def resumable_apply(
+def fan_out(
     spark: SparkSession,
-    scenarios: DataFrame,
+    scenarios_pdf: pd.DataFrame,
+    scenario_schema: str,
     keys: Sequence[str],
-    compute: Callable[[DataFrame], DataFrame],
+    batches_fn: Callable[..., Iterator[pd.DataFrame]],
+    ctx: tuple,
+    out_schema: str,
     checkpoint_dir: str | None,
 ) -> DataFrame:
-    """Run ``compute`` over ``scenarios``, skipping rows whose ``keys``
-    already have results in ``checkpoint_dir``; return ALL results.
+    """Run ``batches_fn(batches, *ctx)`` over every scenario row of
+    ``scenarios_pdf`` and return the ``out_schema`` rows it yields.
 
-    With ``checkpoint_dir=None`` this is just ``compute(scenarios)``.
+    The shape every scenario engine shares:
+
+    - ``scenarios_pdf`` becomes a JVM local relation (``LocalTableScan``)
+      scanned as min(rows, defaultParallelism) slices: one kernel task
+      per task slot, nothing shuffled before the kernel and no Python
+      worker in the scan;
+    - ``ctx`` (graph, benchmark, caches) ships once per executor as one
+      explicit broadcast, not re-pickled into every task's closure —
+      at national graph sizes closure shipping re-serializes megabytes
+      per task;
+    - one ``mapInPandas`` pass per slice runs the kernel, so it runs
+      once per call.
+
+    With ``checkpoint_dir``, scenarios whose ``keys`` already have rows
+    there are skipped, the new rows are appended, and ALL rows are
+    returned; with ``None`` nothing is read or written.
     """
-    if checkpoint_dir is None:
-        return compute(scenarios)
-    from pyspark.errors import AnalysisException
+    scenarios = spark.createDataFrame(scenarios_pdf, schema=scenario_schema)
+    ctx_bv = spark.sparkContext.broadcast(ctx)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return batches_fn(batches, *ctx_bv.value)
 
     existing = None
-    try:
-        existing = spark.read.parquet(checkpoint_dir)
-        todo = scenarios.join(
-            existing.select(*keys).distinct(), list(keys), "left_anti"
-        )
-    except AnalysisException:  # first run: no checkpoint directory yet
-        todo = scenarios
-    result = compute(todo)
+    todo = scenarios
+    if checkpoint_dir is not None:
+        from pyspark.errors import AnalysisException
+
+        try:
+            existing = spark.read.parquet(checkpoint_dir)
+            todo = scenarios.join(
+                existing.select(*keys).distinct(), list(keys), "left_anti"
+            )
+        except AnalysisException:  # first run: no checkpoint directory yet
+            pass
+    result = todo.mapInPandas(kernel, out_schema)
+    if checkpoint_dir is None:
+        return result
     if existing is not None:
         # a drifted checkpoint must fail HERE, deterministically —
         # otherwise parquet schema inference picks whichever file it

@@ -68,6 +68,24 @@ def checkpoint_sever(df: DataFrame) -> DataFrame:
         return cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
 
 
+def sever_result(df: DataFrame) -> DataFrame:
+    """``checkpoint_sever`` for the frame an operator RETURNS: the
+    caller's ``unpersist()`` also releases the severed blocks (via
+    ``sever_release``), so a caller that unpersists its result is back
+    at its storage baseline, exactly as with a persisted result — while
+    a caller that never unpersists leaves only a localCheckpoint
+    remnant, which the bench exempts."""
+    out = checkpoint_sever(df)
+    plain_unpersist = out.unpersist
+
+    def unpersist(blocking: bool = False) -> DataFrame:
+        sever_release(out)
+        return plain_unpersist(blocking)
+
+    out.unpersist = unpersist
+    return out
+
+
 def sever_release(df: DataFrame) -> None:
     """Unpersist the checkpointed blocks behind a ``checkpoint_sever``
     result.  AFTER THIS THE FRAME CANNOT BE RECOMPUTED (a severed plan

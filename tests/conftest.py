@@ -32,3 +32,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def clean_storage(spark):
+    """Start a storage-registry test from an empty registry.
+
+    Earlier tests leave severed localCheckpoint results (and frames
+    they persisted) behind, and Spark's ContextCleaner drops those
+    whenever the JVM happens to collect them — so a count taken
+    against that leftover baseline can shrink mid-test.  Releasing
+    them first makes ``registry == base`` measure the operator under
+    test alone."""
+    spark.catalog.clearCache()
+    for jrdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
+        jrdd.unpersist(True)
+    return spark

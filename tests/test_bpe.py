@@ -1,6 +1,7 @@
 """BPE tokenizer induction: textbook merges, greedy overlap, early
 stop, determinism, segmentation round trip, cache hygiene."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from moz_datapipeline_spark.operators.bpe import (
@@ -67,6 +68,7 @@ def test_bpe_segment_lossless_and_udf_free(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+@pytest.mark.usefixtures("clean_storage")
 def test_bpe_train_releases_caches(spark):
     df = _docs(spark, ["some words some words more words"])
     before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())

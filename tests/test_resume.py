@@ -79,7 +79,7 @@ def test_criticality_resume_skips_finished_ways(spark, tmp_path):
     seed_way = active[0]
 
     # pre-seed one finished way with sentinel stats (schema MUST match
-    # _STATS_SCHEMA exactly — resumable_apply rejects drifted seeds)
+    # _STATS_SCHEMA exactly — fan_out rejects drifted seeds)
     spark.createDataFrame(
         [(seed_way, SENTINEL, SENTINEL, SENTINEL, 0, 0)],
         "way_id string, max_time double, avg_time double, "

@@ -1,7 +1,10 @@
 """Edge cases of the scenario fan-out kernels: fan-outs with nothing or
-one thing to do, and kernels handed an empty batch."""
+one thing to do, kernels handed an empty batch, the small-source routing
+rule on both sides of its threshold, and bad OD inputs."""
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pandas as pd
@@ -20,7 +23,14 @@ from moz_datapipeline_spark.graph.eaul import (
     _eaul_batches,
     eaul_scores,
 )
-from moz_datapipeline_spark.graph.kernel import build_graph, od_tree_ways, pair_costs
+from moz_datapipeline_spark.graph.kernel import (
+    _csr,
+    build_graph,
+    dijkstra,
+    multi_source_dists,
+    od_tree_ways,
+    pair_costs,
+)
 
 
 def _crit_context():
@@ -80,3 +90,63 @@ def test_kernels_yield_nothing_for_an_empty_batch():
         )}
     )
     assert list(_eaul_batches(iter([empty_scenarios]), ctx, excluded)) == []
+
+
+@pytest.mark.parametrize("removed_way", [None, "1"], ids=["unmasked", "masked"])
+def test_small_source_rule_matches_per_source_dijkstra(removed_way):
+    # every source count from 1 to all nodes, so both sides of the
+    # per-source / vectorized threshold are crossed; removing way "1"
+    # strands node "2" and puts inf entries in the rows
+    g = build_graph(edges_pdf())
+    mask = None if removed_way is None else g.way_id != removed_way
+    indptr, indices, weights = _csr(g, mask, None)
+    index = {n: i for i, n in enumerate(g.node_ids)}
+    targets = np.array([index[n] for n in OD_NODES], dtype=np.int64)
+    nodes = np.arange(g.n_nodes, dtype=np.int64)
+    for k in range(1, g.n_nodes + 1):
+        sources = nodes[:k]
+        want = np.array(
+            [dijkstra(indptr, indices, weights, int(s), g.n_nodes) for s in sources]
+        )
+        got = multi_source_dists(g, sources, edge_mask=mask, targets=targets)
+        assert np.array_equal(got[:, targets], want[:, targets]), k
+        pairs = want[:, sources]
+        assert np.array_equal(
+            pair_costs(g, sources, edge_mask=mask), np.maximum(pairs, pairs.T)
+        ), k
+
+
+_ENGINES = {
+    "criticality_scores": (
+        lambda **od: criticality_scores(None, edges_pdf(), **od),
+        "od_nodes_by_id",
+    ),
+    "eaul_scores": (
+        lambda **od: eaul_scores(
+            None, edges_pdf(), way_props_pdf(), traffic_yearly=TRAFFIC, **od
+        ),
+        "od_node_ids",
+    ),
+}
+_POINTS = [(0.0, 0.0)]
+_COORDS = {n: (0.0, 0.0) for n in ("2", "3")}
+
+
+@pytest.mark.parametrize("engine", sorted(_ENGINES))
+@pytest.mark.parametrize(
+    "od, message",
+    [
+        ({"od_points_lonlat": _POINTS}, "od_points_lonlat requires node_coords"),
+        (
+            {"od_points_lonlat": _POINTS, "node_coords": _COORDS, "snap": "osrm"},
+            "snap must be 'edge' or 'node', got 'osrm'",
+        ),
+        ({}, "need {ids} or od_points_lonlat"),
+    ],
+    ids=["points-without-coords", "unknown-snap", "no-od-input"],
+)
+def test_bad_od_input_raises_before_any_spark_work(engine, od, message):
+    # the session is None: each check must fire before Spark is touched
+    call, ids = _ENGINES[engine]
+    with pytest.raises(ValueError, match=re.escape(message.format(ids=ids))):
+        call(**od)

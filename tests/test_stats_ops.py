@@ -130,6 +130,7 @@ def test_ks_empty_side_yields_null(spark):
     assert r.n_a == 2 and r.n_b == 0
 
 
+@pytest.mark.usefixtures("clean_storage")
 def test_ks_leaves_registry_clean(spark):
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     a = spark.createDataFrame([(float(i),) for i in range(100)], "x double")

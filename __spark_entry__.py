@@ -2054,11 +2054,7 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # eager: materialize each round and release its predecessor —
-    # lazy mode persists NOTHING by design (the r7 cache-leak fix),
-    # so a multi-round lazy plan over an EXPENSIVE edge build would
-    # re-derive the orders⨝lineitem join once per appearance
-    return label_propagation(fwd, rounds=_LPA_ROUNDS, eager=True)
+    return label_propagation(fwd, rounds=_LPA_ROUNDS)
 
 
 def _lpa_oracle(rounds: int = _LPA_ROUNDS) -> str:
@@ -4546,7 +4542,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric trade graph, 3 BFS hops (graph/centrality.
     harmonic_centrality): one frontier frame carries all sources,
     each hop is an equi join + anti join, hops materialize and
-    release (the eager contract).  VALUE oracle: 3 unrolled BFS
+    superseded hops are released.  VALUE oracle: 3 unrolled BFS
     rounds as DuckDB CTEs."""
     from moz_datapipeline_spark.graph.centrality import (
         harmonic_centrality,

@@ -72,41 +72,42 @@ def _storage_registry_empty(spark) -> bool:
     return len(infos) == 0
 
 
-def clear_storage(spark, name: str) -> None:
-    """Drop cached blocks so the next run is timed against a clean
-    storage pool, and FAIL LOUD on operator cache leaks.
+def leaked_blocks(spark) -> dict:
+    """The leak definition: ``{rdd id: name}`` of every MATERIALIZED
+    storage-registry entry that is not a locally-checkpointed RDD.
 
-    Leak definition (checked BEFORE any cleanup — the r12 verdict
-    found the old assert vacuous because it unpersisted everything
-    first): a MATERIALIZED storage-registry entry that is not a
-    locally-checkpointed RDD.  localCheckpoint / ``checkpoint_sever``
-    blocks from iterative operators (components/LPA/harmonic)
-    legitimately outlive the query that made them (the result plan
-    reads them) and are only reclaimed by the ContextCleaner on GC —
-    those are exempt and unpersisted here as cleanup.  Anything else
-    still materialized between queries is a ``persist()``/``cache()``
-    an operator failed to release: that fails the bench (after
-    cleanup, so a --cold rerun of the offender alone still starts
-    clean)."""
+    localCheckpoint / ``checkpoint_sever`` blocks legitimately outlive
+    the query that made them (the result plan reads them) and are only
+    reclaimed by the ContextCleaner on GC — those are exempt.  Anything
+    else still materialized between queries is a ``persist()``/
+    ``cache()`` an operator failed to release."""
     jsc = spark.sparkContext._jsc
     infos = {
         i.id(): i.name() for i in jsc.sc().getRDDStorageInfo()
     }
-    persistent = dict(jsc.getPersistentRDDs())
     legit = set()
-    for rid, jrdd in persistent.items():
+    for rid, jrdd in dict(jsc.getPersistentRDDs()).items():
         try:
             if bool(jrdd.rdd().isLocallyCheckpointed()):
                 legit.add(rid)
         except Exception:
             pass
-    leaked = {
-        rid: nm for rid, nm in infos.items() if rid not in legit
-    }
-    # cleanup first, so a failed assert still leaves a clean pool for
-    # a --cold rerun of the offender alone
+    return {rid: nm for rid, nm in infos.items() if rid not in legit}
+
+
+def clear_storage(spark, name: str) -> None:
+    """Drop cached blocks so the next run is timed against a clean
+    storage pool, and FAIL LOUD on operator cache leaks
+    (``leaked_blocks``).
+
+    Leaks are checked BEFORE any cleanup — the r12 verdict found the
+    old assert vacuous because it unpersisted everything first.
+    Exempt localCheckpoint remnants are unpersisted here as cleanup; a
+    leak fails the bench after cleanup, so a --cold rerun of the
+    offender alone still starts clean."""
+    leaked = leaked_blocks(spark)
     spark.catalog.clearCache()
-    for jrdd in persistent.values():
+    for jrdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
         jrdd.unpersist(True)
     assert not leaked, (
         f"cached RDDs leaked into the bench before {name!r}: "

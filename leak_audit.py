@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """One-session audit: run every registered query (noop sink) and report
 which leave MATERIALIZED non-localCheckpoint RDDs in the storage
-registry afterwards (the blocks bench.clear_storage now fails on).
+registry afterwards (``bench.leaked_blocks``, the blocks
+bench.clear_storage fails on).
 Usage: python leak_audit.py [startswith-filter...]
 """
 import os
@@ -11,6 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 os.environ.setdefault("SPARK_GRAFT_PORTABLE_HASH", "0")
 
 import __spark_entry__ as entry_mod
+from bench import leaked_blocks
 from moz_datapipeline_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -21,17 +23,6 @@ qs = entry_mod.queries()
 names = list(qs)
 if len(sys.argv) > 1:
     names = [n for n in names if any(n.startswith(a) for a in sys.argv[1:])]
-
-def leaked():
-    infos = {i.id(): i.name() for i in jsc.sc().getRDDStorageInfo()}
-    legit = set()
-    for rid, jrdd in dict(jsc.getPersistentRDDs()).items():
-        try:
-            if bool(jrdd.rdd().isLocallyCheckpointed()):
-                legit.add(rid)
-        except Exception:
-            pass
-    return {rid: nm for rid, nm in infos.items() if rid not in legit}
 
 def clean():
     spark.catalog.clearCache()
@@ -46,7 +37,7 @@ for name in names:
     except Exception as e:
         print(f"ERR  {name}: {type(e).__name__}: {str(e)[:120]}", flush=True)
         continue
-    lk = leaked()
+    lk = leaked_blocks(spark)
     if lk:
         first = next(iter(lk.values())) or ""
         print(f"LEAK {name}: {len(lk)} blocks: {first[:90]!r}", flush=True)

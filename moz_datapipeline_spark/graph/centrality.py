@@ -19,8 +19,8 @@ iterative with the visited set consumed three times per hop (join,
 anti, union), so the operator SEVERS each hop
 (``iterate.checkpoint_sever``): a lazy or merely-persisted lineage
 grows ~3x per hop and Catalyst re-analysis of the exponential plan
-dominates the wall clock.  The returned frame is persisted; callers
-unpersist it when done (pinned by ``tests/test_cache_contract``).
+dominates the wall clock.  The returned frame is severed and owns
+its blocks (``iterate.owned``); callers unpersist it when done.
 
 Reference parity: extension surface; the frontier/visited idiom
 matches ``graph/kcore.py``'s peel rounds.
@@ -59,8 +59,8 @@ def harmonic_centrality(
         )
     from moz_datapipeline_spark.iterate import (
         checkpoint_sever,
+        owned,
         sever_release,
-        sever_result,
     )
 
     # sever, don't persist: every hop references the edge set, and the
@@ -133,10 +133,8 @@ def harmonic_centrality(
             ),
         )
     )
-    # materialize via sever (NOT persist: the caller never unpersists a
-    # returned frame in the bench; one that does releases the blocks),
-    # then release the loop inputs
-    result = sever_result(result)
+    # materialize via sever, then release the loop inputs
+    result = owned(checkpoint_sever(result))
     sever_release(visited)
     sever_release(e)
     return result

@@ -32,10 +32,8 @@ Plan per round — all hash-partitioned on the node id, AQE-skew-safe:
 Work per round is O(|E|) rows through one join and one aggregate —
 the identical cost envelope as a PageRank iteration, so the measured
 PageRank rehearsals (3 M edges / 22 s per iteration block in
-``scale_check.py``) transfer.  ``eager=True`` materializes each round
-and unpersists its predecessor, bounding the cache footprint to one
-round (the contract ``tests/test_cache_contract.py`` pins for the
-other iterative operators).
+``scale_check.py``) transfer.  The result is materialized and owns
+its blocks (``iterate.owned``): one severed frame survives the call.
 
 Reference parity: extension surface (the reference has no community
 stage); the iteration idiom mirrors graph/pagerank.py.
@@ -46,7 +44,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever, sever_release
+from moz_datapipeline_spark.iterate import (
+    checkpoint_sever,
+    owned,
+    sever_release,
+)
 
 
 def label_propagation(
@@ -55,7 +57,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     symmetrize: bool = True,
-    eager: bool = False,
 ) -> DataFrame:
     """Return ``(node, label)`` after ``rounds`` synchronous LPA rounds.
 
@@ -70,19 +71,16 @@ def label_propagation(
     list); callers tracking singletons should union them back with
     ``label = node`` afterwards.
 
-    Cache contract (the r7 leak fix, revised after measuring): the
-    restructured rounds consume the previous labels frame exactly
-    ONCE (vote-less nodes are a static precomputed set), so the
-    per-round frames never need pinning in EITHER mode; only the two
-    STATIC frames — the deduped edge list and the vote-less set,
-    each referenced every round — are materialized, via
-    ``checkpoint_sever`` (r13: exempt localCheckpoint blocks, not a
-    leakable persist).  ``eager=True`` severs the result too and
-    releases both statics — at most ONE severed frame survives the
-    call (pinned by ``tests/test_cache_contract``).  ``eager=False``
-    keeps the rounds as one lazy plan over the severed statics
+    Cache contract: the rounds consume the previous labels frame
+    exactly ONCE (vote-less nodes are a static precomputed set), so
+    the per-round frames are never pinned; only the two STATIC frames
+    — the deduped edge list and the vote-less set, each referenced
+    every round — are materialized via ``checkpoint_sever``
     (re-deriving an expensive edge build once per round per
-    appearance measured ~9× slower).
+    appearance measured ~9× slower).  The result is severed, both
+    statics are released, and the returned frame owns its blocks
+    (``iterate.owned``): at most ONE severed frame survives the call,
+    and ``unpersist()`` releases it (``tests/test_cache_contract``).
     """
     if rounds < 0:
         raise ValueError("label_propagation: rounds must be >= 0")
@@ -139,11 +137,7 @@ def label_propagation(
             ).alias("_w")
         ).select("node", F.col("_w.l").alias("label"))
         labels = winners.unionByName(voteless)
-    result = labels.select("node", "label")
-    if eager:
-        # sever, not persist: the caller never unpersists a returned
-        # frame in the bench; severed blocks are the exempt kind
-        result = checkpoint_sever(result)
-        sever_release(e)
-        sever_release(voteless)
-    return result
+    result = checkpoint_sever(labels.select("node", "label"))
+    sever_release(e)
+    sever_release(voteless)
+    return owned(result)

@@ -1,7 +1,29 @@
-"""Iteration hygiene for loops that re-join their own output.
+"""Materialization and block lifetime for the package's operators.
 
-``localCheckpoint(eager=True)`` truncates logical lineage AND RDD
-lineage, but Spark's ``LogicalRDD`` PRESERVES the checkpointed plan's
+The lifetime rule (the one place it is stated):
+
+- An operator that materializes an intermediate its result plan reads
+  uses ``checkpoint_sever`` (or a plain ``localCheckpoint``), never
+  ``persist()``/``cache()``: a persisted frame the result reads can
+  never be released by the operator, and the bench fails on it.
+- The operator returns ``owned(result, *intermediates)``.  The result
+  owns those blocks: ``result.unpersist(blocking)`` releases the
+  result's own blocks and every part's, and calls each part's own
+  ``unpersist`` — so ownership chains (``decile_lift`` owns
+  ``global_rank``'s frame, which owns its range checkpoint).  The
+  caller's ``blocking`` flag is passed through.
+- A caller that never unpersists leaves only localCheckpoint blocks,
+  which the ContextCleaner reclaims on GC and the bench exempts.
+- A frame DERIVED from an owned result (``.filter``, ``.select``) is a
+  new object without the hook: an operator returning one wraps it
+  again (``owned(cands.filter(...), cands)``).
+- ``sever_release`` is for loops releasing superseded rounds; after it
+  the frame cannot be recomputed (a severed plan has no lineage), so
+  call it, or ``unpersist`` an owned result, only once every consumer
+  has materialized its own copy.
+
+Why ``checkpoint_sever`` and not ``localCheckpoint(eager=True)`` in
+loops: Spark's ``LogicalRDD`` PRESERVES the checkpointed plan's
 estimated ``Statistics`` (``originStats``).  Size-only estimation
 multiplies children's ``sizeInBytes`` at joins, so an iterative loop
 whose round joins TWO frames derived from the previous round's
@@ -12,17 +34,18 @@ growth per round on 3-row frames, 0.5 s rounds becoming 120 s by round
 19, with constant plans, constant RDD lineage, and an idle DAG
 scheduler.
 
-``checkpoint_sever`` is the loop-safe checkpoint: materialize eagerly,
-then rebuild the frame from the checkpointed internal RDD WITHOUT the
-origin statistics.  Planner-time stats fall back to the default size
-(AQE still sees true runtime sizes at each exchange, so runtime join
-strategy is unaffected); driver CPU per round becomes flat.
+``checkpoint_sever`` materializes eagerly, then rebuilds the frame from
+the checkpointed internal RDD WITHOUT the origin statistics.
+Planner-time stats fall back to the default size (AQE still sees true
+runtime sizes at each exchange, so runtime join strategy is
+unaffected); driver CPU per round becomes flat.
 
 The fast path uses ``SparkSession.internalCreateDataFrame`` (Scala
 ``private[sql]``, public in bytecode — stable across the pinned Spark
 line, zero-copy, no Python round-trip).  If that internal surface ever
 moves, the fallback routes rows through ``createDataFrame(df.rdd,
-schema)`` — same semantics, one Python serialization pass.
+schema)`` — same semantics, one Python serialization pass.  Both paths
+carry the handle ``sever_release`` frees.
 """
 
 from __future__ import annotations
@@ -44,70 +67,61 @@ def checkpoint_sever(df: DataFrame) -> DataFrame:
     if _os.environ.get("SPARK_GRAFT_SEVER_PASSTHROUGH") == "1":
         return df
     cp = df.localCheckpoint(eager=True)
+    jdf = cp._jdf
+    spark = cp.sparkSession
+    # handle for sever_release: the PERSISTED rdd is the one inside
+    # cp's LogicalRDD (toRdd() below is a derived wrapper over it)
+    source = jdf.queryExecution().analyzed().rdd()
     try:
         from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
-        jdf = cp._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        spark = cp.sparkSession
         jds = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
+            jdf.queryExecution().toRdd(), jdf.schema(), False
         )
         out = _CDF(jds, spark)
-        # handle for sever_release: the PERSISTED rdd is the one inside
-        # cp's LogicalRDD (toRdd() above is a derived wrapper over it)
-        try:
-            out._severed_source_jrdd = (
-                jdf.queryExecution().analyzed().rdd()
-            )
-        except Exception:
-            pass
-        return out
     except Exception:
         # internal API moved: public rebuild (adds a Python pass)
-        return cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-
-
-def sever_result(df: DataFrame) -> DataFrame:
-    """``checkpoint_sever`` for the frame an operator RETURNS: the
-    caller's ``unpersist()`` also releases the severed blocks (via
-    ``sever_release``), so a caller that unpersists its result is back
-    at its storage baseline, exactly as with a persisted result — while
-    a caller that never unpersists leaves only a localCheckpoint
-    remnant, which the bench exempts."""
-    out = checkpoint_sever(df)
-    plain_unpersist = out.unpersist
-
-    def unpersist(blocking: bool = False) -> DataFrame:
-        sever_release(out)
-        return plain_unpersist(blocking)
-
-    out.unpersist = unpersist
+        out = spark.createDataFrame(cp.rdd, cp.schema)
+    out._severed_source_jrdd = source
     return out
 
 
-def sever_release(df: DataFrame) -> None:
+def sever_release(df: DataFrame, blocking: bool = False) -> None:
     """Unpersist the checkpointed blocks behind a ``checkpoint_sever``
-    result.  AFTER THIS THE FRAME CANNOT BE RECOMPUTED (a severed plan
-    has no lineage) — call only once every downstream consumer has
-    materialized its own copy.  Loops with a strict nothing-stays-
-    cached contract (``harmonic_centrality``) use this to release
-    superseded rounds instead of waiting for the ContextCleaner;
-    a frame from the fallback path is left alone (no handle)."""
+    frame, or behind a plain ``df.localCheckpoint(...)`` frame; any
+    other frame is left alone.  AFTER THIS THE FRAME CANNOT BE
+    RECOMPUTED (see the module docstring)."""
     jrdd = getattr(df, "_severed_source_jrdd", None)
     if jrdd is not None:
         try:
-            jrdd.unpersist(False)
+            jrdd.unpersist(blocking)
         except Exception:
             pass
         return
-    # plain df.localCheckpoint(...) frame (no sever handle): its
-    # analyzed plan is a LogicalRDD over the persisted internal RDD —
-    # release that directly so eager operators can honour the at-most-
-    # one-cached-frame contract for BOTH checkpoint flavours
+    # plain localCheckpoint frame: its analyzed plan is a LogicalRDD
+    # over the persisted internal RDD
     try:
         rdd = df._jdf.queryExecution().analyzed().rdd()
         if bool(rdd.isLocallyCheckpointed()):
-            rdd.unpersist(False)
+            rdd.unpersist(blocking)
     except Exception:
         pass
+
+
+def owned(result: DataFrame, *parts: DataFrame) -> DataFrame:
+    """Return ``result``, owning its own checkpoint blocks and ``parts``:
+    its ``unpersist(blocking)`` runs the plain unpersist, then
+    ``sever_release`` on ``result`` and on each part, then each part's
+    own ``unpersist`` (so an owned part releases what it owns)."""
+    plain_unpersist = result.unpersist
+
+    def unpersist(blocking: bool = False) -> DataFrame:
+        plain_unpersist(blocking)
+        sever_release(result, blocking)
+        for part in parts:
+            sever_release(part, blocking)
+            part.unpersist(blocking)
+        return result
+
+    result.unpersist = unpersist
+    return result

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from moz_datapipeline_spark.iterate import checkpoint_sever, sever_release
+from moz_datapipeline_spark.iterate import checkpoint_sever, owned
 from moz_datapipeline_spark.localresult import literal_frame
 
 NS_PER_DAY = 86_400_000_000_000
@@ -1351,7 +1351,6 @@ def roc_auc(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    eager: bool = False,
 ) -> DataFrame:
     """Exact ROC AUC as the Mann–Whitney rank-sum, one row
     ``(n_pos, n_neg, auc)``: the probability a random positive
@@ -1372,12 +1371,9 @@ def roc_auc(
     single-partition sort would be the plan that never finishes.
 
     Cache contract: same as ``global_rank`` — the range partitioning
-    pins one rollup-sized cache (the counts branch and the prefix
-    branch must observe the same sampled boundaries).  ``eager=False``
-    (default) leaves it live for the returned frame's lifetime;
-    ``eager=True`` materializes the 1-row result, releases the
-    intermediate, and leaves AT MOST the returned frame cached —
-    unpersist it when done (``tests/test_cache_contract``).
+    pins one rollup-sized checkpoint (the counts branch and the prefix
+    branch must observe the same sampled boundaries), owned by the
+    returned frame (``tests/test_cache_contract``).
     """
     y = F.col(label_col).cast("int")
     s = F.col(score_col).cast("double")
@@ -1437,11 +1433,7 @@ def roc_auc(
         / (F.col("n_pos").cast("double") * F.col("n_neg").cast("double")),
     )
     out = folded.select("n_pos", "n_neg", F.round(auc, 6).alias("auc"))
-    if eager:
-        out = out.persist()
-        out.count()
-        sever_release(local)
-    return out
+    return owned(out, local)
 
 
 def decile_lift(
@@ -1450,7 +1442,6 @@ def decile_lift(
     label_col: str,
     tiebreak_cols: list[str] | None = None,
     n_tiles: int = 10,
-    eager: bool = False,
 ) -> DataFrame:
     """Gains/lift table for a binary-outcome score: rank rows by score
     DESCENDING into ``n_tiles`` equal buckets (1 = highest scores) and
@@ -1466,11 +1457,9 @@ def decile_lift(
     order total (ties across a tile edge are otherwise
     partition-lottery); NULL scores/labels drop.
 
-    Cache contract: the inner ``global_rank`` pins one data-sized
-    range-partitioned cache.  ``eager=False`` (default) leaves it live
-    for the returned frame's lifetime; ``eager=True`` materializes the
-    ≤ ``n_tiles``-row result, releases every intermediate, and leaves
-    AT MOST the returned frame cached (``tests/test_cache_contract``).
+    Cache contract: the returned frame owns the inner ``global_rank``
+    frame, which owns its data-sized range checkpoint
+    (``tests/test_cache_contract``).
     """
     from moz_datapipeline_spark.operators.ranges import global_rank
 
@@ -1484,8 +1473,7 @@ def decile_lift(
         s.alias("_s"), y.alias("_y"), *tiebreak_cols
     )
     ranked = global_rank(
-        base, "_s", list(tiebreak_cols), ascending=False,
-        with_percent=False, eager=eager,
+        base, "_s", list(tiebreak_cols), ascending=False, with_percent=False
     )
     n_row = ranked.agg(
         F.count(F.lit(1)).alias("_n"), F.sum("_y").alias("_pos")
@@ -1518,7 +1506,7 @@ def decile_lift(
         F.col("_post") > 0,
         F.col("n_pos").cast("double") / F.col("_post").cast("double"),
     )
-    return per.select(
+    out = per.select(
         "decile",
         "n",
         "n_pos",
@@ -1536,6 +1524,7 @@ def decile_lift(
             F.when(base_rate > 0, rate / base_rate), 6
         ).alias("lift"),
     )
+    return owned(out, ranked)
 
 
 def spearman_corr(
@@ -2366,9 +2355,7 @@ def lorenz_curve(
         raise ValueError(
             "lorenz_curve: negative values break share monotonicity"
         )
-    ranked = global_rank(
-        base, "_x", ["_mid"], with_percent=False, eager=True
-    )
+    ranked = global_rank(base, "_x", ["_mid"], with_percent=False)
     q = int(n_points)
     nrow = ranked.agg(
         F.count(F.lit(1)).alias("_n"), F.sum("_x").alias("_tot")
@@ -2392,12 +2379,11 @@ def lorenz_curve(
         )
     )
     # materialize the ≤ n_points tile rollup BEFORE releasing the
-    # ranked cache — unpersisting first would recompute the whole
-    # range exchange once per consumer branch
+    # ranked checkpoint — the rollup plan reads it
     per = per.localCheckpoint()
     ranked.unpersist()
     w = Window.orderBy("tile").rowsBetween(Window.unboundedPreceding, 0)
-    return per.select(
+    out = per.select(
         "tile",
         F.round(
             F.sum("_cnt").over(w).cast("double") / F.col("_nt").cast("double"),
@@ -2410,6 +2396,7 @@ def lorenz_curve(
             6,
         ).alias("cum_value_share"),
     )
+    return owned(out, per)
 
 
 def heatmap_bins(

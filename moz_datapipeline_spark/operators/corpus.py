@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever, sever_release
+from moz_datapipeline_spark.iterate import checkpoint_sever, owned
 
 
 def tokens(text_col: Column | str) -> Column:
@@ -799,7 +799,6 @@ def negative_sample(
     k: int = 4,
     id_col: str = "doc_id",
     seed: str = "neg",
-    eager: bool = False,
 ) -> DataFrame:
     """Deterministic k-negative sampling for contrastive-training pairs:
     every row becomes an anchor paired with ``k`` pseudo-random OTHER
@@ -816,13 +815,8 @@ def negative_sample(
     guaranteed ≠ anchor.  Corpora with fewer than 2 rows produce no
     pairs.
 
-    Returns (anchor_id, slot, negative_id).
-
-    ``eager=True`` materializes the result, keeps it as the single
-    cached frame, and releases the intermediate position-index cache
-    (the ``graph.pagerank(eager=True)`` contract); the caller may
-    ``.unpersist()`` the returned frame when done.  The default keeps
-    the lazy plan whose index cache lives for the session.
+    Returns (anchor_id, slot, negative_id); the returned frame owns
+    the severed position index (``iterate.owned``).
 
     Reference parity: extension operator (contrastive data prep);
     sampling-family sibling of ``weighted_sample``/``mixture_resample``.
@@ -897,11 +891,7 @@ def negative_sample(
         ),
         "_tpos",
     ).select("anchor_id", "slot", "negative_id")
-    if eager:
-        out = out.persist()
-        out.count()
-        sever_release(local)
-    return out
+    return owned(out, local)
 
 
 def shard_corpus(

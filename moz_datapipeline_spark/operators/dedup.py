@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever, sever_release
+from moz_datapipeline_spark.iterate import owned
 
 # 31-bit Mersenne prime: keeps a*h+b < 2^62, safe under ANSI long arithmetic
 _MERSENNE_P = (1 << 31) - 1
@@ -183,21 +183,17 @@ def minhash_lsh_candidates(
     bands: int = 8,
     id_col: str = "doc_id",
     portable_hash: bool = False,
-    eager: bool = False,
 ) -> DataFrame:
     """Band the signature, hash each band, bucket-join → candidate pairs.
 
     The join is an equi join on (band_idx, band_hash) — co-located by
     the shuffle, skew-split by AQE. Output: (id_a < id_b) pairs.
 
-    The signature table is materialized first (``checkpoint_sever``):
+    The signature table is materialized first (a local checkpoint):
     both sides of the self-join would otherwise recompute the full
     signature aggregation (alias-only branches defeat exchange reuse).
     Signatures are narrow (id + hashes) so the blocks are cheap even at
-    corpus scale, exempt from the bench's leak assert, and reclaimed
-    between queries.  ``eager=True`` materializes the candidate pairs
-    as a persisted frame and releases the signature blocks immediately;
-    the caller may ``.unpersist()`` the returned frame when done.
+    corpus scale, and owned by the returned frame (``iterate.owned``).
     """
     # localCheckpoint, not .cache(): the candidate-pair plan reads the
     # signature frame, so the operator could never unpersist it (the
@@ -220,11 +216,7 @@ def minhash_lsh_candidates(
         )
         .distinct()
     )
-    if eager:
-        out = out.persist()
-        out.count()
-        sever_release(sigs)
-    return out
+    return owned(out, sigs)
 
 
 def prefix_bucket_candidates(
@@ -424,14 +416,11 @@ def simhash_candidates(
     sig_df: DataFrame,
     id_col: str = "doc_id",
     chunks: int = 4,
-    eager: bool = False,
 ) -> DataFrame:
     """Bucket simhashes by 16-bit chunks; pairs sharing any chunk are candidates.
 
-    Persists the signature table — see ``minhash_lsh_candidates`` on why
-    the self-join needs it; ``eager=True`` applies the same
-    release-the-intermediate contract (result becomes the single cached
-    frame).
+    Checkpoints the signature table — see ``minhash_lsh_candidates`` on
+    why the self-join needs it; the returned frame owns it.
     """
     # localCheckpoint, not .cache() — see minhash_lsh_candidates
     sig_df = sig_df.localCheckpoint(eager=True)
@@ -466,12 +455,9 @@ def simhash_candidates(
         .distinct()
     )
     hamming = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    out = pairs.withColumn("hamming", hamming).drop("_sa", "_sb")
-    if eager:
-        out = out.persist()
-        out.count()
-        sever_release(sig_df)
-    return out
+    return owned(
+        pairs.withColumn("hamming", hamming).drop("_sa", "_sb"), sig_df
+    )
 
 
 def set_similarity_join(

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from moz_datapipeline_spark.iterate import owned
+
 
 class DecodeUnavailable(NotImplementedError):
     """Raised by the real decode path: codec libraries not installed."""
@@ -442,7 +444,6 @@ def image_near_dup(
     max_hamming: int = 6,
     media_col: str = "media",
     id_col: str = "doc_id",
-    eager: bool = False,
 ) -> DataFrame:
     """Image near-duplicate pairs: dHash signatures → 16-bit-chunk
     bucket join (Hamming ≤ 3 guaranteed candidate recall, ≤ 6 high in
@@ -452,8 +453,8 @@ def image_near_dup(
     from .dedup import simhash_candidates
 
     sigs = image_dhash(df, media_col=media_col, id_col=id_col)
-    cands = simhash_candidates(sigs, id_col=id_col, eager=eager)
-    return cands.filter(F.col("hamming") <= max_hamming)
+    cands = simhash_candidates(sigs, id_col=id_col)
+    return owned(cands.filter(F.col("hamming") <= max_hamming), cands)
 
 
 def ahash64(samples, channels_last: bool = True) -> int:
@@ -516,12 +517,11 @@ def audio_near_dup(
     max_hamming: int = 6,
     media_col: str = "media",
     id_col: str = "doc_id",
-    eager: bool = False,
 ) -> DataFrame:
     """Audio near-duplicate pairs: envelope hashes → the text
     pipeline's 16-bit-chunk bucket join → exact Hamming filter."""
     from .dedup import simhash_candidates
 
     sigs = audio_ahash(df, media_col=media_col, id_col=id_col)
-    cands = simhash_candidates(sigs, id_col=id_col, eager=eager)
-    return cands.filter(F.col("hamming") <= max_hamming)
+    cands = simhash_candidates(sigs, id_col=id_col)
+    return owned(cands.filter(F.col("hamming") <= max_hamming), cands)

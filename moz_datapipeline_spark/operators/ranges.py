@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever, sever_release
+from moz_datapipeline_spark.iterate import checkpoint_sever, owned
 
 
 def bucketed_range_join(
@@ -60,7 +60,6 @@ def global_rank(
     tiebreak_cols: list[str],
     ascending: bool = True,
     with_percent: bool = True,
-    eager: bool = False,
 ) -> DataFrame:
     """Exact global rank (1-based ``row_number`` under the total order
     ``(order_col, *tiebreak_cols)`` asc) plus the exact CDF
@@ -83,10 +82,8 @@ def global_rank(
     Materialization contract (r13): the range-partitioned dataset is
     materialized ONCE via ``checkpoint_sever`` so the counts branch
     and the final join observe the SAME sampled partitioning — exempt
-    localCheckpoint blocks, reclaimed between bench queries, never a
-    leakable ``cache()``.  ``eager=True`` additionally materializes
-    the (persisted) result and releases the intermediate immediately;
-    unpersist the returned frame when done.
+    localCheckpoint blocks owned by the returned frame
+    (``iterate.owned``), never a leakable ``cache()``.
     """
     from pyspark.sql import Window
 
@@ -140,12 +137,7 @@ def global_rank(
                 ),
             ).otherwise(F.lit(0.0)),
         )
-    result = out.drop("_pid", "_lrank", "_base", "_n")
-    if eager:
-        result = result.persist()
-        result.count()
-        sever_release(local)
-    return result
+    return owned(out.drop("_pid", "_lrank", "_base", "_n"), local)
 
 
 def peak_concurrency(
@@ -153,7 +145,6 @@ def peak_concurrency(
     start_col: str = "start",
     end_col: str = "end",
     group_cols: list[str] | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """Maximum number of simultaneously-open ``[start, end)`` intervals
     (per group when ``group_cols`` given): ``(*group_cols,
@@ -174,9 +165,7 @@ def peak_concurrency(
     over |partitions| rows.  Holds at any interval count.
 
     Materialization contract: same as ``global_rank`` (severed, not
-    cached); ``eager=True`` releases the intermediate once the
-    (persisted) result materializes — unpersist the returned frame
-    when done.
+    cached, owned by the returned frame).
     """
     group_cols = group_cols or []
     ev = intervals.select(
@@ -241,17 +230,10 @@ def peak_concurrency(
         .withColumn("peak_concurrency", F.col("conc").cast("long"))
         .drop("conc")
     )
-    result = peaks.join(firsts, [*group_cols, "peak_concurrency"])
-    if eager:
-        result = result.persist()
-        result.count()
-        sever_release(local)
-    return result
+    return owned(peaks.join(firsts, [*group_cols, "peak_concurrency"]), local)
 
 
-def pareto_frontier_2d(
-    df: DataFrame, x_col: str, y_col: str, eager: bool = False
-) -> DataFrame:
+def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """Exact 2-D Pareto frontier (skyline), minimizing BOTH columns:
     keep every row no other row strictly dominates (``s.x <= r.x``,
     ``s.y <= r.y``, at least one strict).  Rows with identical
@@ -276,10 +258,8 @@ def pareto_frontier_2d(
     one equi join back: holds at any scale, unlike the textbook
     self-join.
 
-    Cache contract: same as ``global_rank`` — the pinned group-table
-    range partitioning is released under ``eager=True`` once the
-    (persisted) result materializes; unpersist the returned frame
-    when done.
+    Cache contract: same as ``global_rank`` — the returned frame owns
+    the severed group-table range partitioning.
     """
     from pyspark.sql import Window
 
@@ -325,11 +305,7 @@ def pareto_frontier_2d(
         .filter(~(y > F.col("_eq_min")) & ~(F.col("_strict_min") <= y))
         .drop("_x", "_eq_min", "_strict_min")
     )
-    if eager:
-        result = result.persist()
-        result.count()
-        sever_release(local)
-    return result
+    return owned(result, local)
 
 
 def interval_coverage(
@@ -497,9 +473,7 @@ def _resolve_cells(
                 sub = tagged.filter(_chain_pred(c)).withColumn(
                     "_mid", F.monotonically_increasing_id()
                 )
-                ranked = global_rank(
-                    sub, "_v", ["_mid"], with_percent=False, eager=True
-                )
+                ranked = global_rank(sub, "_v", ["_mid"], with_percent=False)
                 ks = [int(r - c["start"] + 1) for r in c["ranks"]]
                 for row in (
                     ranked.filter(F.col("rank").isin(ks))

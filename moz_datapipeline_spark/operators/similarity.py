@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever, sever_release
+from moz_datapipeline_spark.iterate import owned
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -594,17 +594,13 @@ def embedding_near_dup(
     n_tables: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    eager: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH candidate buckets.
 
     ``n_tables`` independent hyperplane sets raise recall (union of
     per-table candidates, deduplicated before scoring) at ~n_tables×
-    the candidate volume — same shuffle key (table, bucket).
-    ``eager=True`` materializes the result as the single cached frame
-    and releases the bucketed-vector cache (the
-    ``graph.pagerank(eager=True)`` contract); caller may unpersist the
-    returned frame when done."""
+    the candidate volume — same shuffle key (table, bucket).  The
+    returned frame owns the checkpointed bucketed vectors."""
     tables = _plane_tables(dim, n_planes, n_tables)
     # materialize ONCE before the self-join (localCheckpoint, not
     # .cache(): the result plan reads this frame, so the operator could
@@ -639,11 +635,7 @@ def embedding_near_dup(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-    if eager:
-        out = out.persist()
-        out.count()
-        sever_release(v)
-    return out
+    return owned(out, v)
 
 
 def random_projection(
@@ -774,7 +766,6 @@ def semantic_dedup(
     init_stride: int = 64,
     max_cluster_size: int | None = None,
     stats: dict | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-cluster the embeddings, then inside each
@@ -800,13 +791,6 @@ def semantic_dedup(
     ``stats``, when a dict, receives ``oversized_clusters``,
     ``widest_cluster``, and ``split_subbuckets`` (one tiny k-row
     aggregate job at call time).
-
-    ``eager=True`` materializes the result, keeps it as the single
-    cached frame, and releases the intermediate label cache — the
-    bounded-footprint contract of ``graph.pagerank(eager=True)``; the
-    caller may ``.unpersist()`` the returned frame when done.  The
-    default keeps the classic lazy plan whose label cache lives for
-    the session.
 
     Returns (id, cluster) for the surviving rows.
 
@@ -880,13 +864,9 @@ def semantic_dedup(
             lambda y: cosine(y["_v"], x["_v"]) > F.lit(float(threshold)),
         ),
     )
-    out = buckets.select(
+    return buckets.select(
         F.col("cluster"), F.explode(survivors).alias("_x")
     ).select(F.col("_x")[id_col].alias(id_col), "cluster")
-    if eager:
-        out = out.persist()
-        out.count()
-    return out
 
 
 def embedding_covariance(

@@ -1037,7 +1037,6 @@ def containment_semdedup_scale_check(spark, docs) -> dict:
         iterations=1,
         max_cluster_size=2_000,
         stats=st2,
-        eager=True,
     )
     out["semdedup_docs"] = n
     out["semdedup_kept"] = kept.count()
@@ -1551,7 +1550,7 @@ def round7_ops_scale_check(spark, docs) -> dict:
     bridge = spark.createDataFrame([(half - 1, half)], "src long, dst long")
     edges = intra.unionByName(comm_b).unionByName(bridge)
     t0 = time.perf_counter()
-    labs = label_propagation(edges, rounds=3, eager=True)
+    labs = label_propagation(edges, rounds=3)
     n_labels = labs.select("label").distinct().count()
     t_lpa = time.perf_counter() - t0
 

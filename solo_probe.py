@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Solo-time a list of queries with the bench methodology (noop sink,
 clearCache between runs) in a fresh session. Usage:
-    python solo_probe.py q1 q2 ... [--runs N]
-Prints one line per query: name, runs..., and job counts.
+    python solo_probe.py q1 q2 ... [--runs=N]
+Prints one line per query (name, run times), then all of them as one
+JSON object.  Job counts: ``job_count_probe.py``.
 """
 import json
 import os
@@ -27,13 +28,11 @@ spark = get_spark(app_name="solo_probe")
 spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
 qs = entry_mod.queries()
 sc = spark.sparkContext
-tracker = sc.statusTracker()
 
 out = {}
 for name in args:
     fn = qs[name]
     times = []
-    jobs0 = len(tracker.getJobIdsForGroup() or [])
     for i in range(runs):
         spark.catalog.clearCache()
         for rdd in sc._jsc.getPersistentRDDs().values():
@@ -42,7 +41,6 @@ for name in args:
         t0 = time.perf_counter()
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         times.append(round(time.perf_counter() - t0, 3))
-    njobs = sc._jsc.sc().dagScheduler().nextJobId().get() if False else None
     out[name] = times
     print(name, times, flush=True)
 print(json.dumps(out))

@@ -1,9 +1,9 @@
-"""Cache-lifetime contract: operators that persist intermediates must,
-in ``eager=True`` mode, release them and leave AT MOST the returned
-frame cached — the bounded-footprint contract ``graph.pagerank`` set.
+"""Cache-lifetime contract: an operator that materializes intermediates
+returns a frame that owns them (``iterate.owned``) — AT MOST one block
+survives the call, and the result's ``unpersist()`` releases it.
 
 The observable is Spark's storage registry (materialized cached RDDs):
-after the operator returns, the only new entry is the result; after the
+after the result is counted, at most one new entry remains; after the
 caller unpersists the result, the registry is back to its baseline.
 Long-running drivers (streaming ingest, multi-day sessions) depend on
 this — a session-lifetime cache per operator call is a slow leak.
@@ -46,7 +46,7 @@ class TestEagerReleasesIntermediates:
 
         base = _cached_rdd_count(spark)
         sigs = minhash_signatures(_docs(spark))
-        out = minhash_lsh_candidates(sigs, eager=True)
+        out = minhash_lsh_candidates(sigs)
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
@@ -56,7 +56,7 @@ class TestEagerReleasesIntermediates:
         from moz_datapipeline_spark.operators.similarity import semantic_dedup
 
         base = _cached_rdd_count(spark)
-        out = semantic_dedup(_embs(spark), threshold=0.999, k=4, eager=True)
+        out = semantic_dedup(_embs(spark), threshold=0.999, k=4)
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
@@ -66,7 +66,7 @@ class TestEagerReleasesIntermediates:
         from moz_datapipeline_spark.operators.corpus import negative_sample
 
         base = _cached_rdd_count(spark)
-        out = negative_sample(_docs(spark), k=2, eager=True)
+        out = negative_sample(_docs(spark), k=2)
         assert out.count() == 60 * 2
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
@@ -78,9 +78,7 @@ class TestEagerReleasesIntermediates:
         )
 
         base = _cached_rdd_count(spark)
-        out = embedding_near_dup(
-            _embs(spark), threshold=0.99, dim=8, eager=True
-        )
+        out = embedding_near_dup(_embs(spark), threshold=0.99, dim=8)
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
@@ -93,14 +91,15 @@ class TestEagerReleasesIntermediates:
         )
 
         base = _cached_rdd_count(spark)
-        out = simhash_candidates(_simhash_sigs(spark), eager=True)
+        out = simhash_candidates(_simhash_sigs(spark))
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
         assert _cached_rdd_count(spark) <= base
 
     def test_eager_matches_lazy_results(self, spark):
-        """eager is a lifetime knob, never a semantics knob."""
+        """A result reads the same before and after the SQL cache is
+        cleared: it never depends on a persisted cache."""
         from moz_datapipeline_spark.operators.corpus import negative_sample
         from moz_datapipeline_spark.operators.dedup import (
             minhash_lsh_candidates,
@@ -108,23 +107,20 @@ class TestEagerReleasesIntermediates:
         )
 
         d = _docs(spark)
-        lazy = sorted(
-            map(tuple, minhash_lsh_candidates(minhash_signatures(d)).collect())
-        )
-        eager = minhash_lsh_candidates(minhash_signatures(d), eager=True)
-        assert sorted(map(tuple, eager.collect())) == lazy
-        eager.unpersist(blocking=True)
-
-        lazy_ns = sorted(map(tuple, negative_sample(d, k=2).collect()))
-        eager_ns = negative_sample(d, k=2, eager=True)
-        assert sorted(map(tuple, eager_ns.collect())) == lazy_ns
-        eager_ns.unpersist(blocking=True)
+        for out in (
+            minhash_lsh_candidates(minhash_signatures(d)),
+            negative_sample(d, k=2),
+        ):
+            before = sorted(map(tuple, out.collect()))
+            spark.catalog.clearCache()
+            assert sorted(map(tuple, out.collect())) == before
+            out.unpersist(blocking=True)
 
 
 class TestRangeOpsEagerRelease:
     """ADVICE r7: global_rank / peak_concurrency / pareto_frontier_2d
     pinned their range-partitioned intermediates for the app lifetime.
-    eager=True must release them, leaving at most the returned frame."""
+    The result's unpersist must release them."""
 
     def _nums(self, spark, n=500):
         return spark.createDataFrame(
@@ -136,7 +132,7 @@ class TestRangeOpsEagerRelease:
         from moz_datapipeline_spark.operators.ranges import global_rank
 
         base = _cached_rdd_count(spark)
-        out = global_rank(self._nums(spark), "x", ["id"], eager=True)
+        out = global_rank(self._nums(spark), "x", ["id"])
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
@@ -150,9 +146,7 @@ class TestRangeOpsEagerRelease:
             "g int, start double, end double",
         )
         base = _cached_rdd_count(spark)
-        out = peak_concurrency(
-            iv, "start", "end", group_cols=["g"], eager=True
-        )
+        out = peak_concurrency(iv, "start", "end", group_cols=["g"])
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
@@ -168,20 +162,21 @@ class TestRangeOpsEagerRelease:
             "x double, y double",
         )
         base = _cached_rdd_count(spark)
-        out = pareto_frontier_2d(df, "x", "y", eager=True)
+        out = pareto_frontier_2d(df, "x", "y")
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
         assert _cached_rdd_count(spark) <= base
 
     def test_eager_matches_lazy(self, spark):
+        """Same before and after the SQL cache is cleared."""
         from moz_datapipeline_spark.operators.ranges import global_rank
 
-        d = self._nums(spark, 200)
-        lazy = sorted(map(tuple, global_rank(d, "x", ["id"]).collect()))
-        eager = global_rank(d, "x", ["id"], eager=True)
-        assert sorted(map(tuple, eager.collect())) == lazy
-        eager.unpersist(blocking=True)
+        out = global_rank(self._nums(spark, 200), "x", ["id"])
+        before = sorted(map(tuple, out.collect()))
+        spark.catalog.clearCache()
+        assert sorted(map(tuple, out.collect())) == before
+        out.unpersist(blocking=True)
 
     def _scored(self, spark, n=400):
         return spark.createDataFrame(
@@ -196,7 +191,7 @@ class TestRangeOpsEagerRelease:
         from moz_datapipeline_spark.operators.analytics import roc_auc
 
         base = _cached_rdd_count(spark)
-        out = roc_auc(self._scored(spark), "score", "label", eager=True)
+        out = roc_auc(self._scored(spark), "score", "label")
         got = out.collect()
         assert _cached_rdd_count(spark) <= base + 1
         out.unpersist(blocking=True)
@@ -209,8 +204,7 @@ class TestRangeOpsEagerRelease:
 
         base = _cached_rdd_count(spark)
         out = decile_lift(
-            self._scored(spark), "score", "label", tiebreak_cols=["id"],
-            eager=True,
+            self._scored(spark), "score", "label", tiebreak_cols=["id"]
         )
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
@@ -224,11 +218,11 @@ class TestRangeOpsEagerRelease:
 
 
 class TestLpaLazyNeverPersists:
-    """ADVICE r7 (revised): lazy-mode label_propagation used to pin
-    rounds+1 frames forever.  The restructured rounds consume each
-    labels frame exactly once, so only the TWO static frames (edge
-    list + vote-less set) persist in lazy mode — and eager mode
-    releases both, leaving at most the returned frame."""
+    """ADVICE r7 (revised): label_propagation used to pin rounds+1
+    frames forever.  The restructured rounds consume each labels frame
+    exactly once, so only the TWO static frames (edge list + vote-less
+    set) are materialized — and both are released once the result is,
+    leaving at most the returned frame."""
 
     def test_lazy_pins_only_the_two_statics(self, spark):
         from moz_datapipeline_spark.graph.lpa import label_propagation
@@ -250,12 +244,12 @@ class TestLpaLazyNeverPersists:
             [(i, (i + 1) % 30) for i in range(30)], "src long, dst long"
         )
         base = _cached_rdd_count(spark)
-        out = label_propagation(e, rounds=2, eager=True)
+        out = label_propagation(e, rounds=2)
         out.count()
         assert _cached_rdd_count(spark) <= base + 1
-        # r13: the eager result is a severed localCheckpoint (a caller
-        # can't be relied on to unpersist, and the bench exempts these
-        # blocks); release it the severed way
+        # the result is a severed localCheckpoint (a caller can't be
+        # relied on to unpersist, and the bench exempts these blocks);
+        # release it the severed way
         from moz_datapipeline_spark.iterate import sever_release
 
         sever_release(out)
@@ -287,3 +281,108 @@ class TestBenchLeakAssert:
 
         bench.clear_storage(spark, "scratch")  # must NOT raise
         assert _cached_rdd_count(spark) == 0
+
+
+@pytest.mark.usefixtures("clean_storage")
+class TestDerivedResultReleasesEverything:
+    """A result built ON TOP of another operator's result (a filter of
+    simhash candidates, a rollup of a global rank, a fold of a
+    checkpointed tile rollup) must still release every block it
+    depends on when the caller unpersists it."""
+
+    def test_image_near_dup(self, spark):
+        import numpy as np
+
+        from moz_datapipeline_spark.operators.multimodal import (
+            MEDIA_SCHEMA,
+            image_near_dup,
+        )
+        from moz_datapipeline_spark.sources.avi import gradient_frame
+        from moz_datapipeline_spark.sources.jpeg import encode_jpeg_baseline
+
+        def media_row(i, frame):
+            return (
+                i,
+                {
+                    "payload": encode_jpeg_baseline(frame, quality=90),
+                    "mime": "image/jpeg",
+                    "width": 18,
+                    "height": 12,
+                    "sample_rate": None,
+                    "channels": None,
+                    "duration_ms": None,
+                },
+            )
+
+        base = np.array(gradient_frame(0, 12, 18))
+        tweaked = base.copy()
+        tweaked[3, 5, 0] ^= 3
+        df = spark.createDataFrame(
+            [media_row(0, base), media_row(1, tweaked)],
+            f"doc_id long, media struct<{MEDIA_SCHEMA}>",
+        )
+        base_n = _cached_rdd_count(spark)
+        out = image_near_dup(df, max_hamming=6)
+        assert out.count() == 1
+        assert _cached_rdd_count(spark) <= base_n + 1
+        out.unpersist(blocking=True)
+        assert _cached_rdd_count(spark) == base_n
+
+    def test_decile_lift(self, spark):
+        from moz_datapipeline_spark.operators.analytics import decile_lift
+
+        df = spark.createDataFrame(
+            [
+                (i, float((i * 37) % 101) / 101.0, int((i * 7) % 3 == 0))
+                for i in range(400)
+            ],
+            "id long, score double, label int",
+        )
+        base = _cached_rdd_count(spark)
+        out = decile_lift(df, "score", "label", tiebreak_cols=["id"])
+        assert out.count() == 10
+        assert _cached_rdd_count(spark) <= base + 1
+        out.unpersist(blocking=True)
+        assert _cached_rdd_count(spark) == base
+
+    def test_lorenz_curve(self, spark):
+        from moz_datapipeline_spark.operators.analytics import lorenz_curve
+
+        df = spark.createDataFrame(
+            [(float((i * 13) % 29),) for i in range(300)], "v double"
+        )
+        base = _cached_rdd_count(spark)
+        out = lorenz_curve(df, "v", n_points=10)
+        assert out.count() == 10
+        assert _cached_rdd_count(spark) <= base + 1
+        out.unpersist(blocking=True)
+        assert _cached_rdd_count(spark) == base
+
+
+@pytest.mark.usefixtures("clean_storage")
+def test_checkpoint_sever_fallback_is_released(spark, monkeypatch):
+    """When the zero-copy rebuild is unavailable, checkpoint_sever falls
+    back to ``createDataFrame(cp.rdd, schema)`` — and that frame must
+    still carry the handle sever_release frees."""
+    import builtins
+
+    from moz_datapipeline_spark import iterate
+
+    real_import = builtins.__import__
+
+    def no_classic_dataframe(name, globals=None, *args, **kwargs):
+        if (
+            name == "pyspark.sql.classic.dataframe"
+            and (globals or {}).get("__name__") == iterate.__name__
+        ):
+            raise ImportError("forced fallback")
+        return real_import(name, globals, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "__import__", no_classic_dataframe)
+    base = _cached_rdd_count(spark)
+    out = iterate.checkpoint_sever(spark.range(100))
+    monkeypatch.undo()
+    assert out.count() == 100
+    assert _cached_rdd_count(spark) == base + 1
+    iterate.sever_release(out, blocking=True)
+    assert _cached_rdd_count(spark) == base

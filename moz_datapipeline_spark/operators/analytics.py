@@ -16,8 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from moz_datapipeline_spark.iterate import checkpoint_sever, owned
+from moz_datapipeline_spark.iterate import owned
 from moz_datapipeline_spark.localresult import literal_frame
+from moz_datapipeline_spark.operators.ranges import prefix_scan
 
 NS_PER_DAY = 86_400_000_000_000
 
@@ -988,10 +989,9 @@ def rfm_segments(
     edge").  ``segment`` is the concatenated "421"-style code.
 
     Scores are NTILE buckets over ALL customers — but never via the
-    global-window single-partition trap: each metric gets a two-phase
-    distributed rank (``ranges.global_rank`` — range partition, local
-    row_number, broadcast prefix bases) and the tile comes from the
-    exact SQL NTILE arithmetic on (rank, n): base = n div q, the first
+    global-window single-partition trap: each metric gets a
+    ``ranges.global_rank`` and the tile comes from the exact SQL NTILE
+    arithmetic on (rank, n): base = n div q, the first
     n mod q buckets take one extra row.  Recency ranks ascending
     (most recent = rank 1), frequency/monetary descending; every
     ordering ends in the customer key, so ties are total and the
@@ -1001,9 +1001,10 @@ def rfm_segments(
     Plan: one per-customer hash aggregate (map-side combined), one
     1-row max-date broadcast, three range exchanges over the
     |customers| rollup, one 1-row count broadcast for the tile
-    arithmetic.  Each ``global_rank`` call pins its range-partitioned
-    frame per that operator's cache contract (released when the
-    returned frame is).
+    arithmetic.  Each rank is a ``ranges.prefix_scan``; each scan's
+    checkpoint holds every column the next rank needs, so the first two
+    are released once the third is built and the returned frame owns
+    the last.
     """
     from moz_datapipeline_spark.operators.ranges import global_rank
 
@@ -1035,17 +1036,22 @@ def rfm_segments(
     )
     n_row = per.agg(F.count(F.lit(1)).alias("_n"))
 
-    s = global_rank(
+    kr = global_rank(
         per, "recency_days", ["customer"], ascending=True,
         with_percent=False,
-    ).withColumnRenamed("rank", "_kr")
-    s = global_rank(
-        s, "frequency", ["customer"], ascending=False, with_percent=False
-    ).withColumnRenamed("rank", "_kf")
-    s = global_rank(
-        s, "monetary", ["customer"], ascending=False, with_percent=False
-    ).withColumnRenamed("rank", "_km")
-    s = s.crossJoin(F.broadcast(n_row))
+    )
+    kf = global_rank(
+        kr.withColumnRenamed("rank", "_kr"), "frequency", ["customer"],
+        ascending=False, with_percent=False,
+    )
+    km = global_rank(
+        kf.withColumnRenamed("rank", "_kf"), "monetary", ["customer"],
+        ascending=False, with_percent=False,
+    )
+    # superseded: km's severed checkpoint already holds _kr and _kf
+    kr.unpersist()
+    kf.unpersist()
+    s = km.withColumnRenamed("rank", "_km").crossJoin(F.broadcast(n_row))
 
     q = F.lit(int(n_tiles))
     base = F.expr("_n div " + str(int(n_tiles)))
@@ -1070,7 +1076,7 @@ def rfm_segments(
         .withColumn("f", score("_kf"))
         .withColumn("m", score("_km"))
     )
-    return scored.select(
+    out = scored.select(
         "customer",
         "recency_days",
         "frequency",
@@ -1084,6 +1090,7 @@ def rfm_segments(
             F.col("m").cast("string"),
         ).alias("segment"),
     )
+    return owned(out, km)
 
 
 def markov_transitions(
@@ -1313,7 +1320,7 @@ def gini_concentration(
     NULL gini (the coefficient is undefined there); NULLs drop.
 
     Plan: per-key sums fold first (map-side combined), then the rank
-    comes from the two-phase distributed ``global_rank`` — never a
+    comes from ``ranges.global_rank`` (a ``prefix_scan``) — never a
     global window sort — and one final 1-row aggregate.  The rank·x
     sum is exact integer-weighted double math; ties rank by the key,
     which leaves Σ i·x_(i) unchanged within a tie run (equal x).
@@ -1340,11 +1347,12 @@ def gini_concentration(
         (F.lit(2.0) * F.col("_rx")) / (n * F.col("total"))
         - (n + 1.0) / n,
     )
-    return folded.select(
+    out = folded.select(
         F.col("n").cast("long").alias("n"),
         F.expr("floor(total * 100 + 0.5) / 100").alias("total"),
         F.when(F.col("_minx") >= 0, F.round(gini, 6)).alias("gini"),
     )
+    return owned(out, ranked)
 
 
 def roc_auc(
@@ -1364,16 +1372,9 @@ def roc_auc(
     positives or no negatives) yields NULL auc.
 
     Scale shape: the rollup is one map-side-combined hash aggregate;
-    the prefix sum over it is the two-phase distributed scan
-    (``global_rank``/``peak_concurrency`` family — range partition,
-    local prefix, broadcast exclusive bases), never a global window:
-    with continuous scores the rollup is row-sized and a
+    the prefix sum over it is ``ranges.prefix_scan``, never a global
+    window: with continuous scores the rollup is row-sized and a
     single-partition sort would be the plan that never finishes.
-
-    Cache contract: same as ``global_rank`` — the range partitioning
-    pins one rollup-sized checkpoint (the counts branch and the prefix
-    branch must observe the same sampled boundaries), owned by the
-    returned frame (``tests/test_cache_contract``).
     """
     y = F.col(label_col).cast("int")
     s = F.col(score_col).cast("double")
@@ -1385,37 +1386,11 @@ def roc_auc(
             (F.count(F.lit(1)) - F.sum(y)).alias("_nn"),
         )
     )
-    ranged = per.repartitionByRange(F.col("_s").asc()).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(F.col("_s").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = checkpoint_sever(
-        ranged.withColumn(
-            "_below_local", F.coalesce(F.sum("_nn").over(lw), F.lit(0))
-        )
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.sum("_nn").alias("_tot"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_tot").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_pid", "_base")
-    )
-    staged = local.join(F.broadcast(bases), "_pid").withColumn(
-        "_below", F.col("_below_local") + F.col("_base")
+    staged = prefix_scan(
+        per,
+        [F.col("_s").asc()],
+        {"_below": ("sum", F.col("_nn"))},
+        exclusive=True,
     )
     folded = staged.agg(
         F.sum("_np").cast("long").alias("n_pos"),
@@ -1433,7 +1408,7 @@ def roc_auc(
         / (F.col("n_pos").cast("double") * F.col("n_neg").cast("double")),
     )
     out = folded.select("n_pos", "n_neg", F.round(auc, 6).alias("auc"))
-    return owned(out, local)
+    return owned(out, staged)
 
 
 def decile_lift(
@@ -1451,9 +1426,9 @@ def decile_lift(
     standard "is the model worth deploying" readout: a useful score
     front-loads capture into decile 1.
 
-    The ranking is the two-phase distributed rank (``global_rank``) +
-    exact NTILE arithmetic on (rank, n) — the ``rfm_segments`` idiom,
-    never a global ntile window.  ``tiebreak_cols`` must make the
+    The ranking is ``ranges.global_rank`` + exact NTILE arithmetic on
+    (rank, n) — the ``rfm_segments`` idiom, never a global ntile
+    window.  ``tiebreak_cols`` must make the
     order total (ties across a tile edge are otherwise
     partition-lottery); NULL scores/labels drop.
 
@@ -1537,78 +1512,52 @@ def spearman_corr(
     without Pearson's linearity assumption, robust to any monotone
     transform of either axis.
 
-    Rank plan (per column): one hash aggregate to the distinct-value
-    rollup, then the two-phase distributed prefix sum over it
-    (``roc_auc`` family — range partition, local prefix, broadcast
-    exclusive bases; NEVER a data-sized global window): the average
-    rank of a tied value is ``below + (cnt + 1)/2`` where ``below`` is
-    the prefix count of strictly smaller values.  Ranks join back on
-    the value (two shuffle equi-joins), and rho comes from one final
-    sums aggregate.
+    Rank plan: one hash aggregate per column to its distinct-value
+    rollup, both rollups tagged by axis into one ``ranges.prefix_scan``
+    with ``by`` the axis (NEVER a data-sized global window): the
+    average rank of a tied value is ``below + (cnt + 1)/2`` where
+    ``below`` is the exclusive prefix count of strictly smaller values.
+    Ranks join back on the value (two shuffle equi-joins), and rho
+    comes from one final sums aggregate.
 
     Determinism: average ranks are exact half-integers, so every sum
     (Σr, Σr², Σrxry) is exact in double up to ~2^53 — the fold is
     order-independent and hash-matches any engine, unlike a
     moment-based ``corr`` over floats.
-
-    Cache contract: two range partitionings pin one rollup-sized cache
-    each for the returned frame's lifetime (the ``global_rank`` lazy
-    default).
     """
-
-    def _avg_ranks(base: DataFrame, col: str, out_name: str) -> DataFrame:
-        per = base.groupBy(F.col(col).alias("_val")).agg(
-            F.count(F.lit(1)).alias("_cnt")
-        )
-        ranged = per.repartitionByRange(F.col("_val").asc()).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-        lw = (
-            Window.partitionBy("_pid")
-            .orderBy(F.col("_val").asc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        local = checkpoint_sever(
-            ranged.withColumn(
-                "_below_local",
-                F.coalesce(F.sum("_cnt").over(lw), F.lit(0)),
-            )
-        )
-        bases = (
-            local.groupBy("_pid")
-            .agg(F.sum("_cnt").alias("_tot"))
-            .withColumn(
-                "_base",
-                F.coalesce(
-                    F.sum("_tot").over(
-                        Window.orderBy("_pid").rowsBetween(
-                            Window.unboundedPreceding, -1
-                        )
-                    ),
-                    F.lit(0),
-                ),
-            )
-            .select("_pid", "_base")
-        )
-        return (
-            local.join(F.broadcast(bases), "_pid")
-            .select(
-                F.col("_val").alias(col),
-                (
-                    (F.col("_below_local") + F.col("_base")).cast("double")
-                    + (F.col("_cnt").cast("double") + 1.0) / 2.0
-                ).alias(out_name),
-            )
-        )
-
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
     base = df.filter(x.isNotNull() & y.isNotNull()).select(
         x.alias("_x"), y.alias("_y")
     )
-    rx = _avg_ranks(base, "_x", "_rx")
-    ry = _avg_ranks(base, "_y", "_ry")
-    ranked = base.join(rx, "_x").join(ry, "_y")
+
+    def rollup(col: str, axis: int) -> DataFrame:
+        return (
+            base.groupBy(F.col(col).alias("_val"))
+            .agg(F.count(F.lit(1)).alias("_cnt"))
+            .withColumn("_axis", F.lit(axis))
+        )
+
+    scan = prefix_scan(
+        rollup("_x", 0).unionByName(rollup("_y", 1)),
+        [F.col("_val").asc()],
+        {"_below": ("sum", F.col("_cnt"))},
+        by=["_axis"],
+        exclusive=True,
+    )
+    avg_rank = (
+        F.col("_below").cast("double")
+        + (F.col("_cnt").cast("double") + 1.0) / 2.0
+    )
+
+    def ranks(axis: int, col: str, out_name: str) -> DataFrame:
+        return scan.filter(F.col("_axis") == axis).select(
+            F.col("_val").alias(col), avg_rank.alias(out_name)
+        )
+
+    ranked = base.join(ranks(0, "_x", "_rx"), "_x").join(
+        ranks(1, "_y", "_ry"), "_y"
+    )
     folded = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("_rx").alias("_sx"),
@@ -1625,7 +1574,7 @@ def spearman_corr(
         (F.col("n") > 1) & (vx > 0) & (vy > 0),
         cov / F.sqrt(vx * vy),
     )
-    return folded.select("n", F.round(rho, 6).alias("rho"))
+    return owned(folded.select("n", F.round(rho, 6).alias("rho")), scan)
 
 
 def cramers_v(
@@ -2334,7 +2283,7 @@ def lorenz_curve(
     summarizes to one number (the curve shows WHERE the concentration
     lives: a whale-dominated tail vs a starving middle).
 
-    The population split is the two-phase distributed rank + exact
+    The population split is ``ranges.global_rank`` + exact
     NTILE arithmetic (the ``rfm_segments`` idiom — never a global
     ntile window); per-tile sums hash-aggregate, and the ≤
     ``n_points``-row cumulative fold runs over the tile rollup.
@@ -2564,12 +2513,10 @@ def abc_analysis(
     "80% of revenue is 20% of SKUs": stock A tightly, spot-check B,
     automate C.
 
-    The running share is the two-phase distributed prefix sum over
-    the per-key rollup in (value DESC, key ASC) order — range
-    partition, local running sums, broadcast exclusive bases (the
-    ``pr_curve`` idiom; never a global single-partition window, which
-    at a 10⁸-SKU catalog is the sort that never finishes).  Negative
-    totals raise (cumulative share loses monotonicity — the
+    The running share is a ``ranges.prefix_scan`` sum over the
+    per-key rollup in (value DESC, key ASC) order (never a global
+    single-partition window, which at a 10⁸-SKU catalog is the sort
+    that never finishes).  Negative totals raise (cumulative share loses monotonicity — the
     ``lorenz_curve`` contract).
     """
     x = F.col(value_col).cast("double")
@@ -2580,40 +2527,14 @@ def abc_analysis(
         raise ValueError(
             "abc_analysis: negative totals break share monotonicity"
         )
-    ranged = per.repartitionByRange(
-        F.col("value").desc(), F.col("key").asc()
-    ).withColumn("_pid", F.spark_partition_id())
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(F.col("value").desc(), F.col("key").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
+    staged = prefix_scan(
+        per,
+        [F.col("value").desc(), F.col("key").asc()],
+        {"_cum": ("sum", F.col("value"))},
+        totals={"_t": ("sum", F.col("value"))},
     )
-    local = checkpoint_sever(
-        ranged.withColumn("_cum_local", F.sum("value").over(lw))
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.sum("value").alias("_tot"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_tot").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0.0),
-            ),
-        )
-        .withColumn("_t", F.sum("_tot").over(Window.partitionBy()))
-        .select("_pid", "_base", "_t")
-    )
-    staged = local.join(F.broadcast(bases), "_pid")
-    share = F.when(
-        F.col("_t") > 0,
-        (F.col("_cum_local") + F.col("_base")) / F.col("_t"),
-    )
-    return staged.select(
+    share = F.when(F.col("_t") > 0, F.col("_cum") / F.col("_t"))
+    out = staged.select(
         F.col("key").alias(key_col),
         F.round("value", 6).alias("value"),
         F.round(share, 6).alias("cum_share"),
@@ -2622,6 +2543,7 @@ def abc_analysis(
         .otherwise(F.lit("C"))
         .alias("abc_class"),
     )
+    return owned(out, staged)
 
 
 def group_mode(
@@ -2905,9 +2827,8 @@ def mann_whitney_u(
     over the distinct-value rollup (the ``ks_test`` scheme):
 
     1. one union + hash aggregate → per-value side counts;
-    2. two-phase global prefix scan (range exchange + per-partition
-       cumsums + broadcast bases) for cumulative counts — never a
-       single-task window;
+    2. ``ranges.prefix_scan`` for the count of smaller values — never
+       a single-task window;
     3. one 1-row fold: rank sum, tie term Σ(t³−t), then U/z/p
        arithmetic on the single row.
     """
@@ -2926,44 +2847,22 @@ def mann_whitney_u(
         F.sum("_ia").cast("long").alias("_ca"),
         F.sum("_ib").cast("long").alias("_cb"),
     )
-    ranged = per_v.repartitionByRange(F.col("v").asc()).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = (
-        ranged.withColumn(
-            "_lt", F.sum(F.col("_ca") + F.col("_cb")).over(lw)
-        )
-    )
-    pw = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.sum(F.col("_ca") + F.col("_cb")).alias("_tt"))
-        .withColumn("_bt", F.coalesce(F.sum("_tt").over(pw), F.lit(0)))
-        .select("_pid", "_bt")
+    scan = prefix_scan(
+        per_v,
+        [F.col("v").asc()],
+        {"_before": ("sum", F.col("_ca") + F.col("_cb"))},
+        exclusive=True,
     )
     t_v = (F.col("_ca") + F.col("_cb")).cast("double")
-    # cumulative count BEFORE v + average rank of v's tie block
-    before = (F.col("_bt") + F.col("_lt")).cast("double") - t_v
-    avg_rank = before + (t_v + F.lit(1.0)) / F.lit(2.0)
-    folded = (
-        local.join(F.broadcast(bases), "_pid")
-        .agg(
-            F.coalesce(F.sum("_ca"), F.lit(0))
-            .cast("long")
-            .alias("n_a"),
-            F.coalesce(F.sum("_cb"), F.lit(0))
-            .cast("long")
-            .alias("n_b"),
-            F.sum(F.col("_ca").cast("double") * avg_rank).alias("_ra"),
-            F.sum(t_v * t_v * t_v - t_v).alias("_ties"),
-        )
+    # count BEFORE v + average rank of v's tie block
+    avg_rank = F.col("_before").cast("double") + (
+        t_v + F.lit(1.0)
+    ) / F.lit(2.0)
+    folded = scan.agg(
+        F.coalesce(F.sum("_ca"), F.lit(0)).cast("long").alias("n_a"),
+        F.coalesce(F.sum("_cb"), F.lit(0)).cast("long").alias("n_b"),
+        F.sum(F.col("_ca").cast("double") * avg_rank).alias("_ra"),
+        F.sum(t_v * t_v * t_v - t_v).alias("_ties"),
     )
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
@@ -2991,7 +2890,7 @@ def mann_whitney_u(
         + F.lit(1.061405429) * (t**5)
     )
     p = F.when(z.isNotNull(), poly * F.exp(-az * az))
-    return folded.select(
+    out = folded.select(
         "n_a",
         "n_b",
         F.when(
@@ -3006,6 +2905,7 @@ def mann_whitney_u(
             "significant"
         ),
     )
+    return owned(out, scan)
 
 
 def sequence_ngrams(
@@ -3981,9 +3881,8 @@ def kruskal_wallis(
 
     1. one (group, value) hash aggregate over the data (map-side
        combined) — the only data-sized pass;
-    2. value rollup + two-phase global prefix scan (range exchange,
-       per-partition cumsums, broadcast bases) → tie-averaged rank
-       per distinct value — never a single-task window;
+    2. value rollup + ``ranges.prefix_scan`` → tie-averaged rank per
+       distinct value — never a single-task window;
     3. rank join back on value (rollup-sized), per-group rank-sum
        fold, then 1-row H/p arithmetic.
     """
@@ -3995,31 +3894,17 @@ def kruskal_wallis(
         F.count(F.lit(1)).cast("long").alias("_ng")
     )
     per_v = per_gv.groupBy("_v").agg(F.sum("_ng").alias("_nv"))
-    ranged = per_v.repartitionByRange(F.col("_v").asc()).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = ranged.withColumn("_lt", F.sum("_nv").over(lw))
-    pw = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.sum("_nv").alias("_tt"))
-        .withColumn("_bt", F.coalesce(F.sum("_tt").over(pw), F.lit(0)))
-        .select("_pid", "_bt")
+    scan = prefix_scan(
+        per_v,
+        [F.col("_v").asc()],
+        {"_before": ("sum", F.col("_nv"))},
+        exclusive=True,
     )
     t_v = F.col("_nv").cast("double")
-    avg_rank = (
-        (F.col("_bt") + F.col("_lt")).cast("double")
-        - t_v
-        + (t_v + F.lit(1.0)) / F.lit(2.0)
-    )
-    ranks = local.join(F.broadcast(bases), "_pid").select(
+    avg_rank = F.col("_before").cast("double") + (
+        t_v + F.lit(1.0)
+    ) / F.lit(2.0)
+    ranks = scan.select(
         "_v",
         avg_rank.alias("_r"),
         (t_v * t_v * t_v - t_v).alias("_tie"),
@@ -4080,7 +3965,7 @@ def kruskal_wallis(
             F.lit(1.0) - erfc / F.lit(2.0)
         ),
     )
-    return folded.select(
+    out = folded.select(
         "k_groups",
         nn.cast("long").alias("n_rows"),
         F.round(h, 6).alias("h_stat"),
@@ -4088,6 +3973,7 @@ def kruskal_wallis(
         F.round(p, 6).alias("p_value"),
         F.when(p.isNotNull(), p < F.lit(0.05)).alias("significant"),
     )
+    return owned(out, scan)
 
 
 def ridge_fit(
@@ -5032,12 +4918,10 @@ def wasserstein_1d(
     ``ks_test`` scheme plus one value-gap term):
 
     1. one union + (value) hash aggregate → per-value side counts;
-    2. two-phase global prefix scan (range exchange, per-partition
-       cumsums, broadcast bases) → both CDFs at each value;
-    3. the NEXT distinct value comes from a partition-local ``lead``
-       plus a broadcast |partitions|-row first-value table for the
-       partition boundaries — never a global single-task window;
-    4. one 1-row fold of Σ |ΔF|·gap.
+    2. one exclusive ``ranges.prefix_scan`` → both CDFs just below
+       each value, and the previous distinct value as the running max
+       of ``v`` — never a global single-task window;
+    3. one 1-row fold of Σ |F_a − F_b|·(v − prev_v).
     """
     va = a.select(F.col(column).cast("double").alias("v")).filter(
         F.col("v").isNotNull()
@@ -5054,74 +4938,40 @@ def wasserstein_1d(
         F.sum("_ia").cast("long").alias("_ca"),
         F.sum("_ib").cast("long").alias("_cb"),
     )
-    ranged = per_v.repartitionByRange(F.col("v").asc()).withColumn(
-        "_pid", F.spark_partition_id()
+    scan = prefix_scan(
+        per_v,
+        [F.col("v").asc()],
+        {
+            "_fa": ("sum", F.col("_ca")),
+            "_fb": ("sum", F.col("_cb")),
+            "_prev": ("max", F.col("v")),
+        },
+        exclusive=True,
+        totals={"_na": ("sum", F.col("_ca")), "_nb": ("sum", F.col("_cb"))},
     )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = ranged.select(
-        "_pid",
-        "v",
-        "_ca",
-        "_cb",
-        F.sum("_ca").over(lw).alias("_la"),
-        F.sum("_cb").over(lw).alias("_lb"),
-        F.lead("v").over(
-            Window.partitionBy("_pid").orderBy("v")
-        ).alias("_nv"),
-    )
-    pw = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(
-            F.sum("_ca").alias("_ta"),
-            F.sum("_cb").alias("_tb"),
-            F.min("v").alias("_fv"),
-        )
-        .select(
-            "_pid",
-            F.coalesce(F.sum("_ta").over(pw), F.lit(0)).alias("_ba"),
-            F.coalesce(F.sum("_tb").over(pw), F.lit(0)).alias("_bb"),
-            # first value of the NEXT non-empty partition
-            F.lead("_fv").over(Window.orderBy("_pid")).alias("_nextv"),
-        )
-    )
-    tot = per_v.agg(
-        F.sum("_ca").cast("double").alias("_na"),
-        F.sum("_cb").cast("double").alias("_nb"),
-    )
-    joined = local.join(F.broadcast(bases), "_pid").crossJoin(
-        F.broadcast(tot)
-    )
+    na = F.col("_na").cast("double")
+    nb = F.col("_nb").cast("double")
     # ANSI mode: guard the divisions — an empty side must yield a
     # NULL metric, not a divide-by-zero error
-    live = (F.col("_na") > 0) & (F.col("_nb") > 0)
-    fa = F.when(
-        live, (F.col("_ba") + F.col("_la")).cast("double") / F.col("_na")
-    )
-    fb = F.when(
-        live, (F.col("_bb") + F.col("_lb")).cast("double") / F.col("_nb")
-    )
-    gap = F.coalesce(F.col("_nv"), F.col("_nextv")) - F.col("v")
+    live = (na > 0) & (nb > 0)
+    fa = F.when(live, F.col("_fa").cast("double") / na)
+    fb = F.when(live, F.col("_fb").cast("double") / nb)
+    gap = F.col("v") - F.col("_prev")
     term = F.when(
         live & gap.isNotNull(), F.abs(fa - fb) * gap
     ).otherwise(F.lit(0.0))
-    folded = joined.agg(
-        F.max("_na").alias("_fna"),
-        F.max("_nb").alias("_fnb"),
+    folded = scan.agg(
+        F.max(na).alias("_fna"),
+        F.max(nb).alias("_fnb"),
         F.coalesce(F.sum(term), F.lit(0.0)).alias("_w"),
     )
     ok = (F.col("_fna") > 0) & (F.col("_fnb") > 0)
-    return folded.select(
+    out = folded.select(
         F.col("_fna").cast("long").alias("n_a"),
         F.col("_fnb").cast("long").alias("n_b"),
         F.when(ok, F.round(F.col("_w"), 6)).alias("wasserstein"),
     )
+    return owned(out, scan)
 
 
 def js_divergence(

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever, owned
+from moz_datapipeline_spark.iterate import owned
+from moz_datapipeline_spark.operators.ranges import prefix_scan
 
 
 def tokens(text_col: Column | str) -> Column:
@@ -806,9 +807,9 @@ def negative_sample(
     position index — no RNG state, so reruns and the SQL oracle
     reproduce the identical pairs.
 
-    Plan shape: the dense 0..N-1 position index comes from the same
-    TWO-PHASE distributed prefix rank as ``pack_documents`` (never one
-    global window task); N rides along as a broadcast 1-row frame; each
+    Plan shape: the dense 0..N-1 position index is an exclusive
+    ``ranges.prefix_scan`` row number (never one global window task);
+    N rides along as a broadcast 1-row frame; each
     anchor explodes into ``k`` slots whose md5-derived position joins
     back against the index (one equi-join shuffle).  A hash that lands
     on the anchor itself shifts to the next position, so negatives are
@@ -816,41 +817,18 @@ def negative_sample(
     pairs.
 
     Returns (anchor_id, slot, negative_id); the returned frame owns
-    the severed position index (``iterate.owned``).
+    the position index (``iterate.owned``).
 
     Reference parity: extension operator (contrastive data prep);
     sampling-family sibling of ``weighted_sample``/``mixture_resample``.
     """
     if k < 1:
         raise ValueError("negative_sample: k must be >= 1")
-    ranged = df.select(F.col(id_col)).repartitionByRange(
-        F.col(id_col)
-    ).withColumn("_pid", F.spark_partition_id())
-    lw = Window.partitionBy("_pid").orderBy(id_col)
-    # checkpoint_sever, not .cache(): the result plan reads this frame
-    # (see ranges.global_rank — leak assert + eviction consistency)
-    local = checkpoint_sever(
-        ranged.withColumn("_lrank", F.row_number().over(lw).cast("long"))
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_cnt").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-        .select("_pid", "_base")
-    )
-    idx = local.join(F.broadcast(bases), "_pid").select(
-        F.col(id_col),
-        (F.col("_base") + F.col("_lrank") - 1).alias("_pos"),
+    idx = prefix_scan(
+        df.select(F.col(id_col)),
+        [F.col(id_col).asc()],
+        {"_pos": ("sum", F.lit(1))},
+        exclusive=True,
     )
     n_df = idx.agg(F.count(F.lit(1)).alias("_n"))
     anchors = (
@@ -891,7 +869,7 @@ def negative_sample(
         ),
         "_tpos",
     ).select("anchor_id", "slot", "negative_id")
-    return owned(out, local)
+    return owned(out, idx)
 
 
 def shard_corpus(

@@ -203,22 +203,24 @@ def sorted_neighborhood_pairs(
     pair volume is EXACTLY ``window`` per row (edges truncated) —
     linear, never quadratic, whatever the key skew.
 
-    Plan: one exact global rank (the two-phase distributed prefix
-    rank — no single-partition window), an explode of the ``window``
+    Plan: one exact ``ranges.global_rank`` (no single-partition
+    window), an explode of the ``window``
     forward offsets, and one equi join rank→rank+δ.  Verification
     (edit distance, field compare) is the caller's next stage, as in
     ``fuzzy_join``.
     """
     if window < 1:
         raise ValueError("sorted_neighborhood_pairs: window must be >= 1")
+    from moz_datapipeline_spark.iterate import owned
     from moz_datapipeline_spark.operators.ranges import global_rank
 
-    ranked = global_rank(
+    scan = global_rank(
         df.select(F.col(id_col), F.col(sort_col)),
         sort_col,
         [id_col],
         with_percent=False,
-    ).select(F.col(id_col), F.col("rank"))
+    )
+    ranked = scan.select(F.col(id_col), F.col("rank"))
     probes = ranked.select(
         F.col(id_col).alias("id_a"),
         F.col("rank").alias("rank_a"),
@@ -226,9 +228,10 @@ def sorted_neighborhood_pairs(
             F.sequence(F.col("rank") + 1, F.col("rank") + window)
         ).alias("rank_b"),
     )
-    return probes.join(
+    out = probes.join(
         ranked.select(
             F.col(id_col).alias("id_b"), F.col("rank").alias("rank_b")
         ),
         "rank_b",
     ).select("id_a", "id_b", "rank_a", "rank_b")
+    return owned(out, scan)

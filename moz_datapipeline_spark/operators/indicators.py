@@ -51,9 +51,10 @@ def indicator_from_prop(df: DataFrame, prop: str, id_col: str = "NAME") -> DataF
 
 
 def exact_kth_value(
-    df: DataFrame, col: str, k: int, local_threshold: int = 1_000_000
+    df: DataFrame, col: str, k: int, n: int, local_threshold: int = 1_000_000
 ) -> float:
-    """Exact k-th smallest (0-based) of a column, distributed.
+    """Exact k-th smallest (0-based) of a column of ``df``, whose row
+    count ``n`` the caller has already taken, distributed.
 
     Range-partition on the value (parallel sort), count per partition
     (tiny collect), locate the partition holding rank k driver-side,
@@ -61,41 +62,34 @@ def exact_kth_value(
     nothing funnels the full column through a single task, so this holds
     at any scale; only one partition's values are ever ranked.
     """
+    if k >= n:
+        raise IndexError(f"rank {k} out of range (n={n})")
     spark = df.sparkSession
     n_parts = max(2, spark.sparkContext.defaultParallelism)
     vals = df.select(F.col(col).alias("_v"))
     # small-input fast path: below ~1M values the value column fits on
     # the driver comfortably (8 MB) and a local selection beats three
     # Spark jobs; the distributed path takes over beyond that.
-    approx_n = vals.count()
-    if approx_n <= local_threshold:
+    if n <= local_threshold:
         import numpy as np
 
-        arr = np.fromiter(
-            (r["_v"] for r in vals.collect()), dtype=float, count=approx_n
-        )
-        if k >= len(arr):
-            raise IndexError(f"rank {k} out of range (n={len(arr)})")
+        arr = np.fromiter((r["_v"] for r in vals.collect()), dtype=float)
         return float(np.partition(arr, k)[k])
     ranged = vals.repartitionByRange(n_parts, F.col("_v"))
     # persist: the count job and the rank job must see the SAME range
     # boundaries (RangePartitioner samples, so a recompute may split
     # differently and invalidate the local rank)
     with_pid = ranged.withColumn("_pid", F.spark_partition_id()).persist()
-    counts = (
-        with_pid.groupBy("_pid").count().orderBy("_pid").collect()
-    )
-    acc = 0
-    target_pid, local_rank = None, None
-    for row in counts:
-        if acc + row["count"] > k:
-            target_pid, local_rank = row["_pid"], k - acc
-            break
-        acc += row["count"]
-    if target_pid is None:
-        raise IndexError(f"rank {k} out of range (n={acc})")
     w = Window.partitionBy("_pid").orderBy(F.col("_v"))
     try:
+        acc = 0
+        for pid, cnt in sorted(with_pid.groupBy("_pid").count().collect()):
+            if acc + cnt > k:
+                target_pid, local_rank = pid, k - acc
+                break
+            acc += cnt
+        else:
+            raise IndexError(f"rank {k} out of range (n={acc})")
         hit = (
             with_pid.filter(F.col("_pid") == target_pid)
             .withColumn("_rn", F.row_number().over(w) - 1)
@@ -128,7 +122,7 @@ def percentile_filter(
     if n == 0:
         return df
     target = int(round(percentile / 100.0 * (n - 1) + 1e-9))
-    threshold = exact_kth_value(vals, "_v", target)
+    threshold = exact_kth_value(vals, "_v", target, n)
     return df.filter(
         F.coalesce(F.col(value_col).cast("double"), F.lit(missing_value))
         >= F.lit(threshold)

@@ -10,7 +10,7 @@ Scale posture shared by the family: every metric folds through
 hash aggregates and PER-QUERY (or per-bin) windows — partitioned
 shuffles, never a global sort; the only broadcast frames are 1-row
 totals.  Rank-based global metrics (AUC, lift) live in
-``operators.analytics`` and ride the two-phase distributed rank.
+``operators.analytics`` and ride ``ranges.prefix_scan``.
 
 Reference parity: the reference pipeline (developmentseed/
 moz-datapipeline) stops at indicator aggregation; this family extends
@@ -22,8 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from moz_datapipeline_spark.iterate import checkpoint_sever
+from moz_datapipeline_spark.iterate import owned
 from moz_datapipeline_spark.localresult import literal_frame
+from moz_datapipeline_spark.operators.ranges import prefix_scan
 
 
 def classification_report(
@@ -317,10 +318,9 @@ def pr_curve(
 
     Scale shape (the ``roc_auc`` idiom): one hash aggregate to the
     per-distinct-score rollup ``(np, nn)``, then an INCLUSIVE
-    cumulative (tp, fp) in DESCENDING score order via the two-phase
-    distributed prefix sum — range partition, local running sums,
-    broadcast exclusive bases — never a global window over the
-    row-sized rollup.  Integer counts to the final divisions.
+    cumulative (tp, fp) in DESCENDING score order via
+    ``ranges.prefix_scan`` — never a global window over the row-sized
+    rollup.  Integer counts to the final divisions.
     """
     y = F.col(label_col).cast("int")
     s = F.col(score_col).cast("double")
@@ -332,59 +332,11 @@ def pr_curve(
             (F.count(F.lit(1)) - F.sum(y)).alias("_nn"),
         )
     )
-    ranged = per.repartitionByRange(F.col("score").desc()).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(F.col("score").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # materialize once via checkpoint_sever (not .cache(): the result
-    # plan reads this frame, so the operator could never unpersist and
-    # the bench's strict leak assert would fail it) — the totals branch
-    # and the final join must see the SAME sampled range partitioning
-    local = checkpoint_sever(
-        ranged.withColumn("_tp_local", F.sum("_np").over(lw)).withColumn(
-            "_fp_local", F.sum("_nn").over(lw)
-        )
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(
-            F.sum("_np").alias("_tnp"),
-            F.sum("_nn").alias("_tnn"),
-        )
-        .withColumn(
-            "_btp",
-            F.coalesce(
-                F.sum("_tnp").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .withColumn(
-            "_bfp",
-            F.coalesce(
-                F.sum("_tnn").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .withColumn("_pos", F.sum("_tnp").over(Window.partitionBy()))
-        .select("_pid", "_btp", "_bfp", "_pos")
-    )
-    staged = local.join(F.broadcast(bases), "_pid").select(
-        "score",
-        (F.col("_tp_local") + F.col("_btp")).cast("long").alias("tp"),
-        (F.col("_fp_local") + F.col("_bfp")).cast("long").alias("fp"),
-        F.col("_pos").cast("long").alias("_p"),
+    scan = prefix_scan(
+        per,
+        [F.col("score").desc()],
+        {"tp": ("sum", F.col("_np")), "fp": ("sum", F.col("_nn"))},
+        totals={"_p": ("sum", F.col("_np"))},
     )
     prec = F.col("tp").cast("double") / (F.col("tp") + F.col("fp")).cast(
         "double"
@@ -395,7 +347,7 @@ def pr_curve(
     f1 = F.when(
         rec.isNotNull() & (prec + rec > 0), 2.0 * prec * rec / (prec + rec)
     )
-    return staged.select(
+    out = scan.select(
         "score",
         "tp",
         "fp",
@@ -403,6 +355,7 @@ def pr_curve(
         F.round(rec, 6).alias("recall"),
         F.round(f1, 6).alias("f1"),
     )
+    return owned(out, scan)
 
 
 def rbo_overlap(
@@ -973,9 +926,8 @@ def uplift_bins(
     NULL score/treatment/outcome rows are excluded.  Empty sides
     yield NULL rates, never division errors.
 
-    Plan: one (score, treatment) hash aggregate over the data; the
-    two-phase global prefix scan (range exchange + per-partition
-    cumsums + broadcast bases) assigns bins on the ROLLUP; one final
+    Plan: one (score, treatment) hash aggregate over the data;
+    ``ranges.prefix_scan`` assigns bins on the ROLLUP; one final
     ≤n_bins-row aggregate.  Never a single-task global window.
     """
     if n_bins < 2:
@@ -997,43 +949,24 @@ def uplift_bins(
         .cast("long")
         .alias("_cc"),
     )
-    ranged = per_v.repartitionByRange(F.col("_v").asc()).withColumn(
-        "_pid", F.spark_partition_id()
+    scan = prefix_scan(
+        per_v,
+        [F.col("_v").asc()],
+        {"_before": ("sum", F.col("_n"))},
+        exclusive=True,
+        totals={"_total": ("sum", F.col("_n"))},
     )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = ranged.withColumn("_lt", F.sum("_n").over(lw))
-    pw = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.sum("_n").alias("_tt"))
-        .withColumn("_bt", F.coalesce(F.sum("_tt").over(pw), F.lit(0)))
-        .select("_pid", "_bt")
-    )
-    tot = per_v.agg(F.sum("_n").alias("_total"))
-    before = F.col("_bt") + F.col("_lt") - F.col("_n")
-    binned = (
-        local.join(F.broadcast(bases), "_pid")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.least(
-                F.floor(
-                    before * F.lit(int(n_bins)) / F.col("_total")
-                ),
-                F.lit(int(n_bins) - 1),
-            )
-            .cast("int")
-            .alias("bin"),
-            "_n",
-            "_nt",
-            "_ct",
-            "_cc",
+    binned = scan.select(
+        F.least(
+            F.floor(F.col("_before") * F.lit(int(n_bins)) / F.col("_total")),
+            F.lit(int(n_bins) - 1),
         )
+        .cast("int")
+        .alias("bin"),
+        "_n",
+        "_nt",
+        "_ct",
+        "_cc",
     )
     out = binned.groupBy("bin").agg(
         F.sum("_nt").cast("long").alias("n_treat"),
@@ -1049,7 +982,7 @@ def uplift_bins(
         F.col("n_ctrl") > 0,
         F.col("conv_ctrl").cast("double") / F.col("n_ctrl"),
     )
-    return out.select(
+    result = out.select(
         "bin",
         "n_treat",
         "n_ctrl",
@@ -1059,6 +992,7 @@ def uplift_bins(
         F.round(rc, 6).alias("rate_ctrl"),
         F.round(rt - rc, 6).alias("uplift"),
     )
+    return owned(result, scan)
 
 
 def brier_decomposition(
@@ -1170,7 +1104,7 @@ def conformal_intervals(
             f"{k}-th order statistic); add calibration data or relax "
             "alpha"
         )
-    q = float(exact_kth_value(res, "_r", k - 1))  # 0-based rank
+    q = float(exact_kth_value(res, "_r", k - 1, n))  # 0-based rank
     yhat = F.col(yhat_col).cast("double")
     return predictions.select(
         "*",

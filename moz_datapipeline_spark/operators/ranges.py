@@ -16,7 +16,9 @@ Shuffle volume is |points| + Σ interval spans/width — tunable via
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from moz_datapipeline_spark.iterate import checkpoint_sever, owned
@@ -54,6 +56,126 @@ def bucketed_range_join(
     ).drop("_bucket")
 
 
+_SCAN_AGG = {"sum": F.sum, "min": F.min, "max": F.max}
+_SCAN_MERGE = {
+    "sum": lambda base, local: F.coalesce(base, F.lit(0)) + local,
+    "min": F.least,
+    "max": F.greatest,
+}
+
+
+def prefix_scan(
+    df: DataFrame,
+    order: list[Column],
+    running: dict[str, tuple[str, Column]],
+    *,
+    by: Sequence[str] = (),
+    exclusive: bool = False,
+    totals: dict[str, tuple[str, Column]] | None = None,
+) -> DataFrame:
+    """Distributed prefix scan: ``df`` plus one column per ``running``
+    entry holding the running ``"sum"``, ``"min"`` or ``"max"`` of its
+    value over the rows up to and including the current one in
+    ``order`` (strictly before it with ``exclusive=True``; an empty
+    sum is 0, an empty min/max NULL), per ``by`` group.  A row number
+    is ``("sum", F.lit(1))``.  ``totals`` adds the same aggregates over
+    the whole ``by`` group (a count, a grand total) at no extra job.
+    ``order`` plus ``by`` must make the order total where the running
+    value depends on the order of tied rows.
+
+    ``F.sum(...).over(Window.orderBy(...))`` funnels the whole frame
+    through one task — at 100 TB, the sort that never finishes.  This
+    is the two-phase scan (Blelloch, *Prefix Sums and Their
+    Applications*, 1990):
+
+    1. one range exchange on ``(*by, *order)``, then a running window
+       local to each (partition, group);
+    2. each (partition, group)'s aggregate, folded into an EXCLUSIVE
+       base over the partitions before it (a window over
+       |partitions × groups| rows);
+    3. the bases broadcast-join back and merge with the local values.
+
+    Consistency: the bases branch and the join branch must observe the
+    SAME range boundaries, and ``repartitionByRange`` samples them, so
+    a recompute may deal rows differently and mismatch a row's
+    partition against its base.  Exchange reuse usually hides that,
+    but a user can switch it off (``spark.sql.exchange.reuse``), and a
+    ``cache()`` block can be evicted into exactly that recompute (and,
+    read by the result plan, can never be released by the operator).
+    So the local stage is materialized ONCE with
+    ``iterate.checkpoint_sever`` and the returned frame owns that
+    checkpoint (``iterate.owned``): the caller's ``unpersist`` releases
+    it.  Cost: the range exchange (plus the hash exchange on the
+    partition id that the local window requires), one checkpoint, one
+    |partitions × groups|-row broadcast.
+    """
+    from pyspark.sql import Window
+
+    by = list(by)
+    totals = totals or {}
+    keys = ["_pid", *by]
+    ranged = df.repartitionByRange(
+        *[F.col(c) for c in by], *order
+    ).withColumn("_pid", F.spark_partition_id())
+    lw = (
+        Window.partitionBy(*keys)
+        .orderBy(*order)
+        .rowsBetween(
+            Window.unboundedPreceding, -1 if exclusive else Window.currentRow
+        )
+    )
+    local = checkpoint_sever(
+        ranged.select(
+            "*",
+            *[
+                _SCAN_AGG[op](v).over(lw).alias(f"_scan_l{i}")
+                for i, (op, v) in enumerate(running.values())
+            ],
+        )
+    )
+    pw = (
+        Window.partitionBy(*by)
+        .orderBy("_pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    bases = (
+        local.groupBy(*keys)
+        .agg(
+            *[
+                _SCAN_AGG[op](v).alias(f"_scan_p{i}")
+                for i, (op, v) in enumerate(running.values())
+            ],
+            *[
+                _SCAN_AGG[op](v).alias(f"_scan_t{i}")
+                for i, (op, v) in enumerate(totals.values())
+            ],
+        )
+        .select(
+            *keys,
+            *[
+                _SCAN_AGG[op](f"_scan_p{i}").over(pw).alias(f"_scan_b{i}")
+                for i, (op, _) in enumerate(running.values())
+            ],
+            *[
+                _SCAN_AGG[op](f"_scan_t{i}")
+                .over(Window.partitionBy(*by))
+                .alias(name)
+                for i, (name, (op, _)) in enumerate(totals.items())
+            ],
+        )
+    )
+    merged = []
+    for i, (name, (op, _)) in enumerate(running.items()):
+        lv = F.col(f"_scan_l{i}")
+        if exclusive and op == "sum":
+            lv = F.coalesce(lv, F.lit(0))
+        merged.append(_SCAN_MERGE[op](F.col(f"_scan_b{i}"), lv).alias(name))
+    out = local.join(F.broadcast(bases), keys).select(
+        *df.columns, *merged, *totals
+    )
+    return owned(out, local)
+
+
 def global_rank(
     df: DataFrame,
     order_col: str,
@@ -63,81 +185,37 @@ def global_rank(
 ) -> DataFrame:
     """Exact global rank (1-based ``row_number`` under the total order
     ``(order_col, *tiebreak_cols)`` asc) plus the exact CDF
-    ``percent_rank = (rank − 1)/(n − 1)`` — WITHOUT the global-window
-    single-partition trap.
-
-    ``F.row_number().over(Window.orderBy(...))`` funnels the entire
-    dataset through ONE task; at 100 TB that is the sort that never
-    finishes.  This is the two-phase distributed prefix rank
-    (``text.batch_by_length`` / ``pack_documents`` family): range-
-    partition by the order key, per-partition local ranks, broadcast
-    each partition's exclusive base count back, add.  Any range
-    boundary sampling yields the same ranks because the final rank
-    depends only on the total order.  One range exchange + one tiny
-    window over |partitions| rows.
+    ``percent_rank = (rank − 1)/(n − 1)``, as a ``prefix_scan`` row
+    number (never a single-task global window).  Any range boundary
+    sampling yields the same ranks because the final rank depends only
+    on the total order.
 
     ``tiebreak_cols`` must make the order total (unique) — ranks are
     otherwise partitioning-dependent for tied rows.
-
-    Materialization contract (r13): the range-partitioned dataset is
-    materialized ONCE via ``checkpoint_sever`` so the counts branch
-    and the final join observe the SAME sampled partitioning — exempt
-    localCheckpoint blocks owned by the returned frame
-    (``iterate.owned``), never a leakable ``cache()``.
     """
-    from pyspark.sql import Window
-
     if not tiebreak_cols:
         raise ValueError("global_rank: tiebreak_cols must make the order total")
     oc = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    tb = [F.col(c).asc() for c in tiebreak_cols]
-    ranged = df.repartitionByRange(oc, *tb).withColumn(
-        "_pid", F.spark_partition_id()
+    scan = prefix_scan(
+        df,
+        [oc, *[F.col(c).asc() for c in tiebreak_cols]],
+        {"rank": ("sum", F.lit(1))},
+        totals={"_n": ("sum", F.lit(1))} if with_percent else None,
     )
-    lw = Window.partitionBy("_pid").orderBy(oc, *tb)
-    # materialize ONCE via checkpoint_sever: the counts branch and the
-    # final join must observe the SAME sampled range partitioning (same
-    # rule as batch_by_length).  A .cache() here is read by the result
-    # plan, so the operator can never release it — the bench's strict
-    # leak assert fails exactly that; localCheckpoint blocks are the
-    # sanctioned exemption, and they cannot be silently evicted into an
-    # inconsistent recompute the way cache blocks can.
-    local = checkpoint_sever(
-        ranged.withColumn("_lrank", F.row_number().over(lw).cast("long"))
+    if not with_percent:
+        return scan
+    out = scan.withColumn(
+        "percent_rank",
+        F.when(
+            F.col("_n") > 1,
+            F.round(
+                (F.col("rank") - 1).cast("double")
+                / (F.col("_n") - 1).cast("double"),
+                6,
+            ),
+        ).otherwise(F.lit(0.0)),
     )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_cnt").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-        .withColumn("_n", F.sum("_cnt").over(Window.partitionBy()))
-        .select("_pid", "_base", "_n")
-    )
-    out = local.join(F.broadcast(bases), "_pid").withColumn(
-        "rank", F.col("_base") + F.col("_lrank")
-    )
-    if with_percent:
-        out = out.withColumn(
-            "percent_rank",
-            F.when(
-                F.col("_n") > 1,
-                F.round(
-                    (F.col("rank") - 1).cast("double")
-                    / (F.col("_n") - 1).cast("double"),
-                    6,
-                ),
-            ).otherwise(F.lit(0.0)),
-        )
-    return owned(out.drop("_pid", "_lrank", "_base", "_n"), local)
+    return owned(out.drop("_n"), scan)
 
 
 def peak_concurrency(
@@ -153,19 +231,10 @@ def peak_concurrency(
 
     The sweep line: every interval contributes (+1 at start, −1 at
     end); concurrency at an instant is the running sum of deltas in
-    time order.  The running sum is a GLOBAL prefix scan — the same
-    single-partition trap as global rank — so it reuses the two-phase
-    technique: range-partition boundary events by (time, delta),
-    per-partition local cumulative sums, broadcast per-partition
-    totals back as exclusive base offsets.  Ends sort BEFORE starts at
-    the same instant (delta asc), so touching intervals
-    ``[a,b),[b,c)`` never double-count.
-
-    One explode (2 rows per interval), one range exchange, one window
-    over |partitions| rows.  Holds at any interval count.
-
-    Materialization contract: same as ``global_rank`` (severed, not
-    cached, owned by the returned frame).
+    time order — a ``prefix_scan`` per group, never a single-task
+    window.  Ends sort BEFORE starts at the same instant (delta asc),
+    so touching intervals ``[a,b),[b,c)`` never double-count.  One
+    explode (2 rows per interval) feeds the scan.
     """
     group_cols = group_cols or []
     ev = intervals.select(
@@ -179,44 +248,11 @@ def peak_concurrency(
             )
         ).alias("_e"),
     ).select(*group_cols, F.col("_e.t").alias("t"), F.col("_e.d").alias("d"))
-
-    from pyspark.sql import Window
-
-    ranged = ev.repartitionByRange(
-        *[F.col(c) for c in group_cols], F.col("t").asc(), F.col("d").asc()
-    ).withColumn("_pid", F.spark_partition_id())
-    lw = Window.partitionBy("_pid", *group_cols).orderBy(
-        F.col("t").asc(), F.col("d").asc()
-    )
-    # checkpoint_sever, not .cache(): the result plan reads this frame
-    # (see global_rank — leak-assert + eviction-consistency rationale)
-    local = checkpoint_sever(
-        ranged.withColumn(
-            "_lsum",
-            F.sum("d").over(lw.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
-    bases = (
-        local.groupBy("_pid", *group_cols)
-        .agg(F.sum("d").alias("_tot"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_tot").over(
-                    Window.partitionBy(*group_cols)
-                    .orderBy("_pid")
-                    .rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_pid", *group_cols, "_base")
-    )
-    running = local.join(F.broadcast(bases), ["_pid", *group_cols]).select(
-        *group_cols,
-        "t",
-        "d",
-        (F.col("_base") + F.col("_lsum")).alias("conc"),
+    running = prefix_scan(
+        ev,
+        [F.col("t").asc(), F.col("d").asc()],
+        {"conc": ("sum", F.col("d"))},
+        by=group_cols,
     )
     # peak = max running concurrency; peak_at = earliest t attaining it
     # (only +1 events can attain a maximum, making peak_at well-defined)
@@ -230,7 +266,7 @@ def peak_concurrency(
         .withColumn("peak_concurrency", F.col("conc").cast("long"))
         .drop("conc")
     )
-    return owned(peaks.join(firsts, [*group_cols, "peak_concurrency"]), local)
+    return owned(peaks.join(firsts, [*group_cols, "peak_concurrency"]), running)
 
 
 def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
@@ -247,65 +283,35 @@ def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
 
     - SAME-x domination: ``y > min_y(x)``;
     - STRICTLY-SMALLER-x domination: ``strict_prefix_min_y(x) <= y``,
-      where the strict prefix min over the x order is computed on the
-      group table WITHOUT a single-partition global window, via the
-      two-phase scheme ``global_rank`` uses — range-partition by x
-      (each x occurs once, so no boundary ties), per-partition
-      ``rowsBetween(unbounded, -1)`` running min, then the broadcast
-      exclusive running min of predecessor partitions.
+      the exclusive running min over the x order (``prefix_scan``;
+      each x occurs once, so the order is total).
 
-    One hash aggregate + one range exchange over the group table +
-    one equi join back: holds at any scale, unlike the textbook
-    self-join.
-
-    Cache contract: same as ``global_rank`` — the returned frame owns
-    the severed group-table range partitioning.
+    One hash aggregate + one scan over the group table + one equi join
+    back: holds at any scale, unlike the textbook self-join.
     """
-    from pyspark.sql import Window
-
     x, y = F.col(x_col).cast("double"), F.col(y_col).cast("double")
     base = df.filter(x.isNotNull() & y.isNotNull())
 
     gx = base.groupBy(x.alias("_x")).agg(F.min(y).alias("_eq_min"))
-    ranged = gx.repartitionByRange(F.col("_x").asc()).withColumn(
-        "_pid", F.spark_partition_id()
+    scan = prefix_scan(
+        gx,
+        [F.col("_x").asc()],
+        {"_strict_min": ("min", F.col("_eq_min"))},
+        exclusive=True,
     )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("_x")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # checkpoint_sever, not .cache(): the result plan reads this frame
-    # (the global_rank rule — leak assert + eviction consistency)
-    local = checkpoint_sever(
-        ranged.withColumn("_lmin", F.min("_eq_min").over(lw))
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.min("_eq_min").alias("_pmin"))
-        .withColumn(
-            "_base",
-            F.min("_pmin").over(
-                Window.orderBy("_pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-        )
-        .select("_pid", "_base")
-    )
-    inf = F.lit(float("inf"))
-    strict = F.least(
-        F.coalesce(F.col("_lmin"), inf), F.coalesce(F.col("_base"), inf)
-    )
-    marks = local.join(F.broadcast(bases), "_pid").select(
-        "_x", "_eq_min", strict.alias("_strict_min")
+    marks = scan.select(
+        "_x",
+        "_eq_min",
+        F.coalesce(F.col("_strict_min"), F.lit(float("inf"))).alias(
+            "_strict_min"
+        ),
     )
     result = (
         base.join(marks, x == F.col("_x"))
         .filter(~(y > F.col("_eq_min")) & ~(F.col("_strict_min") <= y))
         .drop("_x", "_eq_min", "_strict_min")
     )
-    return owned(result, local)
+    return owned(result, scan)
 
 
 def interval_coverage(

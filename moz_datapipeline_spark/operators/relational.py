@@ -17,6 +17,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from moz_datapipeline_spark.iterate import owned
+from moz_datapipeline_spark.operators.ranges import prefix_scan
+
 
 def relational_division(
     dividend: DataFrame,
@@ -104,9 +107,8 @@ def compaction_plan(
     Files with NULL/negative size are rejected loudly.
 
     Plan: the listing is metadata-sized (one row per FILE, not per
-    data row), so the global order is one range exchange +
-    partition-local cumsums with broadcast bases (the two-phase
-    scheme) — never a single-task window over a billion-file listing.
+    data row), and the running bytes are a ``ranges.prefix_scan`` —
+    never a single-task window over a billion-file listing.
     """
     if target_bytes < 1:
         raise ValueError("compaction_plan: target_bytes must be >= 1")
@@ -123,41 +125,31 @@ def compaction_plan(
             "compaction_plan: NULL path or NULL/negative size in the "
             "listing"
         )
-    ranged = base.repartitionByRange(
-        F.col("bytes").desc(), F.col("path").asc()
-    ).withColumn("_pid", F.spark_partition_id())
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(F.col("bytes").desc(), F.col("path").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
+    scan = prefix_scan(
+        base,
+        [F.col("bytes").desc(), F.col("path").asc()],
+        {"_before": ("sum", F.col("bytes"))},
+        exclusive=True,
     )
-    local = ranged.withColumn("_lt", F.sum("bytes").over(lw))
-    pw = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.sum("bytes").alias("_tt"))
-        .withColumn("_bt", F.coalesce(F.sum("_tt").over(pw), F.lit(0)))
-        .select("_pid", "_bt")
-    )
-    before = F.col("_bt") + F.col("_lt") - F.col("bytes")
-    binned = local.join(F.broadcast(bases), "_pid").select(
+    binned = scan.select(
         "path",
         "bytes",
-        F.floor(before / F.lit(int(target_bytes)))
+        F.floor(F.col("_before") / F.lit(int(target_bytes)))
         .cast("long")
         .alias("bin"),
     )
-    per_bin = binned.groupBy("bin").agg(
-        F.sum("bytes").alias("bin_bytes"),
-        F.count(F.lit(1)).cast("long").alias("n_files_in_bin"),
+    # per-bin totals as a window, not an aggregate joined back: |bins|
+    # grows with the listing, and the scan's severed statistics would
+    # plan that join as a sort-merge join AQE only later demotes
+    per_bin = Window.partitionBy("bin")
+    out = binned.select(
+        "path",
+        "bytes",
+        "bin",
+        F.sum("bytes").over(per_bin).alias("bin_bytes"),
+        F.count(F.lit(1)).over(per_bin).cast("long").alias("n_files_in_bin"),
     )
-    # no broadcast hint: |bins| grows with the listing (total/target)
-    # — both sides are listing-sized, so let AQE pick the strategy
-    return binned.join(per_bin, "bin").select(
-        "path", "bytes", "bin", "bin_bytes", "n_files_in_bin"
-    )
+    return owned(out, scan)
 
 
 def frequent_itemsets(

@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever
+from moz_datapipeline_spark.iterate import owned
+from moz_datapipeline_spark.operators.ranges import prefix_scan
 
 # tiny marker lists per language — deterministic heuristic, not a model
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -330,56 +331,19 @@ def pack_documents(
     (id, n_tokens, bin, bin_start, bin_end), where bin_start/bin_end
     index into the DOCUMENT's own tokens.
 
-    Plan shape — a TWO-PHASE distributed prefix sum, never a
-    single-partition global window: range-partition by id, local
-    cumulative sums inside each range partition, then each partition's
-    exclusive base offset (one scalar per partition, computed from a
-    |partitions|-row aggregate on the driver) is broadcast-joined back.
-    The driver holds one long per partition regardless of corpus size.
-    Bin fan-out is a ``sequence``+``explode``, shuffle-free.
+    Plan shape — each document's end offset is a ``ranges.prefix_scan``
+    sum of token counts in id order, never a single-partition global
+    window.  Bin fan-out is a ``sequence``+``explode``, shuffle-free.
     """
     toks = token_count(text_col)
     with_n = df.select(F.col(id_col), toks.alias("n_tokens"))
-    ranged = with_n.repartitionByRange(F.col(id_col)).withColumn(
-        "_pid", F.spark_partition_id()
+    scan = prefix_scan(
+        with_n,
+        [F.col(id_col).asc()],
+        {"_end": ("sum", F.col("n_tokens").cast("long"))},
     )
-    lw = Window.partitionBy("_pid").orderBy(id_col).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # materialize ONCE (checkpoint_sever, not .cache()): both the
-    # per-partition totals and the final join read this frame, and the
-    # two branches must see the SAME range partitioning
-    # (repartitionByRange samples boundaries; a recompute could re-deal
-    # rows and mismatch _pid against the broadcast bases).  A cache()
-    # here outlives the query — the result plan reads it, so the
-    # operator can never unpersist — which the bench's strict leak
-    # assert rightly fails; localCheckpoint blocks are the sanctioned
-    # exemption (reclaimed by the ContextCleaner / bench cleanup).
-    local = checkpoint_sever(
-        ranged.withColumn(
-            "_local_end", F.sum("n_tokens").over(lw).cast("long")
-        )
-    )
-    part_totals = (
-        local.groupBy("_pid")
-        .agg(F.max("_local_end").alias("_ptotal"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_ptotal").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-        .select("_pid", "_base")
-    )
-    spans = (
-        local.join(F.broadcast(part_totals), "_pid")
-        .withColumn("_end", F.col("_base") + F.col("_local_end"))
-        .withColumn("_start", (F.col("_end") - F.col("n_tokens")).cast("long"))
+    spans = scan.withColumn(
+        "_start", (F.col("_end") - F.col("n_tokens")).cast("long")
     )
     # bins this document touches: floor(start/max) .. floor((end-1)/max)
     first_bin = (F.col("_start") / max_tokens).cast("long")
@@ -393,7 +357,7 @@ def pack_documents(
     )
     bin_lo = F.col("bin") * max_tokens
     bin_hi = bin_lo + max_tokens
-    return exploded.select(
+    out = exploded.select(
         id_col,
         "n_tokens",
         "bin",
@@ -402,6 +366,7 @@ def pack_documents(
         ),
         (F.least(F.col("_end"), bin_hi) - F.col("_start")).alias("bin_end"),
     )
+    return owned(out, scan)
 
 
 def batch_by_length(
@@ -422,12 +387,10 @@ def batch_by_length(
     len(bounds)); within a bucket, documents in ``id_col`` order chunk
     into consecutive ``batch_size`` batches.
 
-    Plan shape — the same TWO-PHASE distributed prefix rank as
-    ``pack_documents``, never a per-bucket global window (a handful of
-    buckets would serialize the whole corpus through that few tasks):
-    range-partition by (bucket, id), per-partition local ranks, then
-    broadcast each (partition, bucket)'s exclusive base count back.
-    Deterministic, RNG-free, SQL-replayable.
+    Plan shape — a per-bucket ``ranges.prefix_scan`` row number, never
+    a per-bucket global window (a handful of buckets would serialize
+    the whole corpus through that few tasks).  Deterministic, RNG-free,
+    SQL-replayable.
 
     Returns (id, n_tokens, len_bucket, batch_idx).
     """
@@ -440,45 +403,20 @@ def batch_by_length(
     with_n = df.select(
         F.col(id_col), n.alias("n_tokens"), bucket.alias("len_bucket")
     )
-    ranged = with_n.repartitionByRange(
-        F.col("len_bucket"), F.col(id_col)
-    ).withColumn("_pid", F.spark_partition_id())
-    lw = Window.partitionBy("_pid", "len_bucket").orderBy(id_col)
-    # materialize once via checkpoint_sever: the counts branch and the
-    # final join must see the SAME sampled range partitioning (see
-    # pack_documents — and the same leak rationale: a cache() here can
-    # never be unpersisted by the operator and trips the bench's
-    # strict leak assert)
-    local = checkpoint_sever(
-        ranged.withColumn("_lrank", F.row_number().over(lw).cast("long"))
+    scan = prefix_scan(
+        with_n,
+        [F.col(id_col).asc()],
+        {"_pos": ("sum", F.lit(1))},
+        by=["len_bucket"],
+        exclusive=True,
     )
-    bases = (
-        local.groupBy("_pid", "len_bucket")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_cnt").over(
-                    Window.partitionBy("len_bucket")
-                    .orderBy("_pid")
-                    .rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-        .select("_pid", "len_bucket", "_base")
+    out = scan.select(
+        id_col,
+        "n_tokens",
+        "len_bucket",
+        (F.col("_pos") / batch_size).cast("long").alias("batch_idx"),
     )
-    return (
-        local.join(F.broadcast(bases), ["_pid", "len_bucket"])
-        .select(
-            id_col,
-            "n_tokens",
-            "len_bucket",
-            (
-                (F.col("_base") + F.col("_lrank") - 1) / batch_size
-            ).cast("long").alias("batch_idx"),
-        )
-    )
+    return owned(out, scan)
 
 
 def fingerprint(text: Column | str) -> Column:

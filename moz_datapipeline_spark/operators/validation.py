@@ -33,6 +33,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from moz_datapipeline_spark.operators.ranges import prefix_scan
+
 
 @dataclass(frozen=True)
 class Check:
@@ -828,13 +830,11 @@ def ks_test(
 
     1. one union + hash aggregate: per distinct value, counts from
        each side (map-side combined);
-    2. the running totals are a global prefix scan over the value
-       order → the ``global_rank`` two-phase scheme (range exchange,
-       per-partition local cumsums, broadcast per-partition totals as
-       exclusive bases) — never a single-partition window;
-    3. the 1-row result materializes eagerly and the pinned
-       intermediate is released before returning (the returned frame
-       is a driver-side literal — nothing stays cached).
+    2. the running totals are a ``ranges.prefix_scan`` over the value
+       order — never a single-partition window;
+    3. the 1-row result materializes eagerly and the scan's checkpoint
+       is released before returning (the returned frame is a
+       driver-side literal — nothing stays cached).
     """
     va = a.select(F.col(column).cast("double").alias("v")).filter(
         F.col("v").isNotNull()
@@ -851,58 +851,35 @@ def ks_test(
         F.sum("_ia").cast("long").alias("_ca"),
         F.sum("_ib").cast("long").alias("_cb"),
     )
-    ranged = per_v.repartitionByRange(F.col("v").asc()).withColumn(
-        "_pid", F.spark_partition_id()
+    scan = prefix_scan(
+        per_v,
+        [F.col("v").asc()],
+        {"_fa": ("sum", F.col("_ca")), "_fb": ("sum", F.col("_cb"))},
+        totals={"_na": ("sum", F.col("_ca")), "_nb": ("sum", F.col("_cb"))},
     )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = ranged.withColumn("_la", F.sum("_ca").over(lw)).withColumn(
-        "_lb", F.sum("_cb").over(lw)
-    ).cache()
-    pw = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    bases = (
-        local.groupBy("_pid")
-        .agg(F.sum("_ca").alias("_ta"), F.sum("_cb").alias("_tb"))
-        .withColumn("_ba", F.coalesce(F.sum("_ta").over(pw), F.lit(0)))
-        .withColumn("_bb", F.coalesce(F.sum("_tb").over(pw), F.lit(0)))
-        .select("_pid", "_ba", "_bb")
-    )
-    totals = local.agg(
-        F.coalesce(F.sum("_ca"), F.lit(0)).alias("_na"),
-        F.coalesce(F.sum("_cb"), F.lit(0)).alias("_nb"),
-    )
-    diffs = (
-        local.join(F.broadcast(bases), "_pid")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            # ANSI guard: an empty side (count 0) must yield NULL, not
-            # a divide-by-zero job kill
-            F.when(
-                (F.col("_na") > 0) & (F.col("_nb") > 0),
-                F.abs(
-                    (F.col("_ba") + F.col("_la")).cast("double")
-                    / F.col("_na").cast("double")
-                    - (F.col("_bb") + F.col("_lb")).cast("double")
-                    / F.col("_nb").cast("double")
-                ),
-            ).alias("_d"),
-            "_na",
-            "_nb",
-        )
+    diffs = scan.select(
+        # ANSI guard: an empty side (count 0) must yield NULL, not a
+        # divide-by-zero job kill
+        F.when(
+            (F.col("_na") > 0) & (F.col("_nb") > 0),
+            F.abs(
+                F.col("_fa").cast("double") / F.col("_na").cast("double")
+                - F.col("_fb").cast("double") / F.col("_nb").cast("double")
+            ),
+        ).alias("_d"),
+        "_na",
+        "_nb",
     )
     row = diffs.agg(
         F.max("_d").alias("d"),
         F.max("_na").alias("na"),
         F.max("_nb").alias("nb"),
     ).collect()[0]
-    # counts must be exact even when one side is empty (the diffs frame
-    # is then empty and the aggregate row is all-NULL)
+    scan.unpersist()
+    # counts must be exact even when both sides are empty (the diffs
+    # frame is then empty and the aggregate row is all-NULL)
     n_a = int(row.na) if row.na is not None else int(va.count())
     n_b = int(row.nb) if row.nb is not None else int(vb.count())
-    local.unpersist()
 
     d = float(row.d) if row.d is not None else None
     p = None

@@ -359,6 +359,68 @@ class TestDerivedResultReleasesEverything:
         assert _cached_rdd_count(spark) == base
 
 
+    @pytest.mark.parametrize(
+        "op",
+        [
+            "gini_concentration",
+            "sorted_neighborhood_pairs",
+            "rfm_segments",
+            "spearman_corr",
+            "abc_analysis",
+            "pr_curve",
+            "pack_documents",
+            "batch_by_length",
+        ],
+    )
+    def test_scan_result(self, spark, op):
+        from moz_datapipeline_spark.operators import (
+            analytics,
+            fuzzy,
+            mleval,
+            text,
+        )
+
+        nums = spark.createDataFrame(
+            [(i, i % 17, float((i * 37) % 101)) for i in range(200)],
+            "id long, k long, x double",
+        )
+        orders = spark.createDataFrame(
+            [
+                (i % 40, f"1995-0{1 + i % 9}-1{i % 10}", float(i * 7 % 53))
+                for i in range(200)
+            ],
+            "o_custkey long, o_orderdate string, o_totalprice double",
+        ).withColumn("o_orderdate", F.to_date("o_orderdate"))
+        build = {
+            "gini_concentration": lambda: analytics.gini_concentration(
+                nums, "k", "x"
+            ),
+            "sorted_neighborhood_pairs": lambda: fuzzy.sorted_neighborhood_pairs(
+                nums, "x", "id"
+            ),
+            "rfm_segments": lambda: analytics.rfm_segments(orders),
+            "spearman_corr": lambda: analytics.spearman_corr(nums, "k", "x"),
+            "abc_analysis": lambda: analytics.abc_analysis(nums, "k", "x"),
+            "pr_curve": lambda: mleval.pr_curve(
+                nums.withColumn("label", (F.col("id") % 3 == 0).cast("int")),
+                "x",
+                "label",
+            ),
+            "pack_documents": lambda: text.pack_documents(
+                _docs(spark), max_tokens=16
+            ),
+            "batch_by_length": lambda: text.batch_by_length(
+                _docs(spark), batch_size=8
+            ),
+        }
+        base = _cached_rdd_count(spark)
+        out = build[op]()
+        assert out.count() > 0
+        assert _cached_rdd_count(spark) <= base + 1
+        out.unpersist(blocking=True)
+        assert _cached_rdd_count(spark) == base
+
+
 @pytest.mark.usefixtures("clean_storage")
 def test_checkpoint_sever_fallback_is_released(spark, monkeypatch):
     """When the zero-copy rebuild is unavailable, checkpoint_sever falls

@@ -767,10 +767,14 @@ def test_touch_attribution_no_global_window(spark, sf_dir):
     assert not re.search(r"windowspecdefinition\(_w?ts", plan)
 
 
-def test_kruskal_ranks_never_single_task_over_data(spark, sf_dir):
+def test_kruskal_ranks_never_single_task_over_data(
+    spark, sf_dir, monkeypatch
+):
     """The rank scan must be the two-phase scheme: a range exchange
     feeding partition-local windows — never one global all-rows
-    window (the partitionBy() smell)."""
+    window (the partitionBy() smell).  Passthrough so the plan shows
+    the scan the checkpoint would hide behind a severed-blocks scan."""
+    monkeypatch.setenv("SPARK_GRAFT_SEVER_PASSTHROUGH", "1")
     plan = _plan(entry_mod.q_kruskal_wallis(spark, sf_dir))
     assert "rangepartitioning(_v" in plan
     # the only unpartitioned window runs over the |partitions|-row
@@ -796,7 +800,9 @@ def test_span_corruption_zero_exchange(spark, sf_dir):
     assert "Generate" in plan
 
 
-def test_uplift_bins_two_phase_prefix(spark, sf_dir):
+def test_uplift_bins_two_phase_prefix(spark, sf_dir, monkeypatch):
+    # passthrough: the scan's checkpoint would hide the range exchange
+    monkeypatch.setenv("SPARK_GRAFT_SEVER_PASSTHROUGH", "1")
     plan = _plan(entry_mod.q_uplift_bins(spark, sf_dir))
     assert "rangepartitioning(_v" in plan
 

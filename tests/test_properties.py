@@ -56,7 +56,10 @@ def test_kth_value_matches_numpy(spark, vals):
     k = len(vals) // 2
     # force the DISTRIBUTED branch (local_threshold=0) — the local branch
     # is plain np.partition and is covered by the percentile property test
-    assert exact_kth_value(df, "v", k, local_threshold=0) == sorted(vals)[k]
+    assert (
+        exact_kth_value(df, "v", k, len(vals), local_threshold=0)
+        == sorted(vals)[k]
+    )
 
 
 @pytest.mark.deep

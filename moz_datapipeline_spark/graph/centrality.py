@@ -58,15 +58,12 @@ def harmonic_centrality(
             e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d"))
         )
     from moz_datapipeline_spark.iterate import (
+        advance,
         checkpoint_sever,
         owned,
-        sever_release,
     )
 
-    # sever, don't persist: every hop references the edge set, and the
-    # result plan reads it too — a plain persist() could never be
-    # released by the operator (strict bench leak assert); severed
-    # localCheckpoint blocks are the sanctioned exemption
+    # every hop reads the edge set: severed once (iterate's rule)
     e = checkpoint_sever(
         e.filter(F.col("_s") != F.col("_d")).distinct()
     )
@@ -95,19 +92,13 @@ def harmonic_centrality(
         # wall clock (measured: the hop-4 result plan was an 8,400-
         # operator tree; with severing it is one ExistingRDD scan).
         # The termination count then scans the severed blocks (cheap),
-        # with the previous size tracked driver-side.  Each superseded
-        # hop's blocks are released as soon as the new hop is
-        # materialized (sever_release), honouring the operator's
-        # nothing-stays-cached contract.
-        visited_new = checkpoint_sever(visited.unionByName(nxt))
-        n_now = visited_new.count()
-        n_new = n_now - n_prev
-        n_prev = n_now
-        sever_release(visited)
-        frontier = visited_new.filter(F.col("dist") == h)
-        visited = visited_new
-        if n_new == 0:
+        # with the previous size tracked driver-side.
+        visited = advance(visited.unionByName(nxt), visited)
+        n_now = visited.count()
+        frontier = visited.filter(F.col("dist") == h)
+        if n_now == n_prev:
             break
+        n_prev = n_now
     nodes = (
         e.select(F.col("_s").alias("node"))
         .unionByName(e.select(F.col("_d").alias("node")))
@@ -133,8 +124,4 @@ def harmonic_centrality(
             ),
         )
     )
-    # materialize via sever, then release the loop inputs
-    result = owned(checkpoint_sever(result))
-    sever_release(visited)
-    sever_release(e)
-    return result
+    return owned(advance(result, visited, e))

@@ -8,14 +8,12 @@ is data-dependent, so this engine exposes the ROUND-BOUNDED form,
 which is what makes the operator exactly SQL-replayable (the ``kcore``
 query's oracle unrolls the same rounds as DuckDB CTEs).
 
-Execution is NOT lazy: each round ``localCheckpoint``s its surviving
-edge set (the ``connected_components`` idiom) because every round
-consumes the previous edge set TWICE (degree aggregation + semi
-join) — left lazy (or merely cached), the LOGICAL plan still doubles
-per round and Catalyst re-analysis turns exponential (measured: 27 s
-of pure planning by round 6 on a 200k-edge graph; 1.3 s with the
-checkpoint).  The checkpoint RDDs hold only the shrinking surviving
-edge sets, the same storage contract as ``connected_components``.
+Execution is NOT lazy: each round's surviving edge set replaces the
+last (``iterate.advance``) because every round consumes the previous
+edge set TWICE (degree aggregation + semi join) — left lazy (or merely
+cached), the LOGICAL plan still doubles per round and Catalyst
+re-analysis turns exponential (measured: 27 s of pure planning by
+round 6 on a 200k-edge graph; 1.3 s with the checkpoint).
 
 Convergence contract: a graph whose peel cascade is deeper than
 ``rounds`` returns the partially-peeled SUPERGRAPH of the true k-core
@@ -55,10 +53,11 @@ def kcore(
     that full shuffle of the largest frame in the operator.  Runs
     Spark jobs at CALL time (one checkpoint + count per round, see
     module docstring); the returned aggregation reads the final
-    checkpointed edge set."""
+    checkpointed edge set and owns it (``iterate.owned``)."""
     from moz_datapipeline_spark.iterate import (
+        advance,
         checkpoint_sever,
-        sever_release,
+        owned,
     )
 
     if k < 1:
@@ -75,16 +74,12 @@ def kcore(
     for _ in range(rounds):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
         keep = deg.filter(F.col("_deg") >= k).select("src")
-        e_next = checkpoint_sever(
+        e = advance(
             e.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            # truncate lineage: the plan doubles per round otherwise
+            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi"),
+            e,
         )
-        n_next = e_next.count()
-        # the superseded round's blocks serve no plan once the new
-        # round is materialized — release instead of waiting for GC
-        sever_release(e)
-        e = e_next
+        n_next = e.count()
         executed += 1
         if early_stop and n_next == n_edges:
             break
@@ -92,6 +87,9 @@ def kcore(
     if stats is not None:
         stats["rounds_executed"] = executed
         stats["surviving_edges"] = n_next
-    return e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
+    return owned(
+        e.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).alias("degree")
+        ),
+        e,
     )

@@ -44,11 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import (
-    checkpoint_sever,
-    owned,
-    sever_release,
-)
+from moz_datapipeline_spark.iterate import advance, checkpoint_sever, owned
 
 
 def label_propagation(
@@ -77,10 +73,10 @@ def label_propagation(
     — the deduped edge list and the vote-less set, each referenced
     every round — are materialized via ``checkpoint_sever``
     (re-deriving an expensive edge build once per round per
-    appearance measured ~9× slower).  The result is severed, both
-    statics are released, and the returned frame owns its blocks
-    (``iterate.owned``): at most ONE severed frame survives the call,
-    and ``unpersist()`` releases it (``tests/test_cache_contract``).
+    appearance measured ~9× slower).  ``iterate.advance`` materializes
+    the result and then releases both statics; the returned frame owns
+    its blocks (``iterate.owned``): at most ONE severed frame survives
+    the call, and ``unpersist()`` releases it.
     """
     if rounds < 0:
         raise ValueError("label_propagation: rounds must be >= 0")
@@ -89,10 +85,7 @@ def label_propagation(
         e = e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    # sever, don't persist: every round and the result plan read the
-    # deduped edge list — a persist() could never be released by the
-    # operator (strict bench leak assert); severed localCheckpoint
-    # blocks are the sanctioned exemption
+    # every round reads the deduped edge list: severed once
     e = checkpoint_sever(
         e.filter(F.col("src") != F.col("dst")).distinct()
     )
@@ -137,7 +130,4 @@ def label_propagation(
             ).alias("_w")
         ).select("node", F.col("_w.l").alias("label"))
         labels = winners.unionByName(voteless)
-    result = checkpoint_sever(labels.select("node", "label"))
-    sever_release(e)
-    sever_release(voteless)
-    return owned(result)
+    return owned(advance(labels.select("node", "label"), e, voteless))

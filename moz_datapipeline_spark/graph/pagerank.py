@@ -20,9 +20,9 @@ Design (Spark-first, fixed DAG):
   ranks are materialized at call time through ``checkpoint_sever``,
   because the next iteration reads them more than once — without that
   the lineage re-evaluates multiplicatively with the iteration count.
-  Each superseded iteration and, at the end, the invariants are
-  released, so at most one severed frame (the result) outlives the
-  call.
+  Each iteration replaces the last through ``iterate.advance``; at the
+  end the invariants are released, so at most one severed frame
+  outlives the call, and the result owns it (``iterate.owned``).
 - An iteration is exactly: edges ⨝ ranks (equi join on ``src``),
   contribution sum on ``dst`` (hash aggregate with map-side partials),
   and a left join back to the node list so zero-in-degree nodes keep
@@ -50,7 +50,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever, sever_release
+from moz_datapipeline_spark.iterate import advance, checkpoint_sever, owned
+from moz_datapipeline_spark.iterate import sever_release
 
 
 def pagerank(
@@ -84,11 +85,7 @@ def pagerank(
     if seeds is not None and len(seeds) == 0:
         raise ValueError("pagerank: seeds must be non-empty when given")
     d = float(damping)
-    # sever, don't persist: every iteration and the result plan read
-    # the deduped edge list — a persist() could never be released by
-    # the operator (strict bench leak assert); severed localCheckpoint
-    # blocks are the sanctioned exemption.  Severing also keeps each
-    # iteration's plan flat (the harmonic_centrality finding).
+    # every iteration reads the deduped edge list: severed once
     e = checkpoint_sever(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
@@ -133,8 +130,7 @@ def pagerank(
         F.col("_p") if seeds is not None else F.lit(1.0) / F.col("_n")
     )
     ranks = base.select(*carry, init_rank.alias("rank"))
-    prev_cached: DataFrame | None = None
-    for i in range(iters):
+    for _ in range(iters):
         contribs = (
             e.join(
                 ranks.filter(F.col("_deg").isNotNull()),
@@ -172,23 +168,12 @@ def pagerank(
                 F.col("_in"), F.lit(0.0)
             )
         # the next iteration reads ranks up to twice (dangling mass +
-        # contributions) and the plan would otherwise double per
-        # iteration: SEVER each iteration (materialize + cut lineage,
-        # the harmonic_centrality idiom) and release the superseded
-        # one immediately — nothing stays cached past the call except
-        # exempt localCheckpoint blocks
-        ranks = checkpoint_sever(nxt.select(*carry, new_rank.alias("rank")))
-        if prev_cached is not None:
-            sever_release(prev_cached)
-        prev_cached = ranks
-    if iters > 0:
-        # the final iteration is materialized; the statics no longer
-        # serve any plan — release them so at most ONE severed frame
-        # (the result) outlives the call
-        sever_release(e)
+        # contributions): unsevered, the plan would double per iteration
+        ranks = advance(nxt.select(*carry, new_rank.alias("rank")), ranks)
+    # the final iteration is materialized, so the statics serve no plan
+    # and at most ONE severed frame (the result) outlives the call —
+    # unless there were no iterations: then ranks projects base
+    sever_release(e)
+    if iters:
         sever_release(base)
-    else:
-        # ranks is a lazy projection of base — base must stay; the
-        # edge list only fed base's (materialized) build
-        sever_release(e)
-    return ranks.select("node", "rank")
+    return owned(ranks.select("node", "rank"), ranks if iters else base)

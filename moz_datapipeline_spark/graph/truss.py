@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever
+from moz_datapipeline_spark.iterate import advance, owned
 
 _ID_SPACE = 1 << 32
 
@@ -96,11 +96,12 @@ def k_truss(
     converged run returns the exact k-truss).
 
     Each round: one support computation (wedge-join bounded by degree
-    orientation) + one semi-join filter; the surviving edge set is
-    ``localCheckpoint``-ed so lineage stays one round deep (the
-    ``kcore`` discipline — an unbounded iterative lineage is a planner
-    stack overflow at scale).  Self loops and duplicate/reverse edges
-    collapse on entry.  Node ids must be non-negative and < 2^32.
+    orientation) + one semi-join filter; the surviving edge set
+    replaces the last round's (``iterate.advance``) so lineage stays
+    one round deep (the ``kcore`` discipline — an unbounded iterative
+    lineage is a planner stack overflow at scale).  Self loops and
+    duplicate/reverse edges collapse on entry.  Node ids must be
+    non-negative and < 2^32.
     """
     if k < 3:
         # the 2-truss is the input graph itself (support >= 0 keeps
@@ -119,18 +120,19 @@ def k_truss(
     )
     need = int(k) - 2
     kept = cur.withColumn("support", F.lit(0).cast("long")).limit(0)
+    # the entering edge count rides on the driver: only round 1 counts
+    n_cur = cur.count() if early_stop else None
     for _ in range(int(rounds)):
-        # checkpoint_sever: the support wedge-join reads the edge set
-        # twice, so preserved size estimates would square per round
-        # (iterate.py) — severing keeps late peel rounds flat
-        kept = checkpoint_sever(
-            _edge_support(cur).filter(F.col("support") >= need)
+        # severed: the support wedge-join reads the edge set twice
+        # (iterate.py).  Spent: the seed (round 1), the previous round
+        kept = advance(
+            _edge_support(cur).filter(F.col("support") >= need), cur, kept
         )
         n_next = kept.count()
-        converged = early_stop and n_next == cur.count()
         cur = kept.select("a", "b")
-        if converged:
+        if early_stop and n_next == n_cur:
             break
+        n_cur = n_next
     # support column = the LAST round's count, measured on that
     # round's entering edge set (the unrolled-oracle convention)
-    return kept.select("a", "b", "support")
+    return owned(kept.select("a", "b", "support"), kept)

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever
+from moz_datapipeline_spark.iterate import checkpoint_sever, owned
 
 
 def _adjacency(edges: DataFrame) -> DataFrame:
@@ -93,8 +93,8 @@ def random_walks(
     node embeddings; pair it with ``operators/embed`` downstream.
 
     The returned frame reads the materialized adjacency index (a
-    ``checkpoint_sever`` block, MEMORY_AND_DISK) — it is released when
-    the result goes out of scope, like ``connected_components``.
+    ``checkpoint_sever`` block, MEMORY_AND_DISK) and owns it
+    (``iterate.owned``): the caller's ``unpersist`` releases it.
     Nodes above ``max_degree`` raise loudly (see module docstring).
     """
     if walk_len < 1:
@@ -157,4 +157,4 @@ def random_walks(
             )
         )
         frontier = hopped
-    return out
+    return owned(out, nbrs)

@@ -17,9 +17,10 @@ The lifetime rule (the one place it is stated):
 - A frame DERIVED from an owned result (``.filter``, ``.select``) is a
   new object without the hook: an operator returning one wraps it
   again (``owned(cands.filter(...), cands)``).
-- ``sever_release`` is for loops releasing superseded rounds; after it
-  the frame cannot be recomputed (a severed plan has no lineage), so
-  call it, or ``unpersist`` an owned result, only once every consumer
+- A loop replaces each round with ``advance(next_round, *spent)``.  A
+  released frame cannot be recomputed (a severed plan has no lineage),
+  so a frame — a spent round, a loop's static (``sever_release``), an
+  owned result (``unpersist``) — is released only once every consumer
   has materialized its own copy.
 
 Why ``checkpoint_sever`` and not ``localCheckpoint(eager=True)`` in
@@ -36,9 +37,13 @@ scheduler.
 
 ``checkpoint_sever`` materializes eagerly, then rebuilds the frame from
 the checkpointed internal RDD WITHOUT the origin statistics.
-Planner-time stats fall back to the default size (AQE still sees true
-runtime sizes at each exchange, so runtime join strategy is
-unaffected); driver CPU per round becomes flat.
+Planner-time stats fall back to the default size, so driver CPU per
+round becomes flat.  The cost: a severed frame joined to a small side
+is planned as a sort-merge join, and AQE demotes it to a broadcast only
+after the severed side's shuffle stage has run — one extra stage job
+per such join (``compaction_plan`` with its scan severed ran 14 jobs
+instead of 12).  A one-shot frame that meets a join therefore keeps its
+statistics (plain ``localCheckpoint``); severing pays off in loops.
 
 The fast path uses ``SparkSession.internalCreateDataFrame`` (Scala
 ``private[sql]``, public in bytecode — stable across the pinned Spark
@@ -106,6 +111,16 @@ def sever_release(df: DataFrame, blocking: bool = False) -> None:
             rdd.unpersist(blocking)
     except Exception:
         pass
+
+
+def advance(nxt: DataFrame, *spent: DataFrame) -> DataFrame:
+    """Materialize ``nxt`` (``checkpoint_sever``), THEN release each
+    ``spent`` frame — none when the passthrough leaves ``nxt`` lazy."""
+    out = checkpoint_sever(nxt)
+    if out is not nxt:
+        for frame in spent:
+            sever_release(frame)
+    return out
 
 
 def owned(result: DataFrame, *parts: DataFrame) -> DataFrame:

@@ -3937,20 +3937,34 @@ def kruskal_wallis(
     corr = F.lit(1.0) - F.col("_ties") / (nn * nn * nn - nn)
     dof = (F.col("k_groups") - 1).cast("long")
     ok = (dof > 0) & (nn > F.lit(1.0)) & (corr > 0)
-    h = F.when(ok, h_raw / corr)
+    # h, z and t are each computed once, in staged selects: inlined into
+    # one projection they repeat so often that whole-stage codegen fails
+    # to compile it and Spark silently falls back to interpretation
+    h, z, t = F.col("_h"), F.col("_z"), F.col("_t")
     # upper-tail chi2(dof) via Wilson–Hilferty: ((h/dof)^(1/3) - (1 -
-    # 2/(9 dof))) / sqrt(2/(9 dof)) ~ N(0,1), then one-sided erfc
-    d = dof.cast("double")
-    z = F.when(
-        ok & (h >= 0),
-        (
-            F.pow(h / d, F.lit(1.0) / F.lit(3.0))
-            - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * d))
-        )
-        / F.sqrt(F.lit(2.0) / (F.lit(9.0) * d)),
+    # 2/(9 dof))) / sqrt(2/(9 dof)) ~ N(0,1), then one-sided erfc (h is
+    # NULL unless ok)
+    d = F.col("dof").cast("double")
+    staged = folded.select(
+        "k_groups",
+        "_nn",
+        dof.alias("dof"),
+        F.when(ok, h_raw / corr).alias("_h"),
+    ).withColumn(
+        "_z",
+        F.when(
+            h >= 0,
+            (
+                F.pow(h / d, F.lit(1.0) / F.lit(3.0))
+                - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * d))
+            )
+            / F.sqrt(F.lit(2.0) / (F.lit(9.0) * d)),
+        ),
     )
     az = F.abs(z) / F.sqrt(F.lit(2.0))
-    t = F.lit(1.0) / (F.lit(1.0) + F.lit(0.3275911) * az)
+    staged = staged.withColumn(
+        "_t", F.lit(1.0) / (F.lit(1.0) + F.lit(0.3275911) * az)
+    )
     poly = (
         F.lit(0.254829592) * t
         - F.lit(0.284496736) * (t**2)
@@ -3965,11 +3979,11 @@ def kruskal_wallis(
             F.lit(1.0) - erfc / F.lit(2.0)
         ),
     )
-    out = folded.select(
+    out = staged.select(
         "k_groups",
         nn.cast("long").alias("n_rows"),
         F.round(h, 6).alias("h_stat"),
-        dof.alias("dof"),
+        "dof",
         F.round(p, 6).alias("p_value"),
         F.when(p.isNotNull(), p < F.lit(0.05)).alias("significant"),
     )

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from moz_datapipeline_spark.iterate import checkpoint_sever
+from moz_datapipeline_spark.iterate import advance, owned, sever_release
 from moz_datapipeline_spark.localresult import literal_frame
 
 
@@ -43,6 +43,9 @@ def connected_components(
 
     Raises RuntimeError if ``max_iterations`` rounds still left moving
     labels — never silently returns split components.
+
+    Each round replaces the last (``iterate.advance``); the result owns
+    the final round's blocks (``iterate.owned``).
 
     ``stats``: pass a dict to receive ``{"rounds": n}`` — the number of
     propagate+shortcut rounds actually executed (the O(log d) claim is
@@ -128,7 +131,7 @@ def connected_components(
     # node in the next frontier, so each change event is offered to
     # its neighbors exactly once — same fixed point, same O(log d)
     # round bound on chains (the shortcut still runs on all labels).
-    frontier = labels
+    frontier = updated = labels
     converged = False
     rounds = 0
     for _ in range(max_iterations):
@@ -159,7 +162,10 @@ def connected_components(
         lab2 = prop.select(
             F.col("id").alias("_cid"), F.col("component").alias("_c2")
         )
-        updated = (
+        # materialize the new labels, severed: each round joins TWO
+        # derivatives of the labels frame (propagate left-join, shortcut
+        # self-join; see iterate.py).  Spent: last labels and frontier
+        updated = advance(
             prop.join(lab2, prop["component"] == lab2["_cid"], "left")
             .select(
                 "id",
@@ -167,24 +173,16 @@ def connected_components(
                 (F.coalesce("_c2", "component") != F.col("_old")).alias(
                     "_changed"
                 ),
-            )
+            ),
+            updated,
+            frontier,
         )
-        # materialize the new labels so the next round doesn't re-derive
-        # the whole lineage (iterative algorithms grow plans
-        # exponentially) — checkpoint_sever, not plain localCheckpoint:
-        # each round joins TWO derivatives of the labels frame (the
-        # propagate left-join and the shortcut self-join), so preserved
-        # size-estimate stats would square per round and the BigInt
-        # arithmetic would dominate late rounds (see iterate.py)
-        updated = checkpoint_sever(updated)
         changed = updated.filter(F.col("_changed")).count()
         labels = updated.drop("_changed")
         if changed == 0:
             converged = True
             break
-        frontier = checkpoint_sever(
-            updated.filter(F.col("_changed")).drop("_changed")
-        )
+        frontier = advance(updated.filter(F.col("_changed")).drop("_changed"))
     if stats is not None:
         stats["rounds"] = rounds
     if not converged:
@@ -192,7 +190,9 @@ def connected_components(
             f"connected_components: no fixed point after {max_iterations} "
             "rounds — raise max_iterations (each round doubles label reach)"
         )
-    return labels
+    # the last round is materialized: the edge list serves no plan
+    sever_release(edges)
+    return owned(labels, updated)
 
 
 def dedup_keep_representatives(
@@ -205,7 +205,8 @@ def dedup_keep_representatives(
 
     Rows not in any pair are kept as-is (they are their own cluster).
     Pass ``components`` (a prior ``connected_components(pairs)`` result)
-    to reuse it — otherwise the iterative clustering runs again here.
+    to reuse it — otherwise the iterative clustering runs again here,
+    and the result owns it (``iterate.owned``).
     """
     comp = (
         components
@@ -220,4 +221,5 @@ def dedup_keep_representatives(
     # no broadcast hint: cluster count is data-dependent; AQE picks the
     # strategy from runtime sizes
     survivors = df.join(keep, id_col, "inner")
-    return untouched.unionByName(survivors)
+    own = (comp,) if components is None else ()
+    return owned(untouched.unionByName(survivors), *own)

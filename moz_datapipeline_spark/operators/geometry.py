@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from moz_datapipeline_spark.iterate import checkpoint_sever, owned
+
 
 def ring_edges(
     rings_x: Column | str, rings_y: Column | str, quant: int = 9
@@ -360,7 +362,7 @@ def grid_density_clusters(
         core.select(F.col("_cell").alias("id_b")), "id_b", "inner"
     )
     comp = connected_components(edges)
-    return (
+    return owned(
         pts.join(
             comp.select(
                 F.col("id").alias("_cell2"),
@@ -368,8 +370,8 @@ def grid_density_clusters(
             ),
             pts["_cell"] == F.col("_cell2"),
             "left",
-        )
-        .select("id", "cluster")
+        ).select("id", "cluster"),
+        comp,
     )
 
 
@@ -463,8 +465,6 @@ def grid_dbscan(
     # consumers read it — the degree fold, the core-core cell edges,
     # and the border assignment — and the epsilon join is the most
     # expensive stage in the plan.
-    from moz_datapipeline_spark.iterate import checkpoint_sever
-
     nbrs = checkpoint_sever(
         probe.join(build, ["_cx", "_cy"])
         .filter(F.col("_ida") != F.col("_idb"))
@@ -559,8 +559,10 @@ def grid_dbscan(
         .select(F.col("_ida").alias("id"), "cluster")
     )
     labels = core_label.unionByName(border_label)
-    return flagged.join(labels, "id", "left").select(
-        "id", "cluster", "is_core"
+    return owned(
+        flagged.join(labels, "id", "left").select("id", "cluster", "is_core"),
+        nbrs,
+        comp,
     )
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from moz_datapipeline_spark.iterate import owned
+from moz_datapipeline_spark.iterate import advance, owned, sever_release
 from moz_datapipeline_spark.localresult import literal_frame
 from moz_datapipeline_spark.operators.ranges import prefix_scan
 
@@ -464,8 +464,8 @@ def bradley_terry(
     numpy (hundreds of rounds in milliseconds — the exact_quantiles /
     routing-kernel pattern: distribute the fold, solve the small
     system locally).  Beyond the cap the rounds run as rollup-sized
-    joins whose θ frame is re-materialized per round via
-    ``iterate.checkpoint_sever`` — a plain ``localCheckpoint`` loop
+    joins whose θ frame replaces the last each round via
+    ``iterate.advance`` (severed) — a plain ``localCheckpoint`` loop
     that re-joins its own output squares the preserved size-estimate
     BigInt every round and melts the driver from ~15 rounds on (see
     ``moz_datapipeline_spark.iterate``).  ``stats`` receives
@@ -524,15 +524,18 @@ def bradley_terry(
     if n_pairs <= int(solver_cap):
         if stats is not None:
             stats["solver"] = "driver"
-        return _bt_driver_solve(
+        out = _bt_driver_solve(
             comparisons.sparkSession, pair, items, int(iterations)
         )
+        # both rollups are collected: the literal result reads neither
+        sever_release(pair)
+        sever_release(items)
+        return out
     if stats is not None:
         stats["solver"] = "distributed"
 
-    from moz_datapipeline_spark.iterate import checkpoint_sever
-
     theta = items.select("item", F.lit(1.0).alias("_t"))
+    new_theta = theta  # the last materialized round (none yet)
     for _ in range(int(iterations)):
         ta = theta.select(F.col("item").alias("_a"), F.col("_t").alias("_ta"))
         tb = theta.select(F.col("item").alias("_b"), F.col("_t").alias("_tb"))
@@ -552,25 +555,24 @@ def bradley_terry(
             .groupBy("item")
             .agg(F.sum("_c").alias("_d"))
         )
-        new_theta = (
-            items.join(denom, "item", "left")
-            .select(
+        new_theta = advance(
+            items.join(denom, "item", "left").select(
                 "item",
                 F.when(
                     F.col("_d") > 0, F.col("wins") / F.col("_d")
                 )
                 .otherwise(F.lit(1.0))
                 .alias("_t"),
-            )
+            ),
+            new_theta,
         )
         # mean-1 rescale keeps the iteration bounded and the output
         # scale-identified (BT strengths are only defined up to scale)
-        new_theta = checkpoint_sever(new_theta)
         mean_t = new_theta.agg(F.avg("_t").alias("_m"))
         theta = new_theta.crossJoin(F.broadcast(mean_t)).select(
             "item", (F.col("_t") / F.col("_m")).alias("_t")
         )
-    return (
+    out = (
         theta.join(items, "item")
         .join(n_comp, "item", "left")
         .select(
@@ -582,6 +584,7 @@ def bradley_terry(
             .alias("n_comparisons"),
         )
     )
+    return owned(out, new_theta, items, pair)
 
 
 def _bt_driver_solve(spark, pair, items, iterations: int) -> DataFrame:

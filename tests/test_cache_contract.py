@@ -420,6 +420,84 @@ class TestDerivedResultReleasesEverything:
         out.unpersist(blocking=True)
         assert _cached_rdd_count(spark) == base
 
+    @pytest.mark.parametrize(
+        "op",
+        [
+            "kcore",
+            "k_truss",
+            "pagerank",
+            "pagerank_iters0",
+            "connected_components",
+            "bradley_terry",
+            "bradley_terry_distributed",
+            "grid_density_clusters",
+            "grid_dbscan",
+            "random_walks",
+            "dedup_keep_representatives",
+        ],
+    )
+    def test_loop_result(self, spark, op):
+        from moz_datapipeline_spark.graph.kcore import kcore
+        from moz_datapipeline_spark.graph.pagerank import pagerank
+        from moz_datapipeline_spark.graph.truss import k_truss
+        from moz_datapipeline_spark.graph.walks import random_walks
+        from moz_datapipeline_spark.operators.components import (
+            connected_components,
+            dedup_keep_representatives,
+        )
+        from moz_datapipeline_spark.operators.geometry import (
+            grid_dbscan,
+            grid_density_clusters,
+        )
+        from moz_datapipeline_spark.operators.mleval import bradley_terry
+
+        # a K5 (triangles for the truss) hung on a 12-node ring, and a
+        # three-link chain apart from it: 34 distinct edges
+        und = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+        und += [(i, (i + 1) % 12) for i in range(4, 16)]
+        und += [(20, 21), (21, 22), (22, 23)]
+        edges = spark.createDataFrame(
+            und + [(b, a) for a, b in und], "src long, dst long"
+        )
+        pairs = edges.select(
+            F.col("src").alias("id_a"), F.col("dst").alias("id_b")
+        )
+        duels = [(i % 6, (i * 5 + 1) % 6) for i in range(40)]
+        comparisons = spark.createDataFrame(
+            [(w, l) for w, l in duels if w != l], "winner long, loser long"
+        )
+        points = spark.createDataFrame(
+            [(i, 10 + i % 5 / 100, 20 + i // 5 / 100) for i in range(30)],
+            "id long, lon double, lat double",
+        )
+        docs = spark.createDataFrame(
+            [(i, f"d{i}") for i in range(30)], "doc_id long, text string"
+        )
+        build = {
+            "kcore": lambda: kcore(edges, k=2, rounds=3),
+            "k_truss": lambda: k_truss(edges, k=3),
+            "pagerank": lambda: pagerank(edges, iters=3),
+            "pagerank_iters0": lambda: pagerank(edges, iters=0),
+            "connected_components": lambda: connected_components(pairs),
+            "bradley_terry": lambda: bradley_terry(comparisons),
+            "bradley_terry_distributed": lambda: bradley_terry(
+                comparisons, iterations=3, solver_cap=0
+            ),
+            "grid_density_clusters": lambda: grid_density_clusters(
+                points, cell_deg=0.02, min_pts=2
+            ),
+            "grid_dbscan": lambda: grid_dbscan(points, eps_km=2.0, min_pts=3),
+            "random_walks": lambda: random_walks(edges, walk_len=2),
+            "dedup_keep_representatives": lambda: dedup_keep_representatives(
+                docs, pairs
+            ),
+        }
+        base = _cached_rdd_count(spark)
+        out = build[op]()
+        assert out.count() > 0
+        out.unpersist(blocking=True)
+        assert _cached_rdd_count(spark) == base
+
 
 @pytest.mark.usefixtures("clean_storage")
 def test_checkpoint_sever_fallback_is_released(spark, monkeypatch):

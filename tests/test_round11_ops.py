@@ -1462,6 +1462,26 @@ def test_kruskal_wallis_vs_scipy_values(spark):
     assert r.significant is False
 
 
+def test_kruskal_wallis_compiles_without_codegen_fallback(spark):
+    """The H/p projection must compile under whole-stage codegen: with
+    the interpreted fallback disabled, a janino failure raises instead
+    of silently running interpreted."""
+    from moz_datapipeline_spark.operators.analytics import kruskal_wallis
+
+    rows = [(f"g{i % 3}", float((i * 7) % 11)) for i in range(30)]
+    df = spark.createDataFrame(rows, "g string, v double")
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        out = kruskal_wallis(df, "v", "g")
+        r = out.collect()[0]
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    out.unpersist()
+    assert r.k_groups == 3 and r.n_rows == 30 and r.dof == 2
+    assert r.h_stat is not None and r.p_value is not None
+
+
 def test_kruskal_wallis_all_tied_and_single_group(spark):
     from moz_datapipeline_spark.operators.analytics import kruskal_wallis
 

@@ -10,8 +10,11 @@ oracle and get the driver's weaker rows-only check.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1166,7 +1169,12 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "n_chars")
 
 
-_INCR_STORE = "/tmp/spark_graft_incr_store_q"
+#: one signature store per process, removed when it exits: two processes
+#: running the query at once would otherwise rewrite each other's store
+_INCR_STORE = os.path.join(
+    tempfile.gettempdir(), f"spark_graft_incr_store_q_{os.getpid()}"
+)
+atexit.register(shutil.rmtree, _INCR_STORE, True)
 
 
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,8 +1190,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping (recursive CTE) — replays independently in DuckDB SQL over
     the same documents table (portable md5 mode end-to-end).
     """
-    import shutil
-
     from moz_datapipeline_spark.operators.incremental import (
         bootstrap_signature_store,
         incremental_dedup,

@@ -63,6 +63,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from moz_datapipeline_spark.iterate import owned
 from moz_datapipeline_spark.operators.components import connected_components
 from moz_datapipeline_spark.operators.dedup import (
     band_hashes,
@@ -567,7 +568,7 @@ def incremental_dedup(
         # materialization of a live lineage would see the batch's own
         # just-appended signatures and self-drop every survivor.
         # localCheckpoint truncates the lineage to the materialized ids
-        # (tiny: one column); blocks are released when the frame is GC'd
+        # (tiny: one column); the result's unpersist releases its blocks
         drops = drops.localCheckpoint(eager=True)
     survivors = new_docs.join(drops, id_col, "left_anti")
 
@@ -623,4 +624,7 @@ def incremental_dedup(
         sigs.unpersist()
         if cand is not None:
             cand.unpersist()
-    return survivors
+        # the drop ids are frozen; the batch caches are already released
+        return owned(survivors, comp, drops)
+    # no store: survivors read the persisted signatures lazily
+    return owned(survivors, comp, sigs)

@@ -1,8 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk_bruteforce`` — exact top-k: broadcast the (small) query
-  side, dot products via zip_with/aggregate HOFs (JVM-side), window
-  row_number for top-k. Correct baseline at any corpus size; the query
+  side into ``_cosine_block_topk``, a vectorized block kernel over the
+  partitioned corpus that emits ≤ k rows per (partition, query); one
+  window ranks them. Correct baseline at any corpus size; the query
   side must be broadcastable.
 - ``lsh_bucket_topk``        — scale path: random-hyperplane LSH signs
   bucket both sides; only same-bucket pairs are scored. Recall is
@@ -11,6 +12,15 @@
 - ``ivf_topk``               — IVF-style: k-means-ish centroid assignment
   using a deterministic sample of corpus vectors as centroids; probes
   the nprobe nearest centroids only.
+
+The exact paths (``cosine_topk_bruteforce``, ``margin_mine_pairs``
+without candidates) never hold the cosine grid as rows: the block
+kernel scores it with the JVM ``cosine()`` arithmetic bit for bit and
+keeps only top-k rows under the window order ``cosine desc, id asc``
+(NaN first), so their rows equal the plain full-grid windows'. A null
+vector, a null or NaN element, or a length mismatch raises naming the
+``vec_id``; a zero norm raises DIVIDE_BY_ZERO. Ids are unique within
+each side.
 """
 
 from __future__ import annotations
@@ -19,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from moz_datapipeline_spark.iterate import owned
+from moz_datapipeline_spark.operators.spread import spread_small_scan
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -103,6 +114,318 @@ def _partition_topk(
     return df.mapInPandas(fn, schema)
 
 
+#: cells of one broadcast-side chunk scored against one Arrow batch
+_BLOCK_CELLS = 1 << 20
+#: kernel multiply-adds (~1 s of one core) above which one input split
+#: is worth a shuffle to spread it across the cluster
+_SPREAD_MACS = 1 << 30
+
+
+def _checked_matrix(ids, vecs, dim: int | None):
+    """Stack one side's double vectors into an ``(n, dim)`` float64
+    matrix, raising on the first vector the exact cosine cannot score:
+    a null vector, a length other than ``dim`` (the first vector's when
+    ``None``), or a null or NaN element (Arrow hands a null element to
+    pandas as NaN)."""
+    import numpy as np
+
+    for i, v in enumerate(vecs):
+        if v is None:
+            raise ValueError(f"cosine: vec_id {ids[i]!r} has a null vector")
+        if dim is None:
+            dim = len(v)
+        if len(v) != dim:
+            raise ValueError(
+                f"cosine: vec_id {ids[i]!r} has {len(v)} elements, "
+                f"expected {dim}"
+            )
+    mat = (
+        np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        if len(vecs)
+        else np.zeros((0, dim or 0))
+    )
+    bad = np.isnan(mat).any(axis=1)
+    if bad.any():
+        raise ValueError(
+            f"cosine: vec_id {ids[int(np.argmax(bad))]!r} has a null or "
+            "NaN element"
+        )
+    return mat
+
+
+def _fold_dot(x, y_t):
+    """``out[i, j] = Σ_d x[i, d]·y_t[d, j]``, accumulated from 0.0 in
+    dimension order — the JVM ``aggregate(zip_with(…), 0.0, acc + x)``
+    fold bit for bit (no BLAS: a blocked or fused sum rounds
+    differently)."""
+    import numpy as np
+
+    out = np.zeros((x.shape[0], y_t.shape[1]))
+    tmp = np.empty_like(out)
+    for d in range(x.shape[1]):
+        np.multiply(x[:, d, None], y_t[None, d, :], out=tmp)
+        np.add(out, tmp, out=out)
+    return out
+
+
+def _norms(mat):
+    """Row norms, each sum of squares folded like ``_fold_dot``."""
+    import numpy as np
+
+    sq = np.zeros(mat.shape[0])
+    for d in range(mat.shape[1]):
+        sq = sq + mat[:, d] * mat[:, d]
+    return np.sqrt(sq)
+
+
+def _first_k(score, tie, valid, k: int, axis: int):
+    """Positions along ``axis`` of the first ``k`` entries under the
+    window order ``cosine desc, id asc`` (Spark's NaN sorts above every
+    number, so first under desc); invalid entries sort last."""
+    import numpy as np
+
+    nan = np.isnan(score)
+    order = np.lexsort(
+        (tie, np.where(nan, 0.0, -score), ~nan, ~valid), axis=axis
+    )
+    return np.take(order, np.arange(min(k, order.shape[axis])), axis=axis)
+
+
+def _tie_rank(ids):
+    """Ids as an array whose ascending order is the ids' (numbers as
+    they are, other types by their sorted rank)."""
+    import numpy as np
+
+    if ids.dtype.kind in "iuf":
+        return ids
+    return np.unique(ids.ravel(), return_inverse=True)[1].reshape(ids.shape)
+
+
+def _cosine_block_topk(
+    batches, bcast, k, exclude_same_id, forward, p_col, v_col
+):
+    """Score each Arrow batch of the partitioned side against the whole
+    broadcast side, one (batch × chunk) block at a time, and emit only
+    top-k rows: never the grid.
+
+    ``bcast`` holds the broadcast side sorted by id (ids, float64
+    matrix, norms).  The cosine is ``dot / (norm_p · norm_b)`` with the
+    dot and both norms folded from 0.0 in dimension order, each norm
+    once per vector — equal bit for bit to ``cosine()``; a zero
+    denominator raises DIVIDE_BY_ZERO as Spark's ANSI divide does.
+    Rows are ``(p_id, b_id, cosine, _da, _fwd)``:
+
+    - ``forward``: for each partitioned-side row, its exact top-k over
+      the whole broadcast side (``_fwd`` true) and ``_da``, their mean
+      cosine summed in rank order;
+    - always: for each broadcast-side row, its top-k among this
+      partition's rows (``_fwd`` false, ``_da`` null) — a partial the
+      caller's window ranks into the exact top-k (top-k under a total
+      order is distributive).
+
+    Memory is one batch × one chunk of scores plus k·|broadcast| of
+    running state.
+    """
+    import numpy as np
+    import pandas as pd
+
+    ids_b, mat_b, norm_b = bcast.value
+    m = len(ids_b)
+    if m == 0:
+        return
+    bt = np.ascontiguousarray(mat_b.T)
+    pos_b = np.arange(m)
+    # broadcast-side running state: k best partitioned-side rows each
+    back_s = np.zeros((0, m))
+    back_id = None
+    back_v = np.zeros((0, m), dtype=bool)
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        ids_p = pdf[p_col].to_numpy()
+        if back_id is None:
+            back_id = np.zeros((0, m), dtype=ids_p.dtype)
+        mat_p = _checked_matrix(ids_p, pdf[v_col].tolist(), bt.shape[0])
+        norm_p = _norms(mat_p)
+        step = max(1, _BLOCK_CELLS // n)
+        fwd_s = np.zeros((n, 0))
+        fwd_j = np.zeros((n, 0), dtype=np.int64)
+        fwd_v = np.zeros((n, 0), dtype=bool)
+        for c0 in range(0, m, step):
+            c1 = min(m, c0 + step)
+            valid = np.ones((n, c1 - c0), dtype=bool)
+            if exclude_same_id:
+                valid &= ids_p[:, None] != ids_b[None, c0:c1]
+            den = norm_p[:, None] * norm_b[None, c0:c1]
+            zero = (den == 0) & valid
+            if zero.any():
+                i, j = np.argwhere(zero)[0]
+                raise ArithmeticError(
+                    "[DIVIDE_BY_ZERO] Division by zero in cosine of "
+                    f"vec_id {ids_p[i]!r} and vec_id {ids_b[c0 + j]!r}"
+                )
+            s = _fold_dot(mat_p, bt[:, c0:c1])
+            s = np.divide(s, den, out=s, where=valid)
+            if forward:
+                cs = np.concatenate([fwd_s, s], axis=1)
+                cj = np.concatenate(
+                    [fwd_j, np.broadcast_to(pos_b[c0:c1], s.shape)], axis=1
+                )
+                cv = np.concatenate([fwd_v, valid], axis=1)
+                top = _first_k(cs, cj, cv, k, axis=1)
+                fwd_s = np.take_along_axis(cs, top, axis=1)
+                fwd_j = np.take_along_axis(cj, top, axis=1)
+                fwd_v = np.take_along_axis(cv, top, axis=1)
+            cs = np.concatenate([back_s[:, c0:c1], s], axis=0)
+            cid = np.concatenate(
+                [
+                    back_id[:, c0:c1],
+                    np.broadcast_to(ids_p[:, None], s.shape),
+                ],
+                axis=0,
+            )
+            cv = np.concatenate([back_v[:, c0:c1], valid], axis=0)
+            top = _first_k(cs, _tie_rank(cid), cv, k, axis=0)
+            if c0 == 0:
+                rows = top.shape[0]
+                new_s = np.zeros((rows, m))
+                new_id = np.zeros((rows, m), dtype=cid.dtype)
+                new_v = np.zeros((rows, m), dtype=bool)
+            new_s[:, c0:c1] = np.take_along_axis(cs, top, axis=0)
+            new_id[:, c0:c1] = np.take_along_axis(cid, top, axis=0)
+            new_v[:, c0:c1] = np.take_along_axis(cv, top, axis=0)
+        back_s, back_id, back_v = new_s, new_id, new_v
+        if forward:
+            da = np.zeros(n)
+            for r in range(fwd_s.shape[1]):
+                da = da + np.where(fwd_v[:, r], fwd_s[:, r], 0.0)
+            cnt = fwd_v.sum(axis=1)
+            da = np.divide(da, cnt, out=np.full(n, np.nan), where=cnt > 0)
+            i, r = np.nonzero(fwd_v)
+            yield pd.DataFrame(
+                {
+                    "_pid": ids_p[i],
+                    "_bid": ids_b[fwd_j[i, r]],
+                    "cosine": fwd_s[i, r],
+                    "_da": da[i],
+                    "_fwd": True,
+                }
+            )
+    r, j = np.nonzero(back_v)
+    if len(r):
+        yield pd.DataFrame(
+            {
+                "_pid": back_id[r, j],
+                "_bid": ids_b[j],
+                "cosine": back_s[r, j],
+                "_da": None,
+                "_fwd": False,
+            }
+        )
+
+
+def _block_topk(
+    part: DataFrame,
+    bcast: DataFrame,
+    k: int,
+    exclude_same_id: bool,
+    forward: bool,
+) -> DataFrame:
+    """Run ``_cosine_block_topk`` over ``part`` (columns id, double
+    vector) against ``bcast`` (same shape), which is collected once
+    through Arrow, validated, sorted by id and shipped as a broadcast
+    variable.  Output columns ``_pid, _bid, cosine, _da, _fwd``; ``_da``
+    is null on the broadcast-side partials."""
+    import functools
+
+    import numpy as np
+    from pyspark.sql.types import (
+        BooleanType,
+        DoubleType,
+        StructField,
+        StructType,
+    )
+
+    b_id, b_vec = bcast.columns
+    t = bcast.toArrow()
+    ids = t.column(b_id).to_numpy(zero_copy_only=False)
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    vecs = t.column(b_vec).to_numpy(zero_copy_only=False)[order]
+    mat = _checked_matrix(ids, vecs, None)
+    bc = part.sparkSession.sparkContext.broadcast((ids, mat, _norms(mat)))
+    p_id, p_vec = part.columns
+    # a split of ~S estimated bytes holds ~S/8 vector elements, each
+    # multiplied against every broadcast row
+    est = part._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if est / 8 * len(ids) / part.rdd.getNumPartitions() > _SPREAD_MACS:
+        part = spread_small_scan(part, p_id)
+    schema = StructType(
+        [
+            StructField("_pid", part.schema[p_id].dataType),
+            StructField("_bid", bcast.schema[b_id].dataType),
+            StructField("cosine", DoubleType()),
+            StructField("_da", DoubleType()),
+            StructField("_fwd", BooleanType()),
+        ]
+    )
+    kernel = functools.partial(
+        _cosine_block_topk,
+        bcast=bc,
+        k=k,
+        exclude_same_id=exclude_same_id,
+        forward=forward,
+        p_col=p_id,
+        v_col=p_vec,
+    )
+    # Arrow hands a pandas NaN back as null; the kernel emits no null
+    # score, so a null here is a NaN score (an overflowing ∞/∞ cosine)
+    nan = F.lit(float("nan"))
+    return part.mapInPandas(kernel, schema).select(
+        "_pid",
+        "_bid",
+        F.coalesce("cosine", nan).alias("cosine"),
+        F.when(F.col("_fwd"), F.coalesce("_da", nan)).alias("_da"),
+        "_fwd",
+    )
+
+
+def _candidate_topk(grid: DataFrame, k: int) -> DataFrame:
+    """The candidate path's ``_cosine_block_topk`` rows, JVM-side:
+    score each ``(_ida, _idb)`` pair of ``grid`` once, rank each A id's
+    pairs (its top k, with ``_da`` their mean in rank order, become
+    ``_fwd`` rows) and keep every pair as a B-side partial."""
+    wa = Window.partitionBy("_ida").orderBy(
+        F.col("cosine").desc(), F.col("_idb").asc()
+    )
+    top = F.row_number().over(wa) <= k
+    ranked = (
+        grid.select(
+            "_ida", "_idb", cosine(F.col("_va"), F.col("_vb")).alias("cosine")
+        )
+        .withColumn("_ina", top)
+        .withColumn(
+            "_da",
+            F.avg(F.when(F.col("_ina"), F.col("cosine"))).over(
+                wa.rowsBetween(
+                    Window.unboundedPreceding, Window.unboundedFollowing
+                )
+            ),
+        )
+    )
+    both = F.array(F.lit(True), F.lit(False))
+    return ranked.select(
+        "_ida",
+        "_idb",
+        "cosine",
+        "_da",
+        F.explode(
+            F.when(F.col("_ina"), both).otherwise(F.array(F.lit(False)))
+        ).alias("_fwd"),
+    )
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -110,14 +433,15 @@ def cosine_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k of each query against the corpus.
+    """Exact cosine top-k of each query against the corpus (a query
+    never matches its own id).
 
-    Plan shape: corpus stays partitioned; queries broadcast; the score
-    is computed map-side, then a per-partition partial top-k
-    (``_partition_topk``) bounds the exchange to ≤ k rows per
-    (partition, query) before the exact global rank — without it the
-    window shuffle would carry every |corpus|×|queries| scored row.
-    For huge query sets switch to ``lsh_bucket_topk``.
+    Plan shape: the queries are collected once and broadcast; the
+    corpus stays partitioned and ``_cosine_block_topk`` scores each of
+    its Arrow batches against them, emitting ≤ k rows per (partition,
+    query) — no cosine grid is ever a row set — and one window ranks
+    those partials into the exact top-k.  For huge query sets switch
+    to ``lsh_bucket_topk``.
     """
     c = corpus.select(
         F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("_cv")
@@ -125,14 +449,10 @@ def cosine_topk_bruteforce(
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
     )
-    scored = c.crossJoin(F.broadcast(q)).filter(
-        F.col("corpus_id") != F.col("query_id")
-    )
-    scored = scored.select(
-        "query_id", "corpus_id", cosine(F.col("_qv"), F.col("_cv")).alias("cosine")
-    )
-    scored = _partition_topk(
-        scored, ["query_id"], "cosine", "corpus_id", k, ascending=False
+    scored = _block_topk(c, q, k, exclude_same_id=True, forward=False).select(
+        F.col("_bid").alias("query_id"),
+        F.col("_pid").alias("corpus_id"),
+        "cosine",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("corpus_id").asc()
@@ -1821,25 +2141,28 @@ def margin_mine_pairs(
     Returns each A-side row's best B-side candidate with
     ``margin >= threshold``: ``(id_a, id_b, cosine, margin)``.
 
-    Plan: the candidate set is scored ONCE (cosine is symmetric; a
-    two-pass formulation doubles the dominant cost); each direction's
-    top-k derives from that one scored frame via map-side partial
-    top-k bounding the rank exchange; then two k-row mean folds, one
-    equi join of the forward candidates against both density tables,
-    one per-query argmax window.
+    Plan: the scoring step yields each A id's top-k B rows with the
+    A density (``_fwd`` rows) plus B-side partial rows; then
+    two exchanges.  Keyed by the B id, one window ranks the partials
+    first and the B density is their top-k mean in rank order; keyed
+    by the A id, the argmax window.
 
-    ``candidates=None`` (default) scores the exact A×B grid with B
-    broadcast and A spread across the cluster — right up to ~1e6 rows
-    on the broadcast side.  Above that, pass ``candidates``: a frame
+    ``candidates=None`` (default) scores the exact A×B grid in
+    ``_cosine_block_topk``: B is collected and broadcast once, A stays
+    partitioned (spread first only when one split holds more than ~1 s
+    of kernel work), and the kernel emits the A rows' exact top-k and the
+    per-partition B partials in one pass — right up to ~1e6 rows on
+    the broadcast side.  Above that, pass ``candidates``: a frame
     of DISTINCT pairs ``(id_a, id_b)`` (e.g. from
     ``lsh_candidate_pairs`` or an ``ivf_topk_indexed`` probe) — only
-    those pairs are scored, via two shuffle equi-joins, nothing
-    broadcasts, and the SAME margin fold runs downstream (it is
-    candidate-source-agnostic).  The k-NN densities are then means
-    over each id's candidate neighbors, which equals the exact margin
-    whenever the candidate source covers each side's true top-k; below
-    that recall, margins skew high (sparser neighborhoods look more
-    special) — the standard ANN trade, tunable via n_tables.
+    those pairs are scored, once, via two shuffle equi-joins, nothing
+    broadcasts, an A-keyed window ranks them JVM-side, and the SAME
+    margin fold runs downstream (it is candidate-source-agnostic).
+    The k-NN densities are then means over each id's candidate
+    neighbors, which equals the exact margin whenever the candidate
+    source covers each side's true top-k; below that recall, margins
+    skew high (sparser neighborhoods look more special) — the standard
+    ANN trade, tunable via n_tables.
 
     A and B are distinct sets by contract, so same-id pairs are
     legitimate candidates (in bitext / cross-snapshot alignment the
@@ -1849,8 +2172,6 @@ def margin_mine_pairs(
     """
     if k < 1:
         raise ValueError("margin_mine_pairs: k must be >= 1")
-    from moz_datapipeline_spark.operators.spread import spread_small_scan
-
     a = side_a.select(
         F.col(id_col).alias("_ida"), _as_double(vec_col).alias("_va")
     )
@@ -1858,13 +2179,13 @@ def margin_mine_pairs(
         F.col(id_col).alias("_idb"), _as_double(vec_col).alias("_vb")
     )
     if candidates is None:
-        # cosine is symmetric: score the A×B grid ONCE and derive both
-        # directions' top-k from it (the two-bruteforce-pass
-        # formulation doubles the dominant cost for nothing).  A is
-        # the partitioned side — spread it if it arrived as one small
-        # file — and B broadcasts, the cosine_topk_bruteforce
-        # convention.
-        grid = spread_small_scan(a, "_ida").crossJoin(F.broadcast(b))
+        # A is the partitioned side — spread it if it arrived as one
+        # small file — and B broadcasts into the block kernel: the A
+        # rows carry their exact forward top-k and A density, the B
+        # partials ride along (``_fwd`` false) to the B-keyed window
+        scored = _block_topk(
+            a, b, k, exclude_same_id, forward=True
+        ).withColumnsRenamed({"_pid": "_ida", "_bid": "_idb"})
     else:
         grid = (
             candidates.select(
@@ -1873,55 +2194,26 @@ def margin_mine_pairs(
             .join(a, "_ida")
             .join(b, "_idb")
         )
-    if exclude_same_id:
-        grid = grid.filter(F.col("_ida") != F.col("_idb"))
-    scored = grid.select(
-        "_ida",
-        "_idb",
-        cosine(F.col("_va"), F.col("_vb")).alias("cosine"),
-    )
-    pruned_ab = _partition_topk(
-        scored, ["_ida"], "cosine", "_idb", k, ascending=False
-    )
-    wa = Window.partitionBy("_ida").orderBy(
-        F.col("cosine").desc(), F.col("_idb").asc()
-    )
-    nn_ab = (
-        pruned_ab.withColumn("rank", F.row_number().over(wa))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_ida").alias("query_id"),
-            F.col("_idb").alias("corpus_id"),
-            "cosine",
-        )
-    )
-    pruned_ba = _partition_topk(
-        scored, ["_idb"], "cosine", "_ida", k, ascending=False
-    )
+        if exclude_same_id:
+            grid = grid.filter(F.col("_ida") != F.col("_idb"))
+        scored = _candidate_topk(grid, k)
+    # B-keyed: the partials rank first, and the B density is the mean
+    # of the top k in rank order; the forward rows read it
     wb = Window.partitionBy("_idb").orderBy(
-        F.col("cosine").desc(), F.col("_ida").asc()
+        F.col("_fwd").asc(), F.col("cosine").desc(), F.col("_ida").asc()
     )
-    nn_ba = (
-        pruned_ba.withColumn("rank", F.row_number().over(wb))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_idb").alias("query_id"),
-            F.col("_ida").alias("corpus_id"),
-            "cosine",
-        )
-    )
-    dens_a = nn_ab.groupBy("query_id").agg(
-        F.avg("cosine").alias("_da")
-    )
-    dens_b = nn_ba.groupBy("query_id").agg(
-        F.avg("cosine").alias("_db")
-    )
+    in_top = ~F.col("_fwd") & (F.row_number().over(wb) <= k)
     cand = (
-        nn_ab.join(dens_a, "query_id")
-        .join(
-            dens_b.withColumnRenamed("query_id", "corpus_id"),
-            "corpus_id",
+        scored.withColumn("_inb", in_top)
+        .withColumn(
+            "_db",
+            F.avg(F.when(F.col("_inb"), F.col("cosine"))).over(
+                wb.rowsBetween(
+                    Window.unboundedPreceding, Window.unboundedFollowing
+                )
+            ),
         )
+        .filter(F.col("_fwd"))
         .withColumn(
             # ANSI guard + semantics: margin is only meaningful with a
             # positive neighborhood density (all-negative cosines mean
@@ -1934,8 +2226,9 @@ def margin_mine_pairs(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("margin").desc(), F.col("corpus_id").asc()
+    # A-keyed: the argmax
+    w = Window.partitionBy("_ida").orderBy(
+        F.col("margin").desc(), F.col("_idb").asc()
     )
     return (
         cand.withColumn("_r", F.row_number().over(w))
@@ -1944,8 +2237,8 @@ def margin_mine_pairs(
             & (F.col("margin") >= F.lit(float(threshold)))
         )
         .select(
-            F.col("query_id").alias("id_a"),
-            F.col("corpus_id").alias("id_b"),
+            F.col("_ida").alias("id_a"),
+            F.col("_idb").alias("id_b"),
             F.round("cosine", 6).alias("cosine"),
             F.round("margin", 6).alias("margin"),
         )

@@ -499,6 +499,39 @@ class TestDerivedResultReleasesEverything:
         assert _cached_rdd_count(spark) == base
 
 
+    @pytest.mark.parametrize("with_store", [False, True])
+    def test_incremental_dedup(self, spark, tmp_path, with_store):
+        """Its components, its signatures (no store) and its frozen
+        drop ids (with a store) are released with the result."""
+        from moz_datapipeline_spark.operators.incremental import (
+            bootstrap_signature_store,
+            incremental_dedup,
+        )
+
+        # every third document repeats one of seven texts, the others
+        # are unique: the store drops some of the batch, not all of it
+        words = [i % 7 if i % 3 == 0 else i for i in range(120)]
+        docs = spark.createDataFrame(
+            [
+                (i, " ".join(f"w{w}tok{t}" for t in range(10)))
+                for i, w in enumerate(words)
+            ],
+            "doc_id long, text string",
+        )
+        store = None
+        if with_store:
+            store = str(tmp_path / "store")
+            bootstrap_signature_store(
+                spark, docs.filter(F.col("doc_id") % 2 == 0), store
+            )
+        base = _cached_rdd_count(spark)
+        out = incremental_dedup(
+            spark, docs.filter(F.col("doc_id") % 2 == 1), store, threshold=0.7
+        )
+        assert out.count() > 0
+        out.unpersist(blocking=True)
+        assert _cached_rdd_count(spark) == base
+
 @pytest.mark.usefixtures("clean_storage")
 def test_checkpoint_sever_fallback_is_released(spark, monkeypatch):
     """When the zero-copy rebuild is unavailable, checkpoint_sever falls

@@ -947,3 +947,31 @@ def test_scenario_fanouts_run_the_kernel_once_without_shuffle(spark):
                 break
             below.append(n)
         assert not any("Exchange" in n for n in below), (name, below)
+
+
+def _python_nodes(names: list[str]) -> list[str]:
+    """The plan nodes that run Python workers (pandas/Arrow UDFs and
+    maps, batch Python UDFs)."""
+    return [
+        n for n in names if "Python" in n or "Pandas" in n or n == "MapInArrow"
+    ]
+
+
+def test_margin_mining_scores_in_one_block_kernel(spark, sf_dir):
+    """The exact path scores the A×B grid once, inside one Python block
+    kernel: no broadcast nested-loop grid and no interpreted cosine."""
+    df = entry_mod.q_margin_mining(spark, sf_dir)
+    names = [n for _, n in _executed_nodes(df)]
+    assert _python_nodes(names) == ["MapInPandas"], names
+    assert "BroadcastNestedLoopJoin" not in names, names
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "zip_with" not in plan
+
+
+def test_margin_mining_lsh_has_no_python_node(spark, sf_dir):
+    """The candidate path stays JVM-side: pushing its candidate grid
+    through Arrow multiplied its time (OPTIMIZATION_r12.md)."""
+    names = [
+        n for _, n in _executed_nodes(entry_mod.q_margin_mining_lsh(spark, sf_dir))
+    ]
+    assert not _python_nodes(names), names

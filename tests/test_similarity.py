@@ -774,3 +774,216 @@ def test_semantic_decontaminate_candidates_path(spark):
     assert {i for i, c in lsh.items() if c} == {
         i for i, (_, c) in brute.items() if c
     }
+
+
+# ---------------------------------------------------------------------------
+# exact brute-force paths: edge-case contract
+# ---------------------------------------------------------------------------
+
+
+def _doubles(df, id_alias, vec_alias):
+    return df.select(
+        F.col("vec_id").alias(id_alias),
+        F.transform("embedding", lambda x: x.cast("double")).alias(vec_alias),
+    )
+
+
+def _exact_margin(a, b, k, threshold, exclude_same_id=False):
+    """``margin_mine_pairs``' definition as plain windows over the full
+    scored A×B grid, with no map-side compaction: the reference its
+    exact path must reproduce row for row."""
+    from pyspark.sql import Window
+
+    from moz_datapipeline_spark.operators.similarity import cosine
+
+    grid = _doubles(a, "_ida", "_va").crossJoin(_doubles(b, "_idb", "_vb"))
+    if exclude_same_id:
+        grid = grid.filter(F.col("_ida") != F.col("_idb"))
+    scored = grid.select(
+        "_ida", "_idb", cosine(F.col("_va"), F.col("_vb")).alias("cosine")
+    )
+
+    def top(key, other):
+        w = Window.partitionBy(key).orderBy(
+            F.col("cosine").desc(), F.col(other).asc()
+        )
+        return (
+            scored.withColumn("_r", F.row_number().over(w))
+            .filter(F.col("_r") <= k)
+            .select(
+                F.col(key).alias("query_id"),
+                F.col(other).alias("corpus_id"),
+                "cosine",
+            )
+        )
+
+    nn_ab, nn_ba = top("_ida", "_idb"), top("_idb", "_ida")
+    dens_a = nn_ab.groupBy("query_id").agg(F.avg("cosine").alias("_da"))
+    dens_b = nn_ba.groupBy("query_id").agg(F.avg("cosine").alias("_db"))
+    s = F.col("_da") + F.col("_db")
+    cand = (
+        nn_ab.join(dens_a, "query_id")
+        .join(dens_b.withColumnRenamed("query_id", "corpus_id"), "corpus_id")
+        .withColumn(
+            "margin", F.when(s > 0, F.col("cosine") / (s / F.lit(2.0)))
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("margin").desc(), F.col("corpus_id").asc()
+    )
+    return (
+        cand.withColumn("_r", F.row_number().over(w))
+        .filter((F.col("_r") == 1) & (F.col("margin") >= float(threshold)))
+        .select(
+            F.col("query_id").alias("id_a"),
+            F.col("corpus_id").alias("id_b"),
+            F.round("cosine", 6).alias("cosine"),
+            F.round("margin", 6).alias("margin"),
+        )
+    )
+
+
+def _exact_topk(corpus, queries, k):
+    """``cosine_topk_bruteforce``' definition as one window over the
+    full scored grid."""
+    from pyspark.sql import Window
+
+    from moz_datapipeline_spark.operators.similarity import cosine
+
+    scored = (
+        _doubles(corpus, "corpus_id", "_cv")
+        .crossJoin(_doubles(queries, "query_id", "_qv"))
+        .filter(F.col("corpus_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "corpus_id",
+            cosine(F.col("_qv"), F.col("_cv")).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("corpus_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _tied_sides(spark, seed, elem="float", n_a=40, n_b=30, dim=6):
+    """Seeded small-integer vectors with planted duplicates inside and
+    across the sides, so many cosines tie exactly and ids break them."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    va = rng.integers(-2, 3, size=(n_a, dim)).astype(float)
+    vb = rng.integers(-2, 3, size=(n_b, dim)).astype(float)
+    # no zero vector: its cosine divides by zero
+    va[np.abs(va).sum(axis=1) == 0, 0] = 1.0
+    vb[np.abs(vb).sum(axis=1) == 0, 0] = 1.0
+    vb[: n_b // 3] = vb[n_b // 3 : 2 * (n_b // 3)]  # duplicates within B
+    va[: n_a // 4] = vb[: n_a // 4]  # duplicates across the sides
+    schema = f"vec_id long, embedding array<{elem}>"
+    a = spark.createDataFrame(
+        [(int(3 * i), [float(x) for x in v]) for i, v in enumerate(va)], schema
+    )
+    b = spark.createDataFrame(
+        [(int(2 * i), [float(x) for x in v]) for i, v in enumerate(vb)], schema
+    )
+    return a, b
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize(
+    "seed,k,threshold,elem",
+    [(0, 3, 0.0, "float"), (1, 4, 1.0, "float"), (2, 1, 0.5, "double")],
+)
+def test_margin_exact_path_equals_exact_windows(
+    spark, seed, k, threshold, elem
+):
+    from moz_datapipeline_spark.operators.similarity import margin_mine_pairs
+
+    a, b = _tied_sides(spark, seed, elem=elem)
+    want = _rows(_exact_margin(a, b, k, threshold))
+    assert want
+    assert _rows(margin_mine_pairs(a, b, k=k, threshold=threshold)) == want
+
+
+@pytest.mark.parametrize(
+    "case", ["exclude_same_id", "k_above_b", "empty_partition", "spread"]
+)
+def test_margin_exact_path_edge_cases(spark, monkeypatch, case):
+    from moz_datapipeline_spark.operators import similarity
+    from moz_datapipeline_spark.operators.similarity import margin_mine_pairs
+
+    a, b = _tied_sides(spark, 5)
+    k, kw = 3, {}
+    if case == "exclude_same_id":
+        kw = {"exclude_same_id": True}
+        b = a  # self-mining: every id is on both sides
+    elif case == "k_above_b":
+        b, k = b.filter(F.col("vec_id") < 8), 9
+    elif case == "empty_partition":
+        a = a.filter(F.col("vec_id") < 9).repartition(8)
+    elif case == "spread":  # the partitioned side is shuffled first
+        monkeypatch.setattr(similarity, "_SPREAD_MACS", 0)
+        a = a.coalesce(1)
+    want = _rows(_exact_margin(a, b, k, 0.0, **kw))
+    assert want
+    assert _rows(margin_mine_pairs(a, b, k=k, threshold=0.0, **kw)) == want
+
+
+def test_bruteforce_topk_equals_exact_window(spark):
+    from moz_datapipeline_spark.operators.similarity import (
+        cosine_topk_bruteforce,
+    )
+
+    a, b = _tied_sides(spark, 0)
+    corpus = a.union(b).repartition(3)
+    queries = corpus.filter(F.col("vec_id") % 4 == 0)
+    want = _rows(
+        _exact_topk(corpus, queries, 4).select(
+            "query_id", "corpus_id", "cosine", "rank"
+        )
+    )
+    got = _rows(cosine_topk_bruteforce(corpus, queries, k=4))
+    assert got == want and len(got) > 0
+
+
+_VECS = "vec_id long, embedding array<double>"
+
+
+def test_exact_paths_zero_norm_divide_by_zero(spark):
+    """A zero vector's cosine divides by zero: ANSI raises, it is not
+    silently a NULL or NaN score."""
+    from moz_datapipeline_spark.operators.similarity import (
+        cosine_topk_bruteforce,
+        margin_mine_pairs,
+    )
+
+    a = spark.createDataFrame([(1, [1.0, 2.0]), (2, [0.0, 0.0])], _VECS)
+    b = spark.createDataFrame([(10, [1.0, 1.0]), (11, [2.0, -1.0])], _VECS)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        margin_mine_pairs(a, b, k=1, threshold=0.0).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        cosine_topk_bruteforce(a, b, k=1).collect()
+
+
+@pytest.mark.parametrize(
+    "bad", [[1.0, None, 2.0], [1.0, float("nan"), 2.0], [1.0, 2.0]],
+    ids=["null_element", "nan_element", "length_mismatch"],
+)
+def test_margin_unscorable_vector_raises_naming_it(spark, bad):
+    """A vector the cosine cannot score raises in the task and names
+    its id, instead of ranking a NULL or NaN score among real ones."""
+    from moz_datapipeline_spark.operators.similarity import margin_mine_pairs
+
+    a = spark.createDataFrame(
+        [(1, [1.0, 2.0, 0.5]), (77, bad), (3, [0.2, 1.0, 1.0])], _VECS
+    )
+    b = spark.createDataFrame(
+        [(10, [1.0, 1.0, 1.0]), (11, [2.0, -1.0, 0.0])], _VECS
+    )
+    with pytest.raises(Exception, match="vec_id 77"):
+        margin_mine_pairs(a, b, k=1, threshold=0.0).collect()

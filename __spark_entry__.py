@@ -26,7 +26,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    from moz_datapipeline_spark.sources.readers import read_parquet
+
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -657,7 +659,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``unix_micros(cast(ts as timestamp))`` which shifts with the
     session timezone."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _t(spark, sf_dir, "events")
     ts_type = df.schema["ts"].dataType.typeName()
     if ts_type.startswith("timestamp"):
         df = df.withColumn(
@@ -1220,6 +1222,7 @@ def q_dedup_stream_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
+    from moz_datapipeline_spark.sources.readers import parquet_schema
     from moz_datapipeline_spark.streaming.stateful import dedup_stream
 
     _events(spark, sf_dir)  # sets the nanos-ts conf for the raw read
@@ -1230,7 +1233,7 @@ def q_dedup_stream_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.abspath(f"{sf_dir}/events.parquet"),
         f"{src_dir}/events.parquet",
     )
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .parquet(src_dir)

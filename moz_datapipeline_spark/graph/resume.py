@@ -28,6 +28,8 @@ from collections.abc import Callable, Iterator, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from moz_datapipeline_spark.sources.readers import read_parquet
+
 
 def fan_out(
     spark: SparkSession,
@@ -71,7 +73,7 @@ def fan_out(
         from pyspark.errors import AnalysisException
 
         try:
-            existing = spark.read.parquet(checkpoint_dir)
+            existing = read_parquet(spark, checkpoint_dir)
             todo = scenarios.join(
                 existing.select(*keys).distinct(), list(keys), "left_anti"
             )
@@ -81,12 +83,14 @@ def fan_out(
     if checkpoint_dir is None:
         return result
     if existing is not None:
-        # a drifted checkpoint must fail HERE, deterministically —
-        # otherwise parquet schema inference picks whichever file it
-        # lists first and the mismatch surfaces (or not) at random.
-        # Compare (name, type) pairs, not just names: a same-named
-        # column written as a different type creates a mixed-schema
-        # directory whose read-back fails nondeterministically too.
+        # a drifted checkpoint must fail HERE, before anything is
+        # appended: ``existing``'s schema is the footer of the first
+        # data file by path, so once files of two schemas share the
+        # directory every later read takes whichever schema sorts first
+        # and the mismatch surfaces only when a scan reaches a file of
+        # the other.  Compare (name, type) pairs, not just names: a
+        # same-named column written as a different type makes such a
+        # mixed-schema directory too.
         have = sorted((f.name, f.dataType.simpleString()) for f in existing.schema)
         want = sorted((f.name, f.dataType.simpleString()) for f in result.schema)
         if have != want:
@@ -99,15 +103,18 @@ def fan_out(
     result.write.mode("append").parquet(checkpoint_dir)
     if existing is None:
         # cold start: the directory holds exactly this run's rows
-        return spark.read.parquet(checkpoint_dir)
+        return read_parquet(spark, checkpoint_dir)
     # warm resume: existing ∪ just-appended files only — a directory
-    # LISTING (metadata) finds the new part files, but the data rescan
-    # is O(new rows) instead of O(all results) per resume cycle.
-    # ``existing``'s FileIndex was fixed at its read, so re-executing it
-    # never double-counts the appended files.
+    # LISTING (metadata, with the known schema: no inference job) finds
+    # the new part files, but the data rescan is O(new rows) instead of
+    # O(all results) per resume cycle.  ``existing``'s FileIndex was
+    # fixed at its read, so re-executing it never double-counts the
+    # appended files.
     new_files = [
         f
-        for f in spark.read.parquet(checkpoint_dir).inputFiles()
+        for f in spark.read.schema(existing.schema)
+        .parquet(checkpoint_dir)
+        .inputFiles()
         if f not in prior_files
     ]
     if not new_files:

@@ -69,6 +69,7 @@ from moz_datapipeline_spark.operators.dedup import (
     band_hashes,
     minhash_signatures,
 )
+from moz_datapipeline_spark.sources.readers import read_parquet
 
 _SIGS = "sigs"
 _BANDS = "bands"
@@ -105,7 +106,7 @@ def _read_meta(spark: SparkSession, store_dir: str) -> dict | None:
     from pyspark.errors import AnalysisException
 
     try:
-        row = spark.read.parquet(f"{store_dir}/{_META}").head()
+        row = read_parquet(spark, f"{store_dir}/{_META}").head()
     except AnalysisException:
         return None
     return row.asDict() if row is not None else None

@@ -20,7 +20,10 @@ keeps only top-k rows under the window order ``cosine desc, id asc``
 (NaN first), so their rows equal the plain full-grid windows'. A null
 vector, a null or NaN element, or a length mismatch raises naming the
 ``vec_id``; a zero norm raises DIVIDE_BY_ZERO. Ids are unique within
-each side.
+each side. The paths that score in SQL (``lsh_bucket_topk``, the IVF
+paths and the PQ/IVFADC exact rerank) check their vectors the same way
+in the task (``_checked_vec``), so a bad vector never ranks a NULL or
+NaN score among real ones.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ from pyspark.sql import functions as F
 
 from moz_datapipeline_spark.iterate import owned
 from moz_datapipeline_spark.operators.spread import spread_small_scan
+from moz_datapipeline_spark.sources.readers import read_parquet
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -55,6 +59,35 @@ def cosine(a: Column, b: Column) -> Column:
 
 def _as_double(col: str) -> Column:
     return F.transform(F.col(col), lambda x: x.cast("double")).alias(col)
+
+
+def _checked_vec(id_col: str, vec_col: str, dim: int | None = None) -> Column:
+    """``vec_col`` as ``array<double>``, raising in the task and naming
+    the ``id_col`` value on a vector no exact score can use: a null
+    vector, a null or NaN element, or (with ``dim``) a length other than
+    ``dim``.  ``_checked_matrix``'s contract, JVM-side, for the paths
+    that score in SQL."""
+    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+
+    def fail(*what: Column) -> Column:
+        return F.raise_error(
+            F.concat(F.lit("vec_id "), F.col(id_col).cast("string"), *what)
+        )
+
+    checked = F.when(v.isNull(), fail(F.lit(" has a null vector")))
+    if dim is not None:
+        checked = checked.when(
+            F.size(v) != dim,
+            fail(
+                F.lit(" has "),
+                F.size(v).cast("string"),
+                F.lit(f" elements, expected {dim}"),
+            ),
+        )
+    return checked.when(
+        F.exists(v, lambda x: x.isNull() | F.isnan(x)),
+        fail(F.lit(" has a null or NaN element")),
+    ).otherwise(v)
 
 
 def _partition_topk(
@@ -530,7 +563,8 @@ def lsh_bucket_topk(
     tables = _plane_tables(dim, n_planes, n_tables)
     c = _bucketed(
         corpus.select(
-            F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("_cv")
+            F.col(id_col).alias("corpus_id"),
+            _checked_vec(id_col, vec_col, dim).alias("_cv"),
         ),
         "corpus_id",
         "_cv",
@@ -538,7 +572,8 @@ def lsh_bucket_topk(
     )
     q = _bucketed(
         queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
+            F.col(id_col).alias("query_id"),
+            _checked_vec(id_col, vec_col, dim).alias("_qv"),
         ),
         "query_id",
         "_qv",
@@ -577,7 +612,7 @@ def _ivf_centroid_sample(
     return (
         corpus.select(
             F.col(id_col).alias("centroid_id"),
-            _as_double(vec_col).alias("_ce"),
+            _checked_vec(id_col, vec_col).alias("_ce"),
         )
         .orderBy(
             F.md5(F.col("centroid_id").cast("string")).asc(),
@@ -590,11 +625,25 @@ def _ivf_centroid_sample(
 def _nearest_lists(
     df: DataFrame, cent: DataFrame, vec: str, n: int, out: str
 ) -> DataFrame:
-    """Attach each row's ``n`` nearest centroid ids as ``out``."""
-    scored = df.crossJoin(F.broadcast(cent)).withColumn(
-        "_sim", cosine(F.col(vec), F.col("_ce"))
-    )
+    """Attach each row's ``n`` nearest centroid ids as ``out``.  Every
+    row meets every centroid here, so a length mismatch raises here,
+    naming the row's ``vec_id`` and the centroid."""
     key = df.columns[0]
+    n_row, n_cent = F.size(F.col(vec)), F.size(F.col("_ce"))
+    mismatch = F.raise_error(
+        F.concat(
+            F.lit("vec_id "), F.col(key).cast("string"),
+            F.lit(" has "), n_row.cast("string"),
+            F.lit(" elements but centroid "), F.col("centroid_id").cast("string"),
+            F.lit(" has "), n_cent.cast("string"),
+        )
+    )
+    scored = df.crossJoin(F.broadcast(cent)).withColumn(
+        "_sim",
+        F.when(n_row != n_cent, mismatch).otherwise(
+            cosine(F.col(vec), F.col("_ce"))
+        ),
+    )
     if n == 1:
         # corpus assignment: argmin as a partial-aggregating groupBy
         # (min over struct, cosine desc ≡ min(-sim) with centroid-id
@@ -649,12 +698,14 @@ def ivf_topk(
     shuffle is bounded by nprobe/n_centroids of the cross product.
     """
     c = corpus.select(
-        F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("_cv")
+        F.col(id_col).alias("corpus_id"),
+        _checked_vec(id_col, vec_col).alias("_cv"),
     )
     cent = _ivf_centroid_sample(corpus, n_centroids, id_col, vec_col)
     assigned = _nearest_lists(c, cent, "_cv", 1, "list_id")
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
+        F.col(id_col).alias("query_id"),
+        _checked_vec(id_col, vec_col).alias("_qv"),
     )
     probed = _nearest_lists(q, cent, "_qv", nprobe, "list_id")
 
@@ -717,7 +768,8 @@ def build_ivf_index(
         "list_pid", (F.row_number().over(w) - 1).cast("int")
     )
     c = corpus.select(
-        F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("_cv")
+        F.col(id_col).alias("corpus_id"),
+        _checked_vec(id_col, vec_col).alias("_cv"),
     )
     assigned = _nearest_lists(
         c, cent.select(F.col("list_pid").alias("centroid_id"), "_ce"),
@@ -753,7 +805,7 @@ def append_ivf_index(
     would scan the index per batch); callers own id uniqueness, same as
     ``build_ivf_index``.
     """
-    cent_raw = spark.read.parquet(f"{path}/centroids")
+    cent_raw = read_parquet(spark, f"{path}/centroids")
     if "list_pid" not in cent_raw.columns:
         raise ValueError(
             f"IVF index at {path} predates the dense list_pid partition "
@@ -764,7 +816,8 @@ def append_ivf_index(
         F.col("centroid_vec").alias("_ce"),
     )
     c = new_corpus.select(
-        F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("_cv")
+        F.col(id_col).alias("corpus_id"),
+        _checked_vec(id_col, vec_col).alias("_cv"),
     )
     assigned = _nearest_lists(c, cent, "_cv", 1, "list_pid")
     to_write = assigned.select(
@@ -817,7 +870,7 @@ def ivf_topk_indexed(
     read.  Scoring/ranking is identical to ``ivf_topk`` (bounded
     partial top-k before the rank exchange).
     """
-    cent_raw = spark.read.parquet(f"{path}/centroids")
+    cent_raw = read_parquet(spark, f"{path}/centroids")
     if "list_pid" not in cent_raw.columns:
         raise ValueError(
             f"IVF index at {path} predates the dense list_pid partition "
@@ -839,7 +892,8 @@ def ivf_topk_indexed(
             "would mis-match — rebuild the index"
         )
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
+        F.col(id_col).alias("query_id"),
+        _checked_vec(id_col, vec_col).alias("_qv"),
     )
     probed = _nearest_lists(q, cent, "_qv", nprobe, "list_pid")
     scored = (
@@ -1750,7 +1804,7 @@ def pq_topk(
             "embeddings DataFrame the codes were trained from"
         )
     return _rank_adc_then_rerank(
-        scored, k, rerank, corpus, queries, id_col, query_id_col, vec_col
+        scored, k, rerank, corpus, queries, id_col, query_id_col, vec_col, dim
     )
 
 
@@ -1763,6 +1817,7 @@ def _rank_adc_then_rerank(
     id_col: str,
     query_id_col: str,
     vec_col: str,
+    dim: int,
 ) -> DataFrame:
     """Shared ranking tail of ``pq_topk`` and ``ivfadc_topk``: bound the
     exchange with a map-side partial top-k, exact-rank the ADC
@@ -1783,7 +1838,7 @@ def _rank_adc_then_rerank(
     if rerank is None:
         return adc
     return _exact_rerank(
-        adc, corpus, queries, k, id_col, query_id_col, vec_col
+        adc, corpus, queries, k, id_col, query_id_col, vec_col, dim
     )
 
 
@@ -1795,11 +1850,14 @@ def _exact_rerank(
     id_col: str,
     query_id_col: str,
     vec_col: str,
+    dim: int,
 ) -> DataFrame:
     """Exact-rescore tail shared by ``pq_topk`` and ``ivfadc_topk``:
     the (small) candidate ids and query vectors broadcast into a corpus
     scan, exact squared-L2 replaces the quantized distance, map-side
-    partial top-k bounds the final rank exchange."""
+    partial top-k bounds the final rank exchange.  A rescored vector
+    that is null, holds a null or NaN, or is not ``dim`` long raises
+    naming its id (``_checked_vec``)."""
     cvec = corpus.select(
         F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("_cv")
     )
@@ -1814,7 +1872,9 @@ def _exact_rerank(
             "corpus_id",
             F.aggregate(
                 F.zip_with(
-                    F.col("_qv"), F.col("_cv"), lambda x, y: (x - y) * (x - y)
+                    _checked_vec(query_id_col, "_qv", dim),
+                    _checked_vec("corpus_id", "_cv", dim),
+                    lambda x, y: (x - y) * (x - y),
                 ),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
@@ -1982,7 +2042,7 @@ def ivfadc_topk(
         .select("query_id", "corpus_id", _adc_dist().alias("adc_dist"))
     )
     return _rank_adc_then_rerank(
-        scored, k, rerank, corpus, queries, id_col, "query_id", vec_col
+        scored, k, rerank, corpus, queries, id_col, "query_id", vec_col, dim
     )
 
 

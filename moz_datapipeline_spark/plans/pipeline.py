@@ -10,7 +10,10 @@ stage is explicitly checkpointed.
 Checkpointing (``materialize=True``) writes Parquet and re-reads it:
 that is the engine's version of the reference's per-stage files and the
 EAUL per-way S3 restartability (script-eaul/README.md:63-68) — resume =
-skip stages whose output Parquet already exists.
+skip stages whose output Parquet already exists.  A re-read (and a
+resumed stage's read) costs no Spark job: ``sources.readers.read_parquet``
+takes the schema from one footer on the driver, so only the write runs
+jobs.
 """
 
 from __future__ import annotations
@@ -20,6 +23,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from moz_datapipeline_spark.sources.readers import read_parquet
 
 
 @dataclass
@@ -59,12 +64,12 @@ class Pipeline:
                 f"{self.checkpoint_dir}/{st.name}" if self.checkpoint_dir else None
             )
             if resume and st.materialize and path and self._exists(path):
-                self.results[st.name] = self.spark.read.parquet(path)
+                self.results[st.name] = read_parquet(self.spark, path)
             else:
                 out = st.fn(*[self.results[i] for i in st.inputs])
                 if st.materialize and path:
                     out.write.mode("overwrite").parquet(path)
-                    out = self.spark.read.parquet(path)
+                    out = read_parquet(self.spark, path)
                 self.results[st.name] = out
             self.timings[st.name] = time.perf_counter() - t0
         return self.results

@@ -99,4 +99,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
             "documents",
             "embeddings",
         )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
+    from moz_datapipeline_spark.sources.readers import read_parquet
+
+    return {n: read_parquet(spark, f"{sf_dir}/{n}.parquet") for n in names}

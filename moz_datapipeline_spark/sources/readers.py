@@ -40,8 +40,87 @@ LINESTRING_COORDS = T.ArrayType(
 )
 
 
+#: Parquet summary files; Spark's inference reads these before any data file
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing rule (``HadoopFSUtils.shouldFilterOutPathName``):
+    ``_``/``.`` names and in-flight ``._COPYING_`` files are not data."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_file(fs, hpath):
+    """The Hadoop path of the file whose footer Spark's non-merging
+    schema inference reads for ``hpath``, or ``None`` when the inference
+    is left to Spark: the path is missing (or a glob), or the directory
+    holds no data file, or holds a summary file."""
+    if not fs.exists(hpath):
+        return None
+    if not fs.getFileStatus(hpath).isDirectory():
+        return hpath
+    data = []
+    for st in fs.listStatus(hpath):
+        p = st.getPath()
+        name = p.getName()
+        if name.startswith(_SUMMARY_FILES):
+            return None
+        if _hidden(name):
+            continue
+        if st.isDirectory():
+            raise ValueError(
+                f"read_parquet: {hpath.toString()} contains the subdirectory "
+                f"{name!r}; a partitioned layout is read with spark.read.parquet"
+            )
+        data.append((p.toString(), p))
+    # ParquetUtils.splitFiles orders the leaves by their path string
+    return min(data, key=lambda d: d[0])[1] if data else None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read from one
+    footer on the driver instead of in a Spark job.
+
+    Spark's non-merging inference reads the footer of the first data
+    file by path (``_``/``.`` names skipped) and converts it with
+    ``ParquetFileFormat.readSchemaFromFooter``; this does the same, with
+    a converter built from the session's SQLConf, so session settings
+    such as ``spark.sql.legacy.parquet.nanosAsLong`` apply.  A path this
+    cannot resolve to one footer (missing, a glob, an empty directory, a
+    summary file, schema merging on) goes to Spark's own inference, so
+    its result and its ``AnalysisException`` are Spark's.  A directory
+    with a partition subdirectory raises ``ValueError``."""
+    jvm = spark.sparkContext._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hfile = _footer_file(hpath.getFileSystem(conf), hpath)
+    if hfile is None or state.conf().isParquetSchemaMergingEnabled():
+        return spark.read.parquet(path).schema
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        hfile,
+        pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hfile, conf),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        ),
+    )
+    converter = pq.ParquetToSparkSchemaConverter(state.conf())
+    jschema = pq.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+    # a file source's data schema is nullable (DataSource.resolveRelation)
+    return T._parse_datatype_json_string(jschema.asNullable().json())
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """``spark.read.parquet(path)`` for a flat layout (one file, or a
+    directory of part files) with the schema passed up front, so
+    opening a table or a checkpoint runs no schema-inference job (see
+    ``parquet_schema``).  Partitioned layouts keep ``spark.read.parquet``."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def read_indicator_csv(spark: SparkSession, path: str) -> DataFrame:

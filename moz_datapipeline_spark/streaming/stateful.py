@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from moz_datapipeline_spark.sources.readers import read_parquet
+
 OUT_SCHEMA = "key string, fingerprint long, n_new long"
 STATE_SCHEMA = "seen array<long>"
 
@@ -257,7 +259,7 @@ def hll_store_estimate(
 
     gc = group_cols or []
     regs = (
-        spark.read.parquet(store_dir)
+        read_parquet(spark, store_dir)
         .groupBy(*gc, "bucket")
         .agg(F.max("max_rho").alias("max_rho"))
     )
@@ -278,7 +280,7 @@ def compact_hll_store(
 
     gc = group_cols or []
     merged = (
-        spark.read.parquet(store_dir)
+        read_parquet(spark, store_dir)
         .groupBy(*gc, "bucket")
         .agg(F.max("max_rho").alias("max_rho"))
     )
@@ -376,7 +378,7 @@ def cms_store_estimate(
     from moz_datapipeline_spark.operators.dedup import _token_hash
 
     cells = (
-        spark.read.parquet(store_dir)
+        read_parquet(spark, store_dir)
         .groupBy("batch_id", "d", "bucket")
         .agg(F.max("c").alias("c"))
         .groupBy("d", "bucket")
@@ -427,7 +429,7 @@ def compact_cms_store(spark, store_dir: str) -> None:
     from moz_datapipeline_spark.operators.incremental import _swap_dirs
 
     merged = (
-        spark.read.parquet(store_dir)
+        read_parquet(spark, store_dir)
         .groupBy("batch_id", "d", "bucket")
         .agg(F.max("c").alias("c"))
     )

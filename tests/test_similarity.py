@@ -987,3 +987,60 @@ def test_margin_unscorable_vector_raises_naming_it(spark, bad):
     )
     with pytest.raises(Exception, match="vec_id 77"):
         margin_mine_pairs(a, b, k=1, threshold=0.0).collect()
+
+
+_UNSCORABLE = pytest.mark.parametrize(
+    "bad",
+    [None, [1.0, None, 2.0], [1.0, float("nan"), 2.0], [1.0, 2.0]],
+    ids=["null_vector", "null_element", "nan_element", "length_mismatch"],
+)
+
+
+def _corpus_with(spark, bad, bad_id=7, n=60):
+    """``n`` seeded 3-d vectors with ``bad`` in place of ``bad_id``'s."""
+    import numpy as np
+
+    x = np.random.default_rng(5).normal(size=(n, 3))
+    rows = [(i, bad if i == bad_id else [float(v) for v in x[i]]) for i in range(n)]
+    return spark.createDataFrame(rows, _VECS)
+
+
+@_UNSCORABLE
+def test_ivf_unscorable_vector_raises_naming_it(spark, bad):
+    """A vector the cosine cannot score raises in the task and names its
+    id, instead of letting a NULL or NaN score displace a neighbour.  A
+    length mismatch surfaces where rows meet the centroids, so the bad
+    vector may be named as either side."""
+    from moz_datapipeline_spark.operators.similarity import ivf_topk
+
+    corpus = _corpus_with(spark, bad)
+    queries = corpus.filter(F.col("vec_id") < 10)
+    with pytest.raises(Exception, match=r"(vec_id|centroid) 7 has"):
+        ivf_topk(corpus, queries, n_centroids=4, nprobe=4, k=3).collect()
+
+
+@_UNSCORABLE
+def test_lsh_unscorable_vector_raises_naming_it(spark, bad):
+    from moz_datapipeline_spark.operators.similarity import lsh_bucket_topk
+
+    corpus = _corpus_with(spark, bad)
+    queries = corpus.filter(F.col("vec_id") < 10)
+    with pytest.raises(Exception, match="vec_id 7 has"):
+        lsh_bucket_topk(corpus, queries, dim=3, k=3, n_planes=2).collect()
+
+
+@_UNSCORABLE
+def test_pq_rerank_unscorable_vector_raises_naming_it(spark, bad):
+    """The exact rerank checks the vectors it rescores: codes trained on
+    clean vectors, reranked against a corpus holding a bad one."""
+    from moz_datapipeline_spark.operators.similarity import pq_encode, pq_topk
+
+    clean = _corpus_with(spark, [0.5, 0.5, 0.5])
+    codes_df, books_df = pq_encode(
+        clean, m=1, k=4, iterations=1, dim=3, init_stride=4
+    )
+    with pytest.raises(Exception, match="vec_id 7 has"):
+        pq_topk(
+            codes_df, books_df, clean.filter(F.col("vec_id") < 3), k=3, m=1,
+            dim=3, rerank=60, corpus=_corpus_with(spark, bad),
+        ).collect()

@@ -21203,7 +21203,7 @@ def q_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """"Customers who bought X also bought": top-5 cosine item
     neighbors per part over customer↔part purchase edges
     (graph/aggregate.item_similarity — the projection's in-task pair
-    plan + broadcast degree join + WindowGroupLimit; cap disabled
+    plan with its own item degrees + WindowGroupLimit; cap disabled
     here so the oracle replays exactly).  VALUE oracle: self-join
     pair counts + identical cosine + row_number in DuckDB."""
     from moz_datapipeline_spark.graph.aggregate import item_similarity

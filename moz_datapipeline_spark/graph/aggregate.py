@@ -72,31 +72,20 @@ def neighbor_feature_aggregate(
     return one_hop(first, "mean_f")
 
 
-def bipartite_projection(
+def _projection(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_right_degree: int | None = 1000,
-    min_weight: int = 1,
+    src: str,
+    dst: str,
+    max_right_degree: int | None,
+    min_weight: int,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Project a bipartite edge list onto its LEFT side: one row per
-    left-node pair sharing ≥ ``min_weight`` right neighbors —
-    ``(node_a < node_b, weight, jaccard)`` with ``weight`` the shared-
-    neighbor count and ``jaccard`` over the two left degrees.  The
-    standard graph-construction step before community detection /
-    similarity over co-occurrence (users sharing items, suppliers
-    sharing parts, docs sharing shingles).
+    """``bipartite_projection``'s pair plan before its readout: one row
+    per left pair ``(_a < _b, weight, _da, _db)`` with both exact left
+    degrees, so the jaccard and cosine readouts share one plan.
 
-    Same quadratic hazard and same remedy as ``linkpred``: a right
-    node of degree d emits d² pairs, so ``max_right_degree`` DEFAULTS
-    to 1000 (drop mega-hubs, surface the count via ``stats`` — one
-    tiny aggregate, only when a dict is passed); left degrees stay
-    exact, so ``jaccard`` denominators are unaffected by the cap.
-    Duplicate edges collapse first.
-
-    Plan: ONE exchange groups edges by right key into sorted neighbor
-    sets (collect_set dedupes duplicate edges map-side, so no separate
+    ONE exchange groups edges by right key into sorted neighbor sets
+    (collect_set dedupes duplicate edges map-side, so no separate
     distinct pass); the cap is a set-size filter; ordered pairs
     generate IN-TASK from each set via a two-stage posexplode
     (Σ min(deg, cap)² primitive rows that partial-aggregate before the
@@ -146,27 +135,49 @@ def bipartite_projection(
         .agg(F.count(F.lit(1)).alias("weight"))
         .filter(F.col("weight") >= int(min_weight))
     )
-    return (
-        pairs.join(
-            ldeg.select(F.col("_node").alias("_a"), F.col("_deg").alias("_da")),
-            "_a",
-        )
-        .join(
-            ldeg.select(F.col("_node").alias("_b"), F.col("_deg").alias("_db")),
-            "_b",
-        )
-        .select(
-            F.col("_a").alias("node_a"),
-            F.col("_b").alias("node_b"),
-            "weight",
-            F.round(
-                F.col("weight").cast("double")
-                / (F.col("_da") + F.col("_db") - F.col("weight")).cast(
-                    "double"
-                ),
-                6,
-            ).alias("jaccard"),
-        )
+    return pairs.join(
+        ldeg.select(F.col("_node").alias("_a"), F.col("_deg").alias("_da")),
+        "_a",
+    ).join(
+        ldeg.select(F.col("_node").alias("_b"), F.col("_deg").alias("_db")),
+        "_b",
+    )
+
+
+def bipartite_projection(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_right_degree: int | None = 1000,
+    min_weight: int = 1,
+    stats: dict | None = None,
+) -> DataFrame:
+    """Project a bipartite edge list onto its LEFT side: one row per
+    left-node pair sharing ≥ ``min_weight`` right neighbors —
+    ``(node_a < node_b, weight, jaccard)`` with ``weight`` the shared-
+    neighbor count and ``jaccard`` over the two left degrees.  The
+    standard graph-construction step before community detection /
+    similarity over co-occurrence (users sharing items, suppliers
+    sharing parts, docs sharing shingles).
+
+    Same quadratic hazard and same remedy as ``linkpred``: a right
+    node of degree d emits d² pairs, so ``max_right_degree`` DEFAULTS
+    to 1000 (drop mega-hubs, surface the count via ``stats`` — one
+    tiny aggregate, only when a dict is passed); left degrees stay
+    exact, so ``jaccard`` denominators are unaffected by the cap.
+    Duplicate edges collapse first.  Plan: ``_projection``.
+    """
+    return _projection(
+        edges, src, dst, max_right_degree, min_weight, stats
+    ).select(
+        F.col("_a").alias("node_a"),
+        F.col("_b").alias("node_b"),
+        "weight",
+        F.round(
+            F.col("weight").cast("double")
+            / (F.col("_da") + F.col("_db") - F.col("weight")).cast("double"),
+            6,
+        ).alias("jaccard"),
     )
 
 
@@ -187,52 +198,35 @@ def item_similarity(
     mega-hub users exactly like the projection's right-degree cap —
     a user who bought everything says nothing about any pair).
 
-    Plan: the projection's one-exchange pair plan, an item-sized
-    degree join (broadcast-eligible), pair symmetrization (a map-side
-    union — each undirected pair serves both directions), and a
-    per-item WindowGroupLimit top-k (ties break on the neighbor id).
+    Plan: the projection's plan, whose item degrees are the exact,
+    uncapped ones the cosine needs; cosine per undirected pair
+    (``da·db`` commutes, so both directions get the same bits); one
+    generator mirrors each pair into its two directed rows (a union of
+    the pairs with their mirror would plan the projection twice); then
+    a per-item WindowGroupLimit top-k (ties break on the neighbor id).
     """
     if k < 1:
         raise ValueError("item_similarity: k must be >= 1")
-    proj = bipartite_projection(
-        edges,
-        src=item_col,
-        dst=user_col,
-        max_right_degree=max_user_degree,
-        min_weight=min_weight,
+    proj = _projection(edges, item_col, user_col, max_user_degree, min_weight)
+    cos = F.col("weight").cast("double") / F.sqrt(
+        F.col("_da").cast("double") * F.col("_db").cast("double")
     )
-    deg = (
-        edges.select(
-            F.col(item_col).alias("_i"), F.col(user_col).alias("_u")
-        )
-        .distinct()
-        .groupBy("_i")
-        .agg(F.count(F.lit(1)).alias("_deg"))
-    )
-    pairs = proj.select("node_a", "node_b", "weight").unionByName(
-        proj.select(
-            F.col("node_b").alias("node_a"),
-            F.col("node_a").alias("node_b"),
-            "weight",
-        )
-    )
-    j = (
-        pairs.join(
-            F.broadcast(deg.withColumnRenamed("_i", "node_a")).withColumnRenamed(
-                "_deg", "_da"
-            ),
-            "node_a",
-        )
-        .join(
-            F.broadcast(deg.withColumnRenamed("_i", "node_b")).withColumnRenamed(
-                "_deg", "_db"
-            ),
-            "node_b",
-        )
-        .withColumn(
-            "_cos",
-            F.col("weight").cast("double")
-            / F.sqrt(F.col("_da").cast("double") * F.col("_db").cast("double")),
+    j = proj.withColumn("_cos", cos).select(
+        F.inline(
+            F.array(
+                F.struct(
+                    F.col("_a").alias("node_a"),
+                    F.col("_b").alias("node_b"),
+                    "weight",
+                    "_cos",
+                ),
+                F.struct(
+                    F.col("_b").alias("node_a"),
+                    F.col("_a").alias("node_b"),
+                    "weight",
+                    "_cos",
+                ),
+            )
         )
     )
     w = Window.partitionBy("node_a").orderBy(

@@ -37,7 +37,7 @@ def build_edges(
     )
     return exploded.select(
         "way_id",
-        F.col("_nodes").getItem(F.col("_i")).alias("src"),
-        F.col("_nodes").getItem(F.col("_i") + 1).alias("dst"),
+        F.col("_nodes")[F.col("_i")].alias("src"),
+        F.col("_nodes")[F.col("_i") + 1].alias("dst"),
         "weight",
     )

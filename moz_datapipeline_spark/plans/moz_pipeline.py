@@ -48,10 +48,10 @@ def explode_way_segments(ways: DataFrame, coords_col: str = "coordinates") -> Da
     return e.select(
         "NAME",
         "ROAD_ID",
-        F.col("_c").getItem(F.col("_i")).getField("lon").alias("ax"),
-        F.col("_c").getItem(F.col("_i")).getField("lat").alias("ay"),
-        F.col("_c").getItem(F.col("_i") + 1).getField("lon").alias("bx"),
-        F.col("_c").getItem(F.col("_i") + 1).getField("lat").alias("by"),
+        F.col("_c")[F.col("_i")].getField("lon").alias("ax"),
+        F.col("_c")[F.col("_i")].getField("lat").alias("ay"),
+        F.col("_c")[F.col("_i") + 1].getField("lon").alias("bx"),
+        F.col("_c")[F.col("_i") + 1].getField("lat").alias("by"),
     )
 
 

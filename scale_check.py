@@ -19,7 +19,10 @@ zones, matching the reference's traffic_matrix.csv width) and compares
 the closed-form min-plus overlay per scenario against the full
 recompute it replaced.
 
-Run: python scale_check.py  (writes nothing outside /tmp; one JSON line)
+Run: python scale_check.py [--only SECTION[,SECTION]]
+(writes nothing outside /tmp; one JSON line; ``--only`` runs the named
+sections of ``SECTIONS`` alone and skips building the amplified corpus
+unless one of them takes it)
 """
 
 from __future__ import annotations
@@ -318,9 +321,9 @@ def round11d_ops_scale_check(spark) -> dict:
     out["itemsim_rows_out"] = sim.count()
     out["itemsim_sec"] = round(time.perf_counter() - t0, 2)
     out["itemsim_shuffle"] = (
-        "projection pair plan (in-task pair generation under the "
-        "user-degree cap) + broadcast degree join + per-item "
-        "WindowGroupLimit"
+        "projection pair plan, planned once (in-task pair generation "
+        "under the user-degree cap; item degrees from the same grouped "
+        "sets) + one-generator pair mirror + per-item WindowGroupLimit"
     )
 
     n_ev = 20_000_000
@@ -2448,7 +2451,8 @@ def _section_gc(spark) -> None:
         rdd.unpersist(True)
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    chosen = _chosen_sections(argv)
     # 24g driver heap: local-mode broadcasts build in THIS JVM, and
     # twenty sections of rehearsal state need headroom beyond the 8g
     # test default (the VM has 128 GiB)
@@ -2462,7 +2466,15 @@ def main() -> None:
             )
         },
     )
+    if not any(takes_docs for _, _, takes_docs in chosen):
+        print(json.dumps(run_sections(spark, chosen)))
+        return
     docs = amplified_corpus(spark, "/root/testdata/sf0.1/documents.parquet")
+    print(json.dumps(run_sections(spark, chosen, docs)))
+
+
+def dedup_scale_check(spark, docs) -> dict:
+    """The near-dup path over the amplified corpus, with LSH recall."""
     n_docs = docs.count()
     n_origins = n_docs // 10
 
@@ -2487,98 +2499,83 @@ def main() -> None:
     t_cluster = time.perf_counter() - t0
 
     recall, n_truth = lsh_recall(docs, n_origins, cands)
-    hygiene = hygiene_scale_check(spark, docs)
-    _section_gc(spark)
-    pq = pq_recall_check(spark)
-    pq_rerank = pq_rerank_scale_check(spark)
-    _section_gc(spark)
-    incr = incremental_scale_check(spark, docs)
-    _section_gc(spark)
-    media = media_scale_check(spark)
-    routing = routing_scale_check(spark)
-    _section_gc(spark)
-    graph_lm = graph_lm_scale_check(spark, docs)
-    _section_gc(spark)
-    components = components_scale_check(spark)
-    _section_gc(spark)
-    heavy_new = containment_semdedup_scale_check(spark, docs)
-    _section_gc(spark)
-    warc = warc_scale_check(spark, docs)
-    _section_gc(spark)
-    bpe = bpe_scale_check(spark, docs)
-    _section_gc(spark)
-    kc = kcore_scale_check(spark)
-    fz = fuzzy_scale_check(spark)
-    _section_gc(spark)
-    rh = retrieval_hll_scale_check(spark, docs)
-    rr2 = rank_retrieval2_scale_check(spark, docs)
-    _section_gc(spark)
-    r7 = round7_ops_scale_check(spark, docs)
-    _section_gc(spark)
-    r8 = round8_ops_scale_check(spark, docs)
-    _section_gc(spark)
-    r9 = round9_ops_scale_check(spark)
-    _section_gc(spark)
-    r10 = round10_ops_scale_check(spark)
-    _section_gc(spark)
-    r11 = round11_ops_scale_check(spark)
-    _section_gc(spark)
-    r11b = round11b_ops_scale_check(spark)
-    _section_gc(spark)
-    r11c = round11c_ops_scale_check(spark)
-    _section_gc(spark)
-    r11d = round11d_ops_scale_check(spark)
-    _section_gc(spark)
-    r11e = round11e_ops_scale_check(spark)
-    _section_gc(spark)
-    r11f = round11f_ops_scale_check(spark)
-    _section_gc(spark)
-    r12 = round12_ops_scale_check(spark)
+    return {
+        "n_docs": n_docs,
+        "lsh_candidates": n_cands,
+        "verified_pairs": n_verified,
+        "true_neardup_pairs": n_truth,
+        "lsh_recall": round(recall, 4),
+        "clusters": n_clusters,
+        "docs_kept": n_kept,
+        "removed_ratio": round(1 - n_kept / n_docs, 4),
+        "t_lsh_sec": round(t_lsh, 2),
+        "t_verify_sec": round(t_verify, 2),
+        "t_cluster_sec": round(t_cluster, 2),
+    }
 
-    print(
-        json.dumps(
-            {
-                "n_docs": n_docs,
-                "lsh_candidates": n_cands,
-                "verified_pairs": n_verified,
-                "true_neardup_pairs": n_truth,
-                "lsh_recall": round(recall, 4),
-                "clusters": n_clusters,
-                "docs_kept": n_kept,
-                "removed_ratio": round(1 - n_kept / n_docs, 4),
-                "t_lsh_sec": round(t_lsh, 2),
-                "t_verify_sec": round(t_verify, 2),
-                "t_cluster_sec": round(t_cluster, 2),
-                **hygiene,
-                **pq,
-                **pq_rerank,
-                **incr,
-                **media,
-                **routing,
-                **graph_lm,
-                **components,
-                **heavy_new,
-                **warc,
-                **bpe,
-                **kc,
-                **fz,
-                **rh,
-                **rr2,
-                **r7,
-                **r8,
-                **r9,
-                **r10,
-                **r11,
-                **r11b,
-                **r11c,
-                **r11d,
-                **r11e,
-                **r11f,
-                **r12,
-            }
-        )
+
+#: (name, section, takes the amplified corpus) in run and output order
+SECTIONS = [
+    ("dedup", dedup_scale_check, True),
+    ("hygiene", hygiene_scale_check, True),
+    ("pq_recall", pq_recall_check, False),
+    ("pq_rerank", pq_rerank_scale_check, False),
+    ("incremental", incremental_scale_check, True),
+    ("media", media_scale_check, False),
+    ("routing", routing_scale_check, False),
+    ("graph_lm", graph_lm_scale_check, True),
+    ("components", components_scale_check, False),
+    ("containment_semdedup", containment_semdedup_scale_check, True),
+    ("warc", warc_scale_check, True),
+    ("bpe", bpe_scale_check, True),
+    ("kcore", kcore_scale_check, False),
+    ("fuzzy", fuzzy_scale_check, False),
+    ("retrieval_hll", retrieval_hll_scale_check, True),
+    ("rank_retrieval2", rank_retrieval2_scale_check, True),
+    ("round7", round7_ops_scale_check, True),
+    ("round8", round8_ops_scale_check, True),
+    ("round9", round9_ops_scale_check, False),
+    ("round10", round10_ops_scale_check, False),
+    ("round11", round11_ops_scale_check, False),
+    ("round11b", round11b_ops_scale_check, False),
+    ("round11c", round11c_ops_scale_check, False),
+    ("round11d", round11d_ops_scale_check, False),
+    ("round11e", round11e_ops_scale_check, False),
+    ("round11f", round11f_ops_scale_check, False),
+    ("round12", round12_ops_scale_check, False),
+]
+
+
+def run_sections(spark, sections, docs=None) -> dict:
+    """Run ``sections`` in order, releasing caches between them, and
+    merge their outputs (a section's keys follow the previous one's)."""
+    out: dict = {}
+    for i, (_, section, takes_docs) in enumerate(sections):
+        if i:
+            _section_gc(spark)
+        out.update(section(spark, docs) if takes_docs else section(spark))
+    return out
+
+
+def _chosen_sections(argv: list[str] | None) -> list:
+    """``SECTIONS``, or those named by ``--only`` (in ``SECTIONS`` order)."""
+    import argparse
+
+    names = [name for name, _, _ in SECTIONS]
+    ap = argparse.ArgumentParser(description="Scale rehearsal; one JSON line.")
+    ap.add_argument(
+        "--only",
+        metavar="SECTION[,SECTION]",
+        help="run only these sections: " + ", ".join(names),
     )
-
+    args = ap.parse_args(argv)
+    if not args.only:
+        return SECTIONS
+    wanted = args.only.split(",")
+    unknown = sorted(set(wanted) - set(names))
+    if unknown:
+        ap.error(f"unknown section(s): {', '.join(unknown)}")
+    return [s for s in SECTIONS if s[0] in wanted]
 
 if __name__ == "__main__":
     main()

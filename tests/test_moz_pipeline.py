@@ -42,10 +42,9 @@ def _ways_df(spark):
     )
 
 
-def test_preparation_and_indicators(spark):
-    from moz_datapipeline_spark.plans.moz_pipeline import indicators, preparation
-
-    ways = _ways_df(spark)
+def _prep_inputs(spark):
+    """``preparation``'s inputs besides the ways: bridges, provinces,
+    flood stats and the wide traffic matrix."""
     bridges_raw = spark.createDataFrame(
         [(1, "R000101:0001.0", "BRG", "96.4", 0.004, 0.0001)],
         "bridge_id int, Link_ID string, Des_Type string, Over_Length string, lon double, lat double",
@@ -63,7 +62,34 @@ def test_preparation_and_indicators(spark):
         [(1, 0, 100, 100), (2, 100, 0, 100), (3, 100, 100, 0)],
         "`from` int, `1` int, `2` int, `3` int",
     )
+    return bridges_raw, provinces, flood_stats, traffic_wide
 
+
+def test_preparation_builds_without_future_warning(spark):
+    """Segment endpoints index the vertex arrays by a column through the
+    bracket form: ``getItem`` with a Column key is deprecated and warned
+    on every ``preparation`` build."""
+    import warnings
+
+    from moz_datapipeline_spark.graph.build import build_edges
+    from moz_datapipeline_spark.plans.moz_pipeline import preparation
+
+    ways = _ways_df(spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        prep = preparation(ways, *_prep_inputs(spark))
+        edges = build_edges(ways.withColumn("length", F.lit(2.0)))
+    assert prep["bridges"].first()["roadSegmentID"] == "1"
+    assert sorted((r["src"], r["dst"]) for r in edges.collect()) == sorted(
+        (a, b) for _, a, b, _ in WAYS
+    )
+
+
+def test_preparation_and_indicators(spark):
+    from moz_datapipeline_spark.plans.moz_pipeline import indicators, preparation
+
+    ways = _ways_df(spark)
+    bridges_raw, provinces, flood_stats, traffic_wide = _prep_inputs(spark)
     prep = preparation(ways, bridges_raw, provinces, flood_stats, traffic_wide)
     net = prep["network"].toPandas().set_index("NAME")
 

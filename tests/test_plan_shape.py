@@ -975,3 +975,24 @@ def test_margin_mining_lsh_has_no_python_node(spark, sf_dir):
         n for _, n in _executed_nodes(entry_mod.q_margin_mining_lsh(spark, sf_dir))
     ]
     assert not _python_nodes(names), names
+
+
+def test_item_similarity_plans_projection_once(spark, sf_dir):
+    """The cosine readout reuses the projection's own item degrees and
+    mirrors each pair with one generator: the projection is planned
+    once (no ``Union`` of it with its mirror, no second degree count
+    from the raw edges)."""
+    df = entry_mod.q_item_similarity(spark, sf_dir)
+    sc = spark.sparkContext
+    group = "item_similarity_plan_once"
+    sc.setJobGroup(group, group)
+    try:
+        names = [n for _, n in _executed_nodes(df)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert "Union" not in names, names
+    assert names.count("ShuffleQueryStage") <= 5, names
+    assert names.count("BroadcastQueryStage") <= 3, names
+    assert len(jobs) <= 7, len(jobs)
